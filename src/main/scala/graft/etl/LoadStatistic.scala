@@ -12,7 +12,9 @@ package graft.etl
   * fused into one segment share its value, and values are executor
   * pipeline ms summed over parallel tasks, not wall-clock; sinks and
   * branches (separate actions) report their own wall time (documented
-  * deviation, SURVEY.md §4).
+  * deviation, SURVEY.md §4). A trailing `save(path)` that [[Pipeline.go]]
+  * runs as its one action reports that action's wall time, i.e. the
+  * whole run's read, transform and write, not the write alone.
   */
 final case class LoadStatistic(
     name: String,

@@ -71,8 +71,16 @@ final case class ScriptStep(
   * gratum `Pipeline.groovy:315-361`); identity on the main flow. */
 final case class BranchStep(name: String, build: Pipeline => Pipeline) extends PStep
 
-/** Deferred write executed by [[Pipeline.go]] at this chain position. */
-final case class SinkStep(name: String, write: DataFrame => Map[String, String]) extends PStep
+/** Deferred write executed by [[Pipeline.go]] at this chain position.
+  * `readsAllRows` marks a write that consumes every row of its frame in
+  * ONE action (a plain `DataFrameWriter.save`): only such a sink can
+  * carry [[Pipeline.go]]'s observes when it ends the chain. A sink that
+  * pulls a prefix (`show`) or may run several actions (a writer that
+  * plans its partitions first) keeps the default `false`. */
+final case class SinkStep(
+    name: String,
+    write: DataFrame => Map[String, String],
+    readsAllRows: Boolean = false) extends PStep
 
 /** Pipeline-BREAKING sink (gratum `save(Sink)`, Pipeline.groovy:833-844):
   * the flow is written and the sink's result row replaces it downstream.
@@ -288,20 +296,28 @@ final class Pipeline private (
     * input by definition (every source row must be counted), so nothing
     * is lost — [[toDF]] stays the uninstrumented, fully-pushed plan.
     *
-    * Side outputs (sinks, branches, onRejection handlers) need a second
-    * traversal by nature; when any exist the source is persisted
-    * automatically for the duration of the run.
+    * A trailing [[save]] is that one action: when the last step is a
+    * sink that writes every row in one action (`SinkStep.readsAllRows`)
+    * and nothing else needs a second pass — no other sink, no branch,
+    * no onRejection handler, no `exactInput` split — the loaded count is
+    * one more observe on top of the instrumented flow and the write
+    * executes it, so the source is read once and not persisted. Every
+    * other side output (a `printRow`, a mid-chain sink, a branch, a
+    * handler) needs a second traversal by nature; when any exist the
+    * source is persisted automatically for the duration of the run.
     *
     * Abort parity (`Step.groovy:39-41` + PipelineAbortException): >50
     * SCRIPT_ERROR rows with zero loaded kills the run — checked
-    * in-stream per partition and globally after the action.
+    * in-stream per partition and globally after the action (when the
+    * action is a fused save, after its write, as in the reference).
     *
     * Per-step timings: the executed plan's whole-stage-codegen spans
     * are segmented at the observe boundaries and each segment's
     * `pipelineTime` is attributed to the steps it covers (see
     * [[StepTiming]]); steps fused into one segment share its value, and
     * the reported times are executor pipeline ms (task-summed), not
-    * wall. Sinks and branches report their own wall time. Falls back to
+    * wall. Sinks and branches report their own wall time; a trailing
+    * save that is the run's action reports the action's. Falls back to
     * the action's duration for every step when no metrics are available
     * (documented approximation vs `LoadStatistic.groovy`).
     */
@@ -330,10 +346,18 @@ final class Pipeline private (
 
   def go(): LoadStatistic = {
     val t0 = System.nanoTime()
-    val hasSideOutputs = steps.exists {
+    // a trailing row-complete sink becomes the action when no other
+    // side output needs a second pass over the source
+    val fusedSink = steps.lastOption.collect { case sk: SinkStep if sk.readsAllRows => sk }
+      .filter(_ => rejectionHandlers.isEmpty && steps.init.forall {
+        case _: BranchStep | _: SinkStep => false
+        case ss: SplitStep => !ss.exactInput
+        case _ => true
+      })
+    val hasSideOutputs = fusedSink.isEmpty && (steps.exists {
       case _: BranchStep | _: SinkStep => true
       case _ => false
-    } || rejectionHandlers.nonEmpty
+    } || rejectionHandlers.nonEmpty)
     val src0 = source()
     val src = if (cacheOnGo || hasSideOutputs) src0.persist() else src0
     val withSrc = copyWith().replaceSource(() => src)
@@ -402,19 +426,31 @@ final class Pipeline private (
       }
     }
 
-    // Execute the single action with a QueryExecutionListener attached:
-    // `count()` runs its OWN derived QueryExecution (an agg over the
-    // instrumented plan), so the executed plan — with populated SQL
+    // The single action: count() the instrumented flow, or — fused — let
+    // the trailing sink write it with the loaded count observed on top.
+    // A file write reports to listeners as a "command" execution.
+    val (actionName, action) = fusedSink match {
+      case Some(sk) =>
+        val loadedObs = nextObs()
+        "command" -> (() => {
+          sk.write(instrumented.observe(loadedObs, count(lit(1)).as("n")))
+          metricOrZero(loadedObs, "n")
+        })
+      case None => "count" -> (() => instrumented.count())
+    }
+    // Run it with a QueryExecutionListener attached: both actions run
+    // their OWN derived QueryExecution (an agg or a write command over
+    // the instrumented plan), so the executed plan — with populated SQL
     // metrics for StepTiming — is only reachable through the listener.
     @volatile var executedRoot: Option[org.apache.spark.sql.execution.SparkPlan] = None
-    // the listener is session-global, so a concurrent count() (parallel
+    // the listener is session-global, so a concurrent action (parallel
     // go(), user action) could fire first — only accept the execution
     // whose plan actually contains THIS pipeline's instrumented plan
     val targetPlan = instrumented.queryExecution.analyzed
     val planCapture = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        if (funcName == "count" && executedRoot.isEmpty &&
+        if (funcName == actionName && executedRoot.isEmpty &&
             qe.analyzed.exists(_.sameResult(targetPlan)))
           executedRoot = Some(qe.executedPlan)
       override def onFailure(funcName: String,
@@ -423,7 +459,7 @@ final class Pipeline private (
     spark.listenerManager.register(planCapture)
     var actionOk = false
     val loaded =
-      try { val n = instrumented.count(); actionOk = true; n }
+      try { val n = action(); actionOk = true; n }
       finally {
         // the listener bus is async; give the success event a bounded
         // window to deliver before unregistering. Skip the wait when
@@ -475,17 +511,20 @@ final class Pipeline private (
       .flatMap(StepTiming.segments(_, obsAtStep.toSeq, withSrc.steps.map(_.name)))
       .foreach(_.foreach { case (k, v) => stepTimings(k) = v })
     resultTimings.foreach { case (k, v) => stepTimings(k) = v }
-    withSrc.steps.zipWithIndex.foreach {
-      case (sk: SinkStep, i) =>
-        val s0 = System.nanoTime()
-        sk.write(withSrc.prefixDF(i, resultRows))
-        stepTimings(sk.name) = (System.nanoTime() - s0) / 1000000L
-      case (bs: BranchStep, i) =>
-        val s0 = System.nanoTime()
-        val side = Pipeline.of(s"$name/${bs.name}", withSrc.prefixDF(i, resultRows))
-        bs.build(side).go()
-        stepTimings(bs.name) = (System.nanoTime() - s0) / 1000000L
-      case _ => ()
+    fusedSink match {
+      case Some(sk) => stepTimings(sk.name) = actionMs
+      case None => withSrc.steps.zipWithIndex.foreach {
+        case (sk: SinkStep, i) =>
+          val s0 = System.nanoTime()
+          sk.write(withSrc.prefixDF(i, resultRows))
+          stepTimings(sk.name) = (System.nanoTime() - s0) / 1000000L
+        case (bs: BranchStep, i) =>
+          val s0 = System.nanoTime()
+          val side = Pipeline.of(s"$name/${bs.name}", withSrc.prefixDF(i, resultRows))
+          bs.build(side).go()
+          stepTimings(bs.name) = (System.nanoTime() - s0) / 1000000L
+        case _ => ()
+      }
     }
     if (rejectionHandlers.nonEmpty) {
       val persisted = withSrc.rejectionsWith(resultRows).persist()
@@ -1073,6 +1112,9 @@ final class Pipeline private (
 
   /** gratum `save` (Pipeline.groovy:809-844): deferred write executed by
     * [[go]] at this chain position; main flow continues unchanged.
+    * As the LAST step of a pipeline with no other side output, the write
+    * is [[go]]'s one action: the loaded and rejection counts ride it and
+    * the source is read once, as in the reference's push chain.
     *
     * `partitionBy` (beyond the reference: it writes one local file)
     * lays the output out as hive-style `col=value` directories — at
@@ -1090,7 +1132,7 @@ final class Pipeline private (
       val w = df.write.mode("overwrite").format(format).options(defaults ++ options)
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).save(path)
       Map("file" -> path, "filename" -> path)
-    }))
+    }, readsAllRows = true))
   }
 
   /** gratum `save(Sink)` (Pipeline.groovy:833-844): write through a
@@ -1103,7 +1145,8 @@ final class Pipeline private (
   def saveAs(sink: graft.sinks.Sink): Pipeline =
     add(ResultSinkStep(s"save(${sink.name})", sink))
 
-  /** gratum `printRow` (Pipeline.groovy:884-894). */
+  /** gratum `printRow` (Pipeline.groovy:884-894). `show` pulls at most
+    * 21 rows, so this sink never carries [[go]]'s counts. */
   def printRow(columns: String*): Pipeline =
     add(SinkStep("printRow", df => {
       val d = if (columns.isEmpty) df else df.select(columns.map(col): _*)
@@ -1558,7 +1601,8 @@ final class Pipeline private (
   /** Write the flow as Avro container files (one per partition,
     * [[graft.sources.Avro.write]]) and keep flowing — the interchange
     * sink for downstream consumers that speak Avro, symmetric with
-    * [[graft.sources.Avro.source]]. */
+    * [[graft.sources.Avro.source]]. The writer may run more than one
+    * action (`Par.spreadNarrow`), so [[go]] keeps its counting pass. */
   def saveAvro(dir: String): Pipeline =
     add(SinkStep(s"saveAvro($dir)", df => {
       graft.sources.Avro.write(df, dir)
@@ -1568,7 +1612,8 @@ final class Pipeline private (
   /** TFRecord/tf.Example shard sink ([[graft.sources.TfRecord.write]])
     * — the dataloader-facing export of a prepared corpus; symmetric
     * with [[graft.sources.TfRecord.source]]. Shard count = the flow's
-    * partitioning. */
+    * partitioning. May run more than one action, so [[go]] keeps its
+    * counting pass. */
   def saveTfRecord(dir: String, gzip: Boolean = false): Pipeline =
     add(SinkStep(s"saveTfRecord($dir)", df => {
       graft.sources.TfRecord.write(df, dir, gzip)
@@ -1577,7 +1622,8 @@ final class Pipeline private (
 
   /** Persist the flow as a bucketed (co-located) catalog table
     * ([[graft.ops.Bucketing.writeBucketed]]) — later equi-joins on
-    * `keys` against same-bucketed tables plan with zero exchanges. */
+    * `keys` against same-bucketed tables plan with zero exchanges.
+    * May run more than one action, so [[go]] keeps its counting pass. */
   def saveBucketed(table: String, keys: Seq[String], numBuckets: Int,
       path: Option[String] = None): Pipeline =
     add(SinkStep(s"saveBucketed($table)", df => {

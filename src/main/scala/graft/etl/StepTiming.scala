@@ -31,6 +31,11 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * step = the whole action's duration). For a join step the joined
   * flow's spans land in the join's segment — the join "includes" the
   * work of materializing its other side.
+  *
+  * The executed plan is the one of [[Pipeline.go]]'s single action: the
+  * `count()`, or the write of a trailing `save(path)` fused into it. In
+  * the fused case the save step itself is reported with the action's
+  * wall time (it is the whole run), not a codegen segment.
   */
 private[etl] object StepTiming {
 

@@ -776,4 +776,98 @@ class PipelineSpec extends AnyFunSuite {
     assert(stat.stepTimings.contains("f"))
     assert(stat.stepTimings.contains(s"save($dir/out)"))
   }
+
+  // A trailing save is go()'s one action: no source persist, one pass.
+  // `.branch(p => p)` after the save forces the persisted two-pass path
+  // for comparison.
+  def fusedSource: DataFrame = spark.range(1000).toDF("id")
+    .withColumn("qty", when(col("id") % 50 === 0, lit("x")).otherwise(col("id").cast("string")))
+
+  test("a trailing save traverses the source once and counts like the persisted path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fused").toString
+    Seq("csv", "parquet").foreach { fmt =>
+      val touches = spark.sparkContext.longAccumulator(s"touches-$fmt")
+      val schema = fusedSource.schema
+      def build(out: String) = Pipeline.of("fused", fusedSource)
+        .mapRows("touch", schema)(r => { touches.add(1); r })
+        .asInt("qty")
+        .filter("even", col("id") % 2 === 0)
+        .save(out, fmt)
+      val fused = build(s"$dir/$fmt")
+      val stat = fused.go()
+      assert(touches.value == 1000, s"$fmt: upstream evaluated ${touches.value} times for 1000 rows")
+      touches.reset()
+      val twoPass = build(s"$dir/$fmt-two-pass").branch(p => p).go()
+      // persisted path: the count, the sink's pass and the branch's own go()
+      assert(touches.value == 3000, s"$fmt: the persisted path should re-run the steps")
+      assert(stat.loaded == 480) // 20 bad qty (all even ids), then 500 odd ids
+      assert(stat.rejections(RejectionCategory.INVALID_FORMAT, "asInt(qty)") == 20)
+      assert(stat.rejections(RejectionCategory.IGNORE_ROW, "even") == 500)
+      assert(stat.loaded == twoPass.loaded)
+      assert(stat.rejectionsByCategory == twoPass.rejectionsByCategory)
+
+      val want = fused.toDF.select(col("id").cast("string"), col("qty").cast("string"))
+        .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+      val back = (if (fmt == "csv") spark.read.option("header", "true").csv(s"$dir/$fmt")
+                  else spark.read.parquet(s"$dir/$fmt"))
+        .select(col("id").cast("string"), col("qty").cast("string"))
+        .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+      assert(back == want, s"$fmt: written rows differ from toDF")
+    }
+  }
+
+  test("printRow keeps the counting pass: >21 rows report full counts") {
+    val stat = Pipeline.of(spark.range(100).toDF("id"))
+      .filter("f", col("id") % 4 =!= 0)
+      .printRow()
+      .go()
+    assert(stat.loaded == 75)
+    assert(stat.rejections(RejectionCategory.IGNORE_ROW, "f") == 25)
+  }
+
+  test("limitRows(halt=false) before a trailing save reports the exact overflow") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fused-limit").toString
+    val stat = Pipeline.of(spark.range(1000).toDF("id"))
+      .limitRows(100, halt = false, orderBy = Seq("id"))
+      .save(s"$dir/out", "parquet")
+      .go()
+    assert(stat.loaded == 100)
+    assert(stat.rejections(RejectionCategory.IGNORE_ROW) == 900)
+    assert(spark.read.parquet(s"$dir/out").count() == 100)
+  }
+
+  test("an empty source with a trailing save reports zero loaded without stalling") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fused-empty").toString
+    val stat = Pipeline.of(fusedSource.limit(0))
+      .filter("f", col("id") > 1)
+      .save(s"$dir/out", "parquet")
+      .go()
+    assert(stat.loaded == 0)
+    assert(stat.rejections == 0)
+    // a loaded observe that never arrived would wait out metricOrZero's 10 s
+    assert(stat.durationMs < 5000, s"go() took ${stat.durationMs} ms")
+  }
+
+  test("per-step timings segment the plan of a fused save") {
+    // filter-a sits below a heavy groupAgg, filter-b above it over 50
+    // rows: differing values mean the write's executed plan was
+    // captured and segmented, not the everything-equals-action fallback
+    val dir = java.nio.file.Files.createTempDirectory("graft-fused-timing").toString
+    def build() = Pipeline.of(spark.range(200000L).toDF("id"))
+      .filter("filter-a", col("id") % 2 === 0)
+      .addField("g", col("id") % 100)
+      .groupAgg(Seq("g"))(
+        sum(xxhash64(sha2(repeat(col("id").cast("string"), 400), 512)) % 1000).as("h"),
+        count(lit(1)).as("n"))
+      .filter("filter-b", col("g") % 4 === 0)
+      .save(s"$dir/out", "parquet")
+    build().go() // warm the codegen paths
+    val stat = build().go()
+    assert(stat.loaded == 25) // 50 even residues mod 100, half of them multiples of 4
+    assert(stat.rejections(RejectionCategory.IGNORE_ROW, "filter-b") == 25)
+    val a = stat.stepTimings("filter-a")
+    val b = stat.stepTimings("filter-b")
+    assert(a != b, s"expected differing segment times, got a=$a b=$b (${stat.stepTimings})")
+    assert(stat.stepTimings.contains(s"save($dir/out)"))
+  }
 }
