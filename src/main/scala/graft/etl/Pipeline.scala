@@ -1612,8 +1612,9 @@ final class Pipeline private (
   /** TFRecord/tf.Example shard sink ([[graft.sources.TfRecord.write]])
     * — the dataloader-facing export of a prepared corpus; symmetric
     * with [[graft.sources.TfRecord.source]]. Shard count = the flow's
-    * partitioning. May run more than one action, so [[go]] keeps its
-    * counting pass. */
+    * partitioning. The write is one RDD action over the plan's internal
+    * rows, outside any SQL execution, so no observation on the frame
+    * would be reported: [[go]] keeps its counting pass. */
   def saveTfRecord(dir: String, gzip: Boolean = false): Pipeline =
     add(SinkStep(s"saveTfRecord($dir)", df => {
       graft.sources.TfRecord.write(df, dir, gzip)

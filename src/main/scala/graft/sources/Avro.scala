@@ -82,7 +82,7 @@ object Avro {
     * can tear a container. */
   def write(df: DataFrame, dir: String): Unit = {
     val avroJson = toAvroSchema(df.schema, "topLevelRecord").toString
-    StagedCommit.write(df, dir, ".avro") { (_, rows, os) =>
+    StagedCommit.write(df.rdd, dir, ".avro") { (_, rows, os) =>
       val schema = new ASchema.Parser().parse(avroJson)
       val writer = new DataFileWriter[GenericRecord](
         new GenericDatumWriter[GenericRecord](schema))

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.rdd.RDD
 
 /** Directory-overwrite writes under a STAGED COMMIT (the
   * FileCommitProtocol shape, sized to one output dir) — shared by the
@@ -24,17 +24,18 @@ import org.apache.spark.sql.{DataFrame, Row}
   * commit renames are metadata moves, never copies. */
 private[sources] object StagedCommit {
 
-  /** Write one `part-NNNNN<ext>` per partition of `df` under `dir`.
+  /** Write one `part-NNNNN<ext>` per partition of `rows` under `dir`,
+    * in one job. The element type is the writer's: external `Row`s
+    * (Avro) or the plan's internal rows (TFRecord).
     * `writePartition(idx, rows, os)` must write the partition's
     * container to `os` and CLOSE it (closing exactly once is the
     * writer's contract — container writers own their stream). */
-  def write(df: DataFrame, dir: String, ext: String)(
-      writePartition: (Int, Iterator[Row], java.io.OutputStream) => Unit): Unit = {
+  def write[T](rows: RDD[T], dir: String, ext: String)(
+      writePartition: (Int, Iterator[T], java.io.OutputStream) => Unit): Unit = {
+    val hadoopConf = rows.sparkContext.hadoopConfiguration
     val hconf = new org.apache.spark.SerializableWritable(
-      new org.apache.hadoop.conf.Configuration(
-        df.sparkSession.sparkContext.hadoopConfiguration))
-    val dfs = new HPath(dir).getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
+      new org.apache.hadoop.conf.Configuration(hadoopConf))
+    val dfs = new HPath(dir).getFileSystem(hadoopConf)
     val target = dfs.makeQualified(new HPath(dir))
     val jobId = java.util.UUID.randomUUID().toString
     val staging = new HPath(target.getParent,
@@ -42,7 +43,7 @@ private[sources] object StagedCommit {
     val stagingStr = staging.toString
     dfs.mkdirs(staging)
     try {
-      df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+      rows.mapPartitionsWithIndex { (idx, part) =>
         val fs = new HPath(stagingStr).getFileSystem(hconf.value)
         val attempt = Option(org.apache.spark.TaskContext.get())
           .map(_.taskAttemptId()).getOrElse(0L)
@@ -51,7 +52,7 @@ private[sources] object StagedCommit {
         // the writer owns (and closes) the stream on success; on ITS
         // failure the descriptor must still be released before the
         // task reports the error (double-close is harmless)
-        try writePartition(idx, rows, os)
+        try writePartition(idx, part, os)
         finally { try os.close() catch { case _: Exception => () } }
         // task commit: first attempt to rename into the staged final
         // name wins; a losing (speculative/retried) attempt discards

@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, DataType}
+import org.apache.spark.sql.types.{AbstractDataType, DataType, StructType}
 
 /** Column <-> Expression bridge for graft's native Catalyst expressions.
   *
@@ -21,6 +23,7 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType}
   * BridgeSpec exercises every entry, so a jar upgrade breaks in `sbt
   * test`, not in production. When bumping Spark: re-run BridgeSpec,
   * re-check `ExpressionUtils.{expression,column}`, `classic.Dataset.ofRows`,
+  * `classic.SparkSession#internalCreateDataFrame`,
   * `classic.Dataset#queryExecution`, and `Observation.getOrEmpty` still
   * exist with these signatures, then update [[TestedSparkVersion]].
   */
@@ -66,6 +69,15 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame = checked(
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan))
+
+  /** DataFrame over an RDD of Catalyst rows laid out as `schema`
+    * (`SparkSession.internalCreateDataFrame` is private[sql]): a source
+    * that decodes straight into internal rows skips the external-`Row`
+    * encoder round trip. */
+  def internalRows(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame = checked(
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema))
 
   /** Non-blocking observation read: empty map until the metrics event
     * arrives. Reads `Observation.future` (private[sql]) directly —

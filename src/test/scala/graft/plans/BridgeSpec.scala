@@ -48,6 +48,18 @@ class BridgeSpec extends AnyFunSuite {
     assert(back.collect().map(_.getString(1)).toSeq == Seq("b"))
   }
 
+  test("internalRows builds a DataFrame over Catalyst rows") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val schema = StructType(Seq(StructField("n", LongType), StructField("s", StringType)))
+    val rows = spark.sparkContext.parallelize(Seq(1L, 2L), 2)
+      .map(n => InternalRow(n, UTF8String.fromString(s"v$n")))
+    val df = Bridge.internalRows(spark, rows, schema)
+    assert(df.schema == schema)
+    assert(df.filter($"n" > 1).collect().map(_.getString(1)).toSeq == Seq("v2"))
+  }
+
   test("observedMetrics reads an Observation without blocking") {
     val obs = new Observation("bridge-obs")
     val df = Seq(1, 2, 3).toDF("x").observe(obs, sum($"x").as("s"))

@@ -52,6 +52,146 @@ class TfRecordSpec extends AnyFunSuite {
     back.zip(payloads).foreach { case (a, b) => assert(a.sameElements(b)) }
   }
 
+  private def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02x").mkString
+
+  private val scalarSchema = StructType(Seq(
+    StructField("s", StringType), StructField("bin", BinaryType),
+    StructField("l", LongType), StructField("i", IntegerType),
+    StructField("sh", ShortType), StructField("by", ByteType),
+    StructField("b", BooleanType), StructField("f", FloatType),
+    StructField("d", DoubleType)))
+  private val arraySchema = StructType(Seq(
+    StructField("as", ArrayType(StringType)), StructField("abin", ArrayType(BinaryType)),
+    StructField("al", ArrayType(LongType)), StructField("ai", ArrayType(IntegerType)),
+    StructField("af", ArrayType(FloatType)), StructField("ad", ArrayType(DoubleType))))
+
+  /** Wire cases pinned against payload bytes captured from the
+    * original per-value encoder: any rewrite of the codec must keep
+    * every byte. */
+  private val goldenCases: Seq[(String, StructType, Row)] = Seq(
+    ("scalars", scalarSchema, Row("héllo €😀", Array[Byte](0, -1, 0x7f, -128), 300L, 7,
+      3.toShort, 5.toByte, true, 1.5f, 2.5)),
+    ("negatives", scalarSchema, Row("", Array.emptyByteArray, -1L, Int.MinValue,
+      (-2).toShort, (-128).toByte, false, -0.0f, -1e-3)),
+    ("varint extremes", StructType(Seq(StructField("min", LongType),
+      StructField("m1", LongType), StructField("max", LongType),
+      StructField("i1", IntegerType))), Row(Long.MinValue, -1L, Long.MaxValue, -1)),
+    ("arrays", arraySchema, Row(Seq("a", "", "日本語", "😀"),
+      Seq(Array[Byte](1, 2), Array.emptyByteArray, Array[Byte](-1)),
+      Seq(Long.MinValue, -1L, 0L, 1L, 128L), Seq(-1, 0, 300, Int.MaxValue),
+      Seq(0.25f, -2f, Float.MaxValue), Seq(0.1, 1e40, -0.5))),
+    ("empty arrays", arraySchema, Row(Seq.empty[String], Seq.empty[Array[Byte]],
+      Seq.empty[Long], Seq.empty[Int], Seq.empty[Float], Seq.empty[Double])),
+    ("all null", scalarSchema, Row(null, null, null, null, null, null, null, null, null)),
+    ("double narrowing", StructType(Seq(StructField("d", DoubleType),
+      StructField("ad", ArrayType(DoubleType)))),
+      Row(0.1, Seq(math.Pi, 1.0 / 3, 1e-50))),
+    ("512 ids", StructType(Seq(StructField("seq_id", LongType),
+      StructField("input_ids", ArrayType(IntegerType)))),
+      Row(123456789L, (0 until 512).map(j => (j * 7919) % 60000))))
+
+  /** Payload bytes of [[goldenCases]] as the original encoder wrote
+    * them (hex); the 512-id case is pinned by length and SHA-256. */
+  private val goldenHex: Map[String, String] = Map(
+    "scalars" -> (
+      "0a87010a170a017312120a100a0e68c3a96c6c6f20e282acf09f98800a0f0a03" +
+      "62696e12080a060a0400ff7f800a0b0a016c12061a040a02ac020a0a0a016912" +
+      "051a030a01070a0b0a02736812051a030a01030a0b0a02627912051a030a0105" +
+      "0a0a0a016212051a030a01010a0d0a0166120812060a040000c03f0a0d0a0164" +
+      "120812060a0400002040"),
+    "negatives" -> (
+      "0a98010a090a017312040a020a000a0b0a0362696e12040a020a000a130a016c" +
+      "120e1a0c0a0affffffffffffffffff010a130a0169120e1a0c0a0a80808080f8" +
+      "ffffffff010a140a027368120e1a0c0a0afeffffffffffffffff010a140a0262" +
+      "79120e1a0c0a0a80ffffffffffffffff010a0a0a016212051a030a01000a0d0a" +
+      "0166120812060a04000000800a0d0a0164120812060a046f1283ba"),
+    "varint extremes" -> (
+      "0a590a150a036d696e120e1a0c0a0a808080808080808080010a140a026d3112" +
+      "0e1a0c0a0affffffffffffffffff010a140a036d6178120d1a0b0a09ffffffff" +
+      "ffffffff7f0a140a026931120e1a0c0a0affffffffffffffffff01"),
+    "arrays" -> (
+      "0aa7010a1e0a02617312180a160a01610a000a09e697a5e69cace8aa9e0a04f0" +
+      "9f98800a130a046162696e120b0a090a0201020a000a01ff0a220a02616c121c" +
+      "1a1a0a1880808080808080808001ffffffffffffffffff01000180010a1c0a02" +
+      "616912161a140a12ffffffffffffffffff0100ac02ffffffff070a160a026166" +
+      "1210120e0a0c0000803e000000c0ffff7f7f0a160a0261641210120e0a0ccdcc" +
+      "cc3d0000807f000000bf"),
+    "empty arrays" -> (
+      "0a460a080a02617312020a000a0a0a046162696e12020a000a0a0a02616c1204" +
+      "1a020a000a0a0a02616912041a020a000a0a0a026166120412020a000a0a0a02" +
+      "6164120412020a00"),
+    "all null" -> (
+      "0a00"),
+    "double narrowing" -> (
+      "0a270a0d0a0164120812060a04cdcccc3d0a160a0261641210120e0a0cdb0f49" +
+      "40abaaaa3e00000000"))
+
+  test("golden wire bytes: every type pinned against the captured encoding") {
+    goldenCases.foreach { case (name, schema, row) =>
+      val got = TfRecord.encodeExample(row, schema)
+      if (name == "512 ids") {
+        assert(got.length == 1438, name)
+        assert(hex(java.security.MessageDigest.getInstance("SHA-256").digest(got)) ==
+          "62e906390759ebb84f8cb276c2e2e0558d25d2043658e4c49297f6539b9b4995", name)
+      } else assert(hex(got) == goldenHex(name), name)
+    }
+  }
+
+  /** 400 seeded rows over every accepted type (top-level nulls
+    * included), framed back to back: the bytes one single-partition
+    * TfRecord.write of them must produce. */
+  private def randomRows(): Seq[Row] = {
+    val rnd = new scala.util.Random(20261018L)
+    val alphabet = Seq("a", "b", " ", "é", "€", "日", "😀")
+    def str() = (0 until rnd.nextInt(12)).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
+    def bin() = { val a = new Array[Byte](rnd.nextInt(6)); rnd.nextBytes(a); a }
+    def seq[A](f: => A) = (0 until rnd.nextInt(5)).map(_ => f)
+    def opt(v: => Any): Any = if (rnd.nextInt(8) == 0) null else v
+    (0 until 400).map { _ =>
+      Row(opt(str()), opt(bin()), opt(rnd.nextLong()), opt(rnd.nextInt()),
+        opt(rnd.nextInt().toShort), opt(rnd.nextInt().toByte), opt(rnd.nextBoolean()),
+        opt(rnd.nextFloat() * 1000 - 500), opt(rnd.nextGaussian() * 1e6),
+        opt(seq(str())), opt(seq(bin())), opt(seq(rnd.nextLong())),
+        opt(seq(rnd.nextInt())), opt(seq(rnd.nextFloat())), opt(seq(rnd.nextGaussian())))
+    }
+  }
+  private val randomSchema = StructType(scalarSchema.fields ++ arraySchema.fields)
+
+  test("golden file bytes: a one-partition write of 400 random rows, every type") {
+    val rows = randomRows()
+    val digest = "8ed74c0dfda32a8f43e9646c0a0b24dd26fe58e23d1194ef543ab2e48f076f48"
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    rows.foreach(r => md.update(TfRecord.frame(TfRecord.encodeExample(r, randomSchema))))
+    assert(hex(md.digest()) == digest, "encodeExample + frame")
+    val dir = tmp("golden400")
+    TfRecord.write(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), randomSchema), dir)
+    val file = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".tfrecord")).head
+    assert(hex(java.security.MessageDigest.getInstance("SHA-256")
+      .digest(Files.readAllBytes(file.toPath))) == digest, "TfRecord.write")
+    // and back: every value survives, doubles as their float32
+    // narrowing (short/byte columns read back as int64)
+    def norm(r: Row): List[Any] = r.toSeq.zip(randomSchema.fields).map {
+      case (null, _) => null
+      case (v: Double, _) => v.toFloat.toDouble
+      case (v: Short, _) => v.toLong
+      case (v: Byte, _) => v.toLong
+      case (v: Array[Byte], _) => v.toList
+      case (v: scala.collection.Seq[_], f) => v.map {
+        case b: Array[Byte] => b.toList
+        case d: Double if f.dataType == ArrayType(DoubleType) => d.toFloat.toDouble
+        case x => x
+      }.toList
+      case (v, _) => v
+    }.toList
+    val readSchema = StructType(randomSchema.fields.map {
+      case StructField(n, ShortType | ByteType, _, _) => StructField(n, LongType)
+      case f => f
+    })
+    val backRows = TfRecord.read(spark, dir, readSchema).collect()
+    assert(backRows.map(norm).toSeq.sortBy(_.toString) == rows.map(norm).sortBy(_.toString))
+  }
+
   test("full-type roundtrip incl. arrays; absent features read as NULL") {
     val schema = StructType(Seq(
       StructField("s", StringType),
@@ -186,6 +326,9 @@ class TfRecordSpec extends AnyFunSuite {
     val schema = StructType(Seq(StructField("id", LongType)))
     val back = TfRecord.read(spark, dir, schema).collect().map(_.getLong(0))
     assert(back.sorted.toSeq == (1L to 100L))
+    // a read schema naming one feature twice fills both fields
+    val twice = TfRecord.read(spark, dir, StructType(schema.fields ++ schema.fields)).collect()
+    assert(twice.map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq == (1L to 100L).map(v => (v, v)))
   }
 
   test("writeShardFiles: file NNNNN = shard NNNNN, rank order inside each file") {
@@ -228,13 +371,16 @@ class TfRecordSpec extends AnyFunSuite {
     // shares no code with the Scala encoder/decoder — a wire-format
     // deviation our own reader happens to mirror (wrong field number,
     // unmasked CRC, wrong endianness) would roundtrip in-JVM but
-    // disagree here
-    import spark.implicits._
+    // disagree here. Every accepted type, 10-byte varints, multi-byte
+    // UTF-8, non-UTF-8 binary, empty lists and the all-null row.
+    val schema = StructType(scalarSchema.fields ++ arraySchema.fields)
+    val rows = Seq(
+      Row("béta 日😀", Array[Byte](-1, 0, -2), Long.MinValue, -1, (-2).toShort, 7.toByte,
+        true, 1.5f, 0.1, Seq("a", "", "ü"), Seq(Array[Byte](-128, 1), Array.emptyByteArray),
+        Seq(Long.MaxValue, -1L, 0L), Seq(300, -20), Seq(-0.25f), Seq.empty[Double]),
+      Row(Seq.fill(15)(null): _*))
     val dir = tmp("crossimpl")
-    TfRecord.write(Seq(
-      (1L, "alpha", Seq(10L, -20L, 0L), 1.5f),
-      (2L, "béta", Seq(Long.MaxValue), -0.25f)).toDF("id", "s", "ls", "f")
-      .coalesce(1), dir)
+    TfRecord.write(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema), dir)
     val file = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".tfrecord")).head
     val p = new ProcessBuilder("python3", "tools/tfrecord_check.py",
@@ -245,15 +391,52 @@ class TfRecordSpec extends AnyFunSuite {
     assert(p.waitFor() == 0, s"python decoder failed: $err")
     val lines = out.trim.split("\n")
     assert(lines.length == 2, s"expected 2 records, got:\n$out")
-    // line 1: {"f": float 1.5, "id": int64 [1], "ls": [10,-20,0], "s": bytes ["alpha"]}
-    assert(lines(0).contains(""""id": {"kind": "int64", "values": [1]}"""), lines(0))
-    assert(lines(0).contains(""""s": {"kind": "bytes", "values": ["alpha"]}"""), lines(0))
-    assert(lines(0).contains(""""ls": {"kind": "int64", "values": [10, -20, 0]}"""), lines(0))
-    assert(lines(0).contains(""""f": {"kind": "float", "values": [1.5]}"""), lines(0))
-    assert(lines(1).contains(""""s": {"kind": "bytes", "values": ["béta"]}"""), lines(1))
-    assert(lines(1).contains(
-      s""""ls": {"kind": "int64", "values": [${Long.MaxValue}]}"""), lines(1))
-    assert(lines(1).contains(""""f": {"kind": "float", "values": [-0.25]}"""), lines(1))
+    def feature(kind: String, values: String) = s"""{"kind": "$kind", "values": [$values]}"""
+    val expected = Seq(
+      "s" -> feature("bytes", "\"béta 日😀\""),
+      "bin" -> feature("bytes", """{"hex": "ff00fe"}"""),
+      "l" -> feature("int64", Long.MinValue.toString),
+      "i" -> feature("int64", "-1"),
+      "sh" -> feature("int64", "-2"),
+      "by" -> feature("int64", "7"),
+      "b" -> feature("int64", "1"),
+      "f" -> feature("float", "1.5"),
+      "d" -> feature("float", "0.10000000149011612"), // float32(0.1)
+      "as" -> feature("bytes", "\"a\", \"\", \"ü\""),
+      "abin" -> feature("bytes", """{"hex": "8001"}, """""),
+      "al" -> feature("int64", s"${Long.MaxValue}, -1, 0"),
+      "ai" -> feature("int64", "300, -20"),
+      "af" -> feature("float", "-0.25"),
+      "ad" -> feature("float", ""))
+    // sort_keys output: the whole record line is determined
+    assert(lines(0) == expected.sortBy(_._1)
+      .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}"))
+    assert(lines(1) == "{}", "the all-null row carries no feature")
+  }
+
+  test("null array elements fail the write loudly, naming the column") {
+    // tf.Example lists cannot hold a null: unboxing one would write 0
+    // (an int list) or crash bare (a bytes list)
+    def rejects(schema: StructType, row: Row, column: String): Unit = {
+      val e = intercept[IllegalArgumentException](TfRecord.encodeExample(row, schema))
+      assert(e.getMessage.contains(column), e.getMessage)
+      val dir = tmp("nullelem")
+      val w = intercept[Exception](TfRecord.write(spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(row), 1), schema), dir))
+      val cause = Iterator.iterate(w: Throwable)(_.getCause).takeWhile(_ != null).take(10)
+        .collectFirst { case t: IllegalArgumentException => t }
+      assert(cause.exists(_.getMessage.contains(s"column $column")), w)
+    }
+    rejects(StructType(Seq(StructField("id", LongType), StructField("ids", ArrayType(IntegerType)))),
+      Row(1L, Seq(1, null, 3)), "ids")
+    rejects(StructType(Seq(StructField("tags", ArrayType(StringType)))),
+      Row(Seq("x", null)), "tags")
+    // a list without nulls in a containsNull column still writes
+    val dir = tmp("nonull")
+    val schema = StructType(Seq(StructField("ids", ArrayType(IntegerType, containsNull = true))))
+    TfRecord.write(spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(Seq(1, 2))), 1), schema), dir)
+    assert(TfRecord.read(spark, dir, schema).collect().head.getSeq[Int](0) == Seq(1, 2))
   }
 
   test("fuzz: garbage payloads and frames only ever fail typed") {

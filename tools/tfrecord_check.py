@@ -9,7 +9,8 @@ spec fails.
 
 Usage: tfrecord_check.py <file.tfrecord>
 Prints one JSON object per record: {feature: {"kind": k, "values": [...]}}
-(bytes values are printed as UTF-8 strings — test fixtures are text).
+(bytes values print as UTF-8 strings; a value that is not valid UTF-8,
+e.g. a binary feature, prints as {"hex": "<lowercase hex>"}).
 """
 import json
 import struct
@@ -44,6 +45,14 @@ def read_varint(b: bytes, off: int):
         shift += 7
         if shift > 63:
             raise ValueError("varint overflow")
+
+
+def bytes_value(b: bytes):
+    """A bytes_list value: its text when it is UTF-8, else tagged hex."""
+    try:
+        return b.decode("utf-8")
+    except UnicodeDecodeError:
+        return {"hex": b.hex()}
 
 
 def parse_feature(b: bytes):
@@ -101,7 +110,7 @@ def parse_feature(b: bytes):
             f2, w2 = t2 >> 3, t2 & 7
             if f2 == 1 and w2 == 2:
                 l2, o2 = read_varint(bl, o2)
-                vals.append(bl[o2:o2 + l2].decode("utf-8"))
+                vals.append(bytes_value(bl[o2:o2 + l2]))
                 o2 += l2
             else:
                 raise ValueError("unexpected BytesList field")
