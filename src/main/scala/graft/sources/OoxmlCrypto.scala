@@ -38,6 +38,15 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
   * clear errors. The optional dataIntegrity HMAC is not checked (the
   * verifier already authenticates the password; a truncated package
   * fails ZIP parsing loudly).
+  *
+  * Hostile bytes: a malformed container or descriptor rejects with an
+  * `IllegalArgumentException` (or the JCA's `GeneralSecurityException`
+  * for ciphertext of the wrong length), never an index or number-format
+  * error: short EncryptionInfo/EncryptedPackage streams, a standard
+  * header size that runs past its stream, non-integer descriptor
+  * attributes, an AES block size other than 16 or key size other than
+  * 128/192/256, and a spinCount outside 0..10,000,000 are each refused
+  * by name before any key is derived.
   */
 private[graft] object OoxmlCrypto {
 
@@ -77,9 +86,19 @@ private[graft] object OoxmlCrypto {
       verifierHashInput: Array[Byte], verifierHashValue: Array[Byte],
       keyValue: Array[Byte])
 
+  /** MS-OFFCRYPTO 2.3.4.11: a password key's spinCount MUST NOT
+    * exceed 10,000,000 (a hostile value would spin the hash for
+    * minutes). */
+  private val MaxSpinCount = 10000000
+
   def decrypt(bytes: Array[Byte], password: String): Array[Byte] = {
     val info = XlsParser.cfbStream(bytes, Seq("EncryptionInfo"))
     val pkg = XlsParser.cfbStream(bytes, Seq("EncryptedPackage"))
+    // version + reserved/flags; both schemes need at least these 8 bytes
+    require(info.length >= 8,
+      s"corrupt EncryptionInfo: ${info.length} bytes, no version header")
+    require(pkg.length >= 8,
+      s"corrupt EncryptedPackage: ${pkg.length} bytes, no size header")
     val major = (info(0) & 0xFF) | ((info(1) & 0xFF) << 8)
     val minor = (info(2) & 0xFF) | ((info(3) & 0xFF) << 8)
     if (minor == 2 && (major == 2 || major == 3 || major == 4))
@@ -172,7 +191,13 @@ private[graft] object OoxmlCrypto {
       info: Array[Byte], pkg: Array[Byte], password: String): Array[Byte] = {
     val buf = java.nio.ByteBuffer.wrap(info)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    require(info.length >= 12, "corrupt EncryptionInfo: no header size")
     val headerSize = buf.getInt(8)
+    // the header's 32 fixed bytes, then the 72-byte verifier (salt size,
+    // salt, verifier, hash size, 32-byte verifier hash) after it
+    require(headerSize >= 32 && 12L + headerSize + 72 <= info.length,
+      s"corrupt EncryptionInfo: header size $headerSize does not fit " +
+        s"its ${info.length} bytes")
     // EncryptionHeader at offset 12: flags, sizeExtra, algId, algIdHash,
     // keySize, providerType, reserved1/2, then the UTF-16LE CSP name
     val headerFlags = buf.getInt(12)
@@ -313,15 +338,21 @@ private[graft] object OoxmlCrypto {
             v
           }
           def b64(n: String): Array[Byte] = Base64.getDecoder.decode(attr(n))
+          def int(n: String): Int =
+            try attr(n).toInt
+            catch {
+              case _: NumberFormatException => throw new IllegalArgumentException(
+                s"EncryptionInfo ${r.getLocalName} attribute $n='${attr(n)}' is not an integer")
+            }
           r.getLocalName match {
             case "keyData" =>
               require(attr("cipherAlgorithm") == "AES",
                 s"unsupported OOXML cipher ${attr("cipherAlgorithm")}")
               keyData = KeyData(
                 salt = b64("saltValue"),
-                blockSize = attr("blockSize").toInt,
-                keyBits = attr("keyBits").toInt,
-                hashSize = attr("hashSize").toInt,
+                blockSize = int("blockSize"),
+                keyBits = int("keyBits"),
+                hashSize = int("hashSize"),
                 hashAlgorithm = attr("hashAlgorithm"),
                 cipherAlgorithm = attr("cipherAlgorithm"),
                 chaining = attr("cipherChaining"))
@@ -331,9 +362,9 @@ private[graft] object OoxmlCrypto {
                 s"unsupported OOXML cipher ${attr("cipherAlgorithm")}")
               pw = PasswordKey(
                 salt = b64("saltValue"),
-                blockSize = attr("blockSize").toInt,
-                keyBits = attr("keyBits").toInt,
-                spinCount = attr("spinCount").toInt,
+                blockSize = int("blockSize"),
+                keyBits = int("keyBits"),
+                spinCount = int("spinCount"),
                 hashAlgorithm = attr("hashAlgorithm"),
                 cipherAlgorithm = attr("cipherAlgorithm"),
                 chaining = attr("cipherChaining"),
@@ -349,6 +380,15 @@ private[graft] object OoxmlCrypto {
     require(pw != null,
       "EncryptionInfo has no password keyEncryptor (certificate-only " +
         "protection cannot be opened with a password)")
+    // AES takes 16-byte blocks and 128/192/256-bit keys only
+    Seq("keyData" -> (keyData.blockSize, keyData.keyBits),
+      "encryptedKey" -> (pw.blockSize, pw.keyBits)).foreach { case (el, (block, bits)) =>
+      require(block == 16, s"EncryptionInfo $el blockSize $block is not AES's 16")
+      require(bits == 128 || bits == 192 || bits == 256,
+        s"EncryptionInfo $el keyBits $bits is not an AES key size")
+    }
+    require(pw.spinCount >= 0 && pw.spinCount <= MaxSpinCount,
+      s"EncryptionInfo spinCount ${pw.spinCount} outside 0..$MaxSpinCount")
     (keyData, pw)
   }
 }

@@ -31,6 +31,17 @@ import java.time.format.DateTimeFormatter
   * BLANK cells are null, formula cells contribute their cached value
   * (`outputFormulaValues=true`, the reference default). Encrypted
   * workbooks (FILEPASS) are unsupported, as in [[XlsxParser]].
+  *
+  * Out-of-range dates: a date-styled NUMBER/RK/FORMULA value whose
+  * serial Excel cannot date (negative, not finite, or on or past
+  * 10000-01-01) renders as its General number, POI's fallback for an
+  * invalid Excel date ([[XlsxParser.dateText]]).
+  *
+  * Hostile bytes: a corrupt container or record stream rejects with an
+  * `IllegalArgumentException` naming what is wrong, never an index,
+  * arithmetic or date-time error. Each record handler checks that its
+  * payload holds the fixed fields it reads, every string is bounded by
+  * its record, and the SST cursor stops at its last CONTINUE block.
   */
 private[graft] object XlsParser {
 
@@ -86,7 +97,8 @@ private[graft] object XlsParser {
         if (v < EndOfChain - 1) ids += v
       }
       var difat = firstDifat
-      var guard = numDifat + 1
+      // a DIFAT chain holds at most one entry per sector of the file
+      var guard = math.min(numDifat.toLong, bytes.length.toLong / sectorSize) + 1
       while (difat < EndOfChain - 1 && guard > 0) {
         val d = le(sector(difat))
         (0 until sectorSize / 4 - 1).foreach { i =>
@@ -182,13 +194,17 @@ private[graft] object XlsParser {
 
   /** Cursor over SST payload + its CONTINUE payloads. Character data
     * re-reads the compression flag at each block boundary (MS-XLS
-    * 2.5.293); fixed-width header/skip fields may also span blocks. */
+    * 2.5.293); fixed-width header/skip fields may also span blocks.
+    * Reading past the last block rejects the workbook as truncated. */
   private final class SstCursor(blocks: Vector[Array[Byte]]) {
     private var block = 0
     private var off = 0
-    private def ensure(): Unit =
+    private def ensure(): Unit = {
       while (block < blocks.length && off >= blocks(block).length) { block += 1; off = 0 }
-    def hasMore: Boolean = { ensure(); block < blocks.length }
+      if (block >= blocks.length)
+        throw new IllegalArgumentException(
+          "corrupt SST: shared strings run past the last CONTINUE record")
+    }
     def u8(): Int = { ensure(); val v = blocks(block)(off) & 0xFF; off += 1; v }
     def u16(): Int = u8() | (u8() << 8)
     def u32(): Long = u16().toLong | (u16().toLong << 16)
@@ -263,16 +279,36 @@ private[graft] object XlsParser {
     if (div100) v / 100 else v
   }
 
-  /** XLUnicodeString at a byte offset (16-bit length). */
-  private def unicodeString(d: Array[Byte], at: Int): String = {
+  /** XLUnicodeString at a byte offset (16-bit length) of a `what`
+    * record; a string that runs past the record rejects by name. */
+  private def unicodeString(d: Array[Byte], at: Int, what: String): String = {
+    require(at + 3 <= d.length, s"corrupt $what record: string header past its end")
     val cch = (d(at) & 0xFF) | ((d(at + 1) & 0xFF) << 8)
     val grbit = d(at + 2) & 0xFF
     var p = at + 3
     if ((grbit & 8) != 0) p += 2 // cRun
     if ((grbit & 4) != 0) p += 4 // cbExtRst
-    if ((grbit & 1) == 1)
-      new String(d, p, cch * 2, java.nio.charset.StandardCharsets.UTF_16LE)
-    else new String((0 until cch).map(i => (d(p + i) & 0xFF).toChar).toArray)
+    stringAt(d, p, cch, (grbit & 1) == 1, what)
+  }
+
+  /** `cch` compressed (1-byte) or UTF-16LE characters at `p`. */
+  private def stringAt(d: Array[Byte], p: Int, cch: Int, high: Boolean, what: String): String = {
+    val width = if (high) 2 else 1
+    require(p + cch * width <= d.length,
+      s"corrupt $what record: $cch characters run past its ${d.length} bytes")
+    if (high) new String(d, p, cch * 2, java.nio.charset.StandardCharsets.UTF_16LE)
+    else new String(d, p, cch, java.nio.charset.StandardCharsets.ISO_8859_1)
+  }
+
+  /** A record's payload, checked to hold the `min` bytes of fixed
+    * fields its handler reads (MS-XLS 2.4): a shorter record is
+    * corruption and rejects by name instead of indexing past its end. */
+  private def fields(r: Rec, min: Int, what: String): ByteBuffer = {
+    if (r.data.length < min)
+      throw new IllegalArgumentException(
+        s"corrupt $what record at stream offset ${r.offset}: " +
+          s"${r.data.length} payload bytes, its fields need $min")
+    le(r.data)
   }
 
   // ---------------------------------------------------------- top level
@@ -300,25 +336,22 @@ private[graft] object XlsParser {
     val supbooks = Vector.newBuilder[Boolean]
     val lblNames = Vector.newBuilder[String]
     var date1904 = false
-    recs.zipWithIndex.takeWhile { case (r, i) => i == 0 || r.id != 0x0809 || {
+    recs.zipWithIndex.takeWhile { case (r, i) => i == 0 || r.id != 0x0809 ||
       // stop at the first sheet BOF (records before it are the globals)
-      val dt = (r.data(2) & 0xFF) | ((r.data(3) & 0xFF) << 8); dt == 0x05
-    }}.foreach { case (r, i) =>
+      (fields(r, 4, "BOF").getShort(2) & 0xFFFF) == 0x05
+    }.foreach { case (r, i) =>
       r.id match {
         case 0xFC => sst = parseSst(recs, i)
-        case 0xE0 => xfFmt += ((r.data(2) & 0xFF) | ((r.data(3) & 0xFF) << 8))
+        case 0xE0 => xfFmt += fields(r, 4, "XF").getShort(2) & 0xFFFF
         case 0x41E =>
-          val ifmt = (r.data(0) & 0xFF) | ((r.data(1) & 0xFF) << 8)
-          if (XlsxParser.isDateFormatCode(unicodeString(r.data, 2))) customDateFmt += ifmt
+          val ifmt = fields(r, 2, "FORMAT").getShort(0) & 0xFFFF
+          if (XlsxParser.isDateFormatCode(unicodeString(r.data, 2, "FORMAT")))
+            customDateFmt += ifmt
         case 0x85 =>
-          val pos = le(r.data).getInt(0)
-          val cch = r.data(6) & 0xFF
-          val high = (r.data(7) & 1) == 1
-          val name =
-            if (high) new String(r.data, 8, cch * 2, java.nio.charset.StandardCharsets.UTF_16LE)
-            else new String((0 until cch).map(j => (r.data(8 + j) & 0xFF).toChar).toArray)
+          val pos = fields(r, 8, "BOUNDSHEET").getInt(0)
+          val name = stringAt(r.data, 8, r.data(6) & 0xFF, (r.data(7) & 1) == 1, "BOUNDSHEET")
           sheets += name -> pos
-        case 0x22 => date1904 = (r.data(0) & 0xFF) == 1
+        case 0x22 => date1904 = (fields(r, 2, "DATEMODE").get(0) & 0xFF) == 1
         case 0x1AE => // SUPBOOK: 4-byte 0x0401 marker = this workbook
           supbooks += (r.data.length == 4 &&
             ((r.data(2) & 0xFF) | ((r.data(3) & 0xFF) << 8)) == 0x0401)
@@ -329,6 +362,7 @@ private[graft] object XlsParser {
           // would resolve wrong or not at all)
           val merged = r.data ++
             recs.drop(i + 1).takeWhile(_.id == 0x3C).flatMap(_.data)
+          require(merged.length >= 2, "corrupt EXTERNSHEET record: no XTI count")
           val b = le(merged)
           val n = b.getShort(0) & 0xFFFF
           if (merged.length < 2 + n * 6)
@@ -340,13 +374,8 @@ private[graft] object XlsParser {
               b.getShort(4 + k * 6).toInt, b.getShort(6 + k * 6).toInt))
           }
         case 0x18 => // LBL (defined name); builtins render by spec name
-          val grbit = (r.data(0) & 0xFF) | ((r.data(1) & 0xFF) << 8)
-          val cch = r.data(3) & 0xFF
-          val high = (r.data(14) & 1) == 1
-          val raw =
-            if (high) new String(r.data, 15, cch * 2,
-              java.nio.charset.StandardCharsets.UTF_16LE)
-            else new String((0 until cch).map(j => (r.data(15 + j) & 0xFF).toChar).toArray)
+          val grbit = fields(r, 15, "LBL").getShort(0) & 0xFFFF
+          val raw = stringAt(r.data, 15, r.data(3) & 0xFF, (r.data(14) & 1) == 1, "LBL")
           lblNames += (if ((grbit & 0x20) != 0)
             XlsFormula.builtinNames.getOrElse(
               raw.headOption.map(_.toInt).getOrElse(-1),
@@ -363,12 +392,9 @@ private[graft] object XlsParser {
     val epoch = if (date1904) LocalDate.of(1904, 1, 1) else LocalDate.of(1899, 12, 30)
 
     def formatNum(v: Double, ixfe: Int): String =
-      if (isDateXf(ixfe)) {
-        val days = Math.floor(v).toLong
-        val nanos = Math.round((v - days) * 86400d) * 1000000000L
-        epoch.plusDays(days).atStartOfDay.plusNanos(nanos).format(fmt)
-      } else XlsxParser.formatGeneral(
-        if (v == Math.rint(v) && Math.abs(v) < 1e15) v.toLong.toString else v.toString)
+      (if (isDateXf(ixfe)) XlsxParser.dateText(v, epoch, fmt) else None).getOrElse(
+        XlsxParser.formatGeneral(
+          if (v == Math.rint(v) && Math.abs(v) < 1e15) v.toLong.toString else v.toString))
 
     val allSheets = sheets.result()
     if (allSheets.isEmpty) throw new IllegalArgumentException("workbook has no sheets")
@@ -404,19 +430,19 @@ private[graft] object XlsParser {
         case 0x0809 => depth += 1 // BOF (the sheet's own, or nested charts)
         case 0x0A => depth -= 1; if (depth <= 0) done = true // EOF
         case 0xFD => // LABELSST
-          val b = le(r.data)
+          val b = fields(r, 10, "LABELSST")
           put(b.getShort(0) & 0xFFFF, b.getShort(2) & 0xFFFF,
             sst.lift(b.getInt(6)).orNull)
         case 0x203 => // NUMBER
-          val b = le(r.data)
+          val b = fields(r, 14, "NUMBER")
           put(b.getShort(0) & 0xFFFF, b.getShort(2) & 0xFFFF,
             formatNum(b.getDouble(6), b.getShort(4) & 0xFFFF))
         case 0x27E => // RK
-          val b = le(r.data)
+          val b = fields(r, 10, "RK")
           put(b.getShort(0) & 0xFFFF, b.getShort(2) & 0xFFFF,
             formatNum(rkValue(b.getInt(6) & 0xFFFFFFFFL), b.getShort(4) & 0xFFFF))
         case 0xBD => // MULRK
-          val b = le(r.data)
+          val b = fields(r, 6, "MULRK")
           val row = b.getShort(0) & 0xFFFF
           val colFirst = b.getShort(2) & 0xFFFF
           val n = (r.data.length - 6) / 6
@@ -426,7 +452,7 @@ private[graft] object XlsParser {
             put(row, colFirst + k, formatNum(rkValue(rk), ixfe))
           }
         case 0x06 => // FORMULA (cached result, or the formula text itself)
-          val b = le(r.data)
+          val b = fields(r, 22, "FORMULA")
           val row = b.getShort(0) & 0xFFFF
           val col = b.getShort(2) & 0xFFFF
           val ixfe = b.getShort(4) & 0xFFFF
@@ -436,6 +462,8 @@ private[graft] object XlsParser {
             // cached value (and any trailing STRING record — no
             // pendingFormula is armed) is ignored
             val cce = b.getShort(20) & 0xFFFF
+            require(22 + cce <= r.data.length,
+              s"corrupt FORMULA record: $cce formula bytes past its end")
             textFormulas += ((row, col,
               java.util.Arrays.copyOfRange(r.data, 22, 22 + cce),
               java.util.Arrays.copyOfRange(r.data, 22 + cce, r.data.length)))
@@ -450,40 +478,46 @@ private[graft] object XlsParser {
         case 0x4BC if !outputFormulaValues =>
           // SHRFMLA: template rgce(+rgcb) keyed by range top-left
           // (cached-value mode never reads it — skip the copies)
-          val rwFirst = (r.data(0) & 0xFF) | ((r.data(1) & 0xFF) << 8)
+          val b = fields(r, 10, "SHRFMLA")
+          val rwFirst = b.getShort(0) & 0xFFFF
           val colFirst = r.data(4) & 0xFF
-          val cce = (r.data(8) & 0xFF) | ((r.data(9) & 0xFF) << 8)
+          val cce = b.getShort(8) & 0xFFFF
+          require(10 + cce <= r.data.length,
+            s"corrupt SHRFMLA record: $cce formula bytes past its end")
           sharedRgce((rwFirst, colFirst)) =
             (java.util.Arrays.copyOfRange(r.data, 10, 10 + cce),
               java.util.Arrays.copyOfRange(r.data, 10 + cce, r.data.length))
         case 0x221 if !outputFormulaValues =>
           // ARRAY: the array formula's own rgce(+rgcb), keyed by
           // range top-left (6-byte ref + 2 flags + 4 chn)
-          val rwFirst = (r.data(0) & 0xFF) | ((r.data(1) & 0xFF) << 8)
+          val b = fields(r, 14, "ARRAY")
+          val rwFirst = b.getShort(0) & 0xFFFF
           val colFirst = r.data(4) & 0xFF
-          val cce = (r.data(12) & 0xFF) | ((r.data(13) & 0xFF) << 8)
+          val cce = b.getShort(12) & 0xFFFF
+          require(14 + cce <= r.data.length,
+            s"corrupt ARRAY record: $cce formula bytes past its end")
           arrayRgce((rwFirst, colFirst)) =
             (java.util.Arrays.copyOfRange(r.data, 14, 14 + cce),
               java.util.Arrays.copyOfRange(r.data, 14 + cce, r.data.length))
         case 0x207 => // STRING (pending formula's cached text)
           pendingFormula.foreach { case (row, col) =>
-            put(row, col, unicodeString(r.data, 0))
+            put(row, col, unicodeString(r.data, 0, "STRING"))
           }
           pendingFormula = None
         case 0x205 => // BOOLERR
-          val b = le(r.data)
+          val b = fields(r, 8, "BOOLERR")
           val row = b.getShort(0) & 0xFFFF
           val col = b.getShort(2) & 0xFFFF
           if ((r.data(7) & 0xFF) == 0) put(row, col, if ((r.data(6) & 0xFF) == 1) "TRUE" else "FALSE")
           else put(row, col, null)
         case 0x204 => // LABEL (inline string cell)
-          val b = le(r.data)
-          put(b.getShort(0) & 0xFFFF, b.getShort(2) & 0xFFFF, unicodeString(r.data, 6))
+          val b = fields(r, 6, "LABEL")
+          put(b.getShort(0) & 0xFFFF, b.getShort(2) & 0xFFFF, unicodeString(r.data, 6, "LABEL"))
         case 0x201 => // BLANK
-          val b = le(r.data)
+          val b = fields(r, 6, "BLANK")
           put(b.getShort(0) & 0xFFFF, b.getShort(2) & 0xFFFF, null)
         case 0xBE => // MULBLANK
-          val b = le(r.data)
+          val b = fields(r, 6, "MULBLANK")
           val row = b.getShort(0) & 0xFFFF
           val colFirst = b.getShort(2) & 0xFFFF
           val n = (r.data.length - 6) / 2

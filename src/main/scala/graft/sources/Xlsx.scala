@@ -33,12 +33,24 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
   *    (`:164-181`).
   *
   * Deviations (documented): agile-encrypted workbooks (Office 2010+)
-  * are supported via [[OoxmlCrypto]]; the pre-2010 "standard" CFB
-  * scheme is rejected with a clear error;
+  * and the pre-2010 "standard" scheme are supported via
+  * [[OoxmlCrypto]] (RC4 is rejected with a clear error);
   * header-row GAPS keep their column position and empty header cells
   * are named col{i} (the reference appends header cells positionally,
   * silently shifting every later column under a gap). Legacy binary
   * `.xls` is [[XlsParser]].
+  *
+  * Out-of-range dates: a date-styled value whose serial Excel cannot
+  * date (negative, not finite, or on or past 10000-01-01) renders as
+  * its General number, as POI's DataFormatter does ([[dateText]]).
+  *
+  * Hostile bytes: a corrupt zip fails in `java.util.zip` (an
+  * `IOException` or `IllegalArgumentException`), malformed XML in StAX
+  * (`XMLStreamException`), and a well-formed part with a bad value (a
+  * non-integer `numFmtId`, `s` or shared-string index, a non-numeric
+  * `<v>`, a cell reference without a column A..XFD) with an
+  * `IllegalArgumentException` naming the cell or attribute, never a
+  * `NumberFormatException`, index or date-time error.
   */
 private[graft] object XlsxParser {
 
@@ -139,12 +151,12 @@ private[graft] object XlsxParser {
       r.next() match {
         case XMLStreamConstants.START_ELEMENT => r.getLocalName match {
           case "numFmt" =>
-            val id = Option(r.getAttributeValue(null, "numFmtId")).map(_.toInt)
+            val id = intAttr(r, "numFmtId", "styles numFmt")
             val code = Option(r.getAttributeValue(null, "formatCode")).getOrElse("")
             if (id.isDefined && isDateFormatCode(code)) customDate += id.get
           case "cellXfs" => inCellXfs = true
           case "xf" if inCellXfs =>
-            styleFmt += Option(r.getAttributeValue(null, "numFmtId")).map(_.toInt).getOrElse(0)
+            styleFmt += intAttr(r, "numFmtId", "styles xf").getOrElse(0)
           case _ => ()
         }
         case XMLStreamConstants.END_ELEMENT if r.getLocalName == "cellXfs" =>
@@ -156,6 +168,18 @@ private[graft] object XlsxParser {
       case (fmt, i) if BuiltinDateFormats(fmt) || customDate(fmt) => i
     }.toSet
   }
+
+  /** An optional integer attribute; a value that is not an integer
+    * rejects the workbook, naming the attribute and where it sits. */
+  private def intAttr(r: XMLStreamReader, name: String, where: => String): Option[Int] =
+    Option(r.getAttributeValue(null, name)).map(v => integer(v, s"$where $name"))
+
+  private def integer(v: String, what: => String): Int =
+    try v.trim.toInt
+    catch {
+      case _: NumberFormatException =>
+        throw new IllegalArgumentException(s"corrupt xlsx: $what '$v' is not an integer")
+    }
 
   /** Date-format heuristic over a custom format code: any y/m/d/h/s
     * token outside quoted literals and [] sections (the POI
@@ -215,17 +239,24 @@ private[graft] object XlsxParser {
     val rows = Vector.newBuilder[Vector[String]]
     var cells: scala.collection.mutable.ArrayBuffer[String] = null
     var lastCol = -1
+    var rowNo = 0
 
-    def formatted(t: String, s: Int, v: String, inline: String): String = t match {
-      case "s"         => shared.lift(v.trim.toInt).orNull
+    def formatted(cell: => String, t: String, s: Int, v: String, inline: String): String = t match {
+      case _ if v == null && t != "inlineStr" => null // a cell with no <v> is empty
+      case "s"         => shared.lift(integer(v, s"cell $cell shared-string index")).orNull
       case "inlineStr" => inline
       case "str"       => v
       case "b"         => if (v.trim == "1") "TRUE" else "FALSE"
       case "e"         => v
       case _ => // numeric
-        if (v == null || v.isEmpty) null
-        else if (dateStyles(s)) formatDate(v, dateFmt)
-        else formatGeneral(v)
+        try {
+          if (v.isEmpty) null
+          else if (dateStyles(s)) formatDate(v, dateFmt)
+          else formatGeneral(v)
+        } catch {
+          case _: NumberFormatException => throw new IllegalArgumentException(
+            s"corrupt xlsx: cell $cell value '$v' is not a number")
+        }
     }
 
     while (r.hasNext) {
@@ -234,11 +265,15 @@ private[graft] object XlsxParser {
           case "row" =>
             cells = scala.collection.mutable.ArrayBuffer.empty[String]
             lastCol = -1
+            rowNo += 1
           case "c" if cells != null =>
             val ref = r.getAttributeValue(null, "r")
-            val t = Option(r.getAttributeValue(null, "t")).getOrElse("n")
-            val s = Option(r.getAttributeValue(null, "s")).map(_.toInt).getOrElse(-1)
             val colIdx = Option(ref).map(columnOf).getOrElse(lastCol + 1)
+            require(colIdx < MaxColumns,
+              s"corrupt xlsx: cell in row element $rowNo lies past column $MaxColumns")
+            def cell = Option(ref).getOrElse(s"#${colIdx + 1} of row element $rowNo")
+            val t = Option(r.getAttributeValue(null, "t")).getOrElse("n")
+            val s = intAttr(r, "s", s"cell $cell").getOrElse(-1)
             lastCol = colIdx
             // body: <v> (value) and/or <is> (inline string runs)
             var v: String = null
@@ -256,7 +291,7 @@ private[graft] object XlsxParser {
                 case _ => ()
               }
             }
-            val value = formatted(t, s, v, inline)
+            val value = formatted(cell, t, s, v, inline)
             while (cells.length <= colIdx) cells += null
             cells(colIdx) = value
           case _ => ()
@@ -278,12 +313,17 @@ private[graft] object XlsxParser {
     Sheet(if (headers == null) Vector.empty else headers, rows.result())
   }
 
-  /** 0-based column index of a cell reference like "BA12". */
+  /** Excel's column limit (XFD). */
+  private val MaxColumns = 16384
+
+  /** 0-based column index of a cell reference like "BA12"; a reference
+    * without column letters, or past XFD, rejects the workbook. */
   private def columnOf(ref: String): Int = {
     var i = 0; var c = 0
-    while (i < ref.length && ref.charAt(i).isLetter) {
+    while (i < ref.length && c <= MaxColumns && ref.charAt(i).isLetter) {
       c = c * 26 + (ref.charAt(i).toUpper - 'A' + 1); i += 1
     }
+    require(c >= 1 && c <= MaxColumns, s"corrupt xlsx: cell reference '$ref' names no column A..XFD")
     c - 1
   }
 
@@ -301,13 +341,26 @@ private[graft] object XlsxParser {
     }
   }
 
-  private[sources] def formatDate(serialStr: String, fmt: DateTimeFormatter): String = {
-    val serial = serialStr.toDouble
-    val days = Math.floor(serial).toLong
-    val nanosOfDay = Math.round((serial - days) * 86400d) * 1000000000L
-    val dt = ExcelEpoch.plusDays(days).atStartOfDay.plusNanos(nanosOfDay)
-    dt.format(fmt)
-  }
+  private[sources] def formatDate(serialStr: String, fmt: DateTimeFormatter): String =
+    dateText(serialStr.toDouble, ExcelEpoch, fmt).getOrElse(formatGeneral(serialStr))
+
+  /** Day after the last date Excel can show (9999-12-31). */
+  private val PastLastExcelDay = LocalDate.of(10000, 1, 1)
+
+  /** A date-styled serial rendered with `fmt`, counted from `epoch`
+    * (1899-12-30, or 1904-01-01 for 1904-mode xls). None for a serial
+    * Excel cannot date: negative, not finite, or on or past 10000-01-01;
+    * callers then render the General number, as POI's DataFormatter
+    * does for an invalid Excel date. */
+  private[sources] def dateText(
+      serial: Double, epoch: LocalDate, fmt: DateTimeFormatter): Option[String] =
+    if (!(serial >= 0 &&
+        serial < java.time.temporal.ChronoUnit.DAYS.between(epoch, PastLastExcelDay))) None
+    else {
+      val days = Math.floor(serial).toLong
+      val nanosOfDay = Math.round((serial - days) * 86400d) * 1000000000L
+      Some(epoch.plusDays(days).atStartOfDay.plusNanos(nanosOfDay).format(fmt))
+    }
 
   /** Excel day serial for a local date (writer side). */
   private[graft] def toSerial(d: LocalDate): Long =

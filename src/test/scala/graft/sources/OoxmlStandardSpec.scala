@@ -19,8 +19,11 @@ import javax.crypto.spec.SecretKeySpec
   * (MS-CFB) and the standard key schedule / AES-ECB framing — it
   * shares no code with [[OoxmlCrypto]], so a transcription error on
   * either side of the key derivation fails the round-trip rather than
-  * cancelling out. The agile path, by contrast, is proven against the
-  * reference's own encrypted_players.xlsx (XlsxSpec).
+  * cancelling out. The agile path is proven the same way against
+  * [[AgileFixture]], an independent test-side agile encryptor (version
+  * 4.4, AES-256-CBC, SHA-512) whose workbook opens here and seeds the
+  * CorruptWorkbookSpec sweep, and against the reference's own
+  * encrypted_players.xlsx where present (XlsxSpec).
   */
 class OoxmlStandardSpec extends AnyFunSuite {
 
@@ -112,6 +115,21 @@ class OoxmlStandardSpec extends AnyFunSuite {
         writeRawAlgId = true, headerFlags = 0x34), "x")
     }
     assert(ext.getMessage.contains("RC4"))
+  }
+
+  test("agile-encrypted workbook (AES-256, SHA-512) opens through Xlsx.read") {
+    val dir = tmp
+    val zip = plainXlsx(dir)
+    val encFile = dir.resolve("agile.xlsx")
+    Files.write(encFile, AgileFixture.encrypt(zip, "correct horse"))
+    val plain = Xlsx.read(spark, dir.resolve("plain.xlsx").toString).toDF
+    val back = Xlsx.read(spark, encFile.toString, password = "correct horse").toDF
+    assert(back.columns.toSeq == plain.columns.toSeq)
+    assert(back.collect().map(_.toSeq).toSet == plain.collect().map(_.toSeq).toSet)
+    val wrong = intercept[IllegalArgumentException] {
+      OoxmlCrypto.decrypt(Files.readAllBytes(encFile), "wrong horse")
+    }
+    assert(wrong.getMessage.contains("wrong password"))
   }
 
   test("CFB writer output is readable by the golden-tested CFB reader") {

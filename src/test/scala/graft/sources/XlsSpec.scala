@@ -50,212 +50,6 @@ class XlsSpec extends AnyFunSuite {
 
   // ------------------------------------------------ formula-string mode
 
-  /** Minimal BIFF8 record builders for the formula fixture (players.xls
-    * carries no FORMULA records, and no tool here writes xls — the
-    * OoxmlStandardSpec discipline: synthesize from the public MS-XLS
-    * spec, sharing no code with the parser under test). */
-  private object Biff {
-    import java.nio.{ByteBuffer, ByteOrder}
-    private def le(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    def rec(id: Int, p: Array[Byte]): Array[Byte] = {
-      val b = le(4 + p.length)
-      b.putShort(id.toShort).putShort(p.length.toShort).put(p).array()
-    }
-    def bof(dt: Int): Array[Byte] =
-      rec(0x0809, le(16).putShort(0x0600.toShort).putShort(dt.toShort).array())
-    def boundsheet(pos: Int, name: String): Array[Byte] = {
-      val chars = name.getBytes("ISO-8859-1")
-      val b = le(8 + chars.length)
-      b.putInt(pos).putShort(0).put(chars.length.toByte).put(0.toByte).put(chars)
-      rec(0x85, b.array())
-    }
-    def eof: Array[Byte] = rec(0x0A, Array.empty)
-    def label(row: Int, c: Int, s: String): Array[Byte] = {
-      val chars = s.getBytes("ISO-8859-1")
-      val b = le(9 + chars.length)
-      b.putShort(row.toShort).putShort(c.toShort).putShort(0)
-      b.putShort(chars.length.toShort).put(0.toByte).put(chars)
-      rec(0x204, b.array())
-    }
-    def number(row: Int, c: Int, v: Double): Array[Byte] =
-      rec(0x203, le(14).putShort(row.toShort).putShort(c.toShort)
-        .putShort(0).putDouble(v).array())
-    def formulaNum(row: Int, c: Int, cached: Double, rgce: Array[Byte],
-        rgcb: Array[Byte] = Array.emptyByteArray): Array[Byte] = {
-      val b = le(22 + rgce.length + rgcb.length)
-      b.putShort(row.toShort).putShort(c.toShort).putShort(0)
-      b.putDouble(cached).putShort(0).putInt(0)
-      b.putShort(rgce.length.toShort).put(rgce).put(rgcb)
-      rec(0x06, b.array())
-    }
-    /** FORMULA whose cached result is a string (num field = the
-      * 0xFFFF-marked type-0 stub; the text follows in a STRING rec). */
-    def formulaStr(row: Int, c: Int, cachedText: String, rgce: Array[Byte]): Array[Byte] = {
-      val b = le(22 + rgce.length)
-      b.putShort(row.toShort).putShort(c.toShort).putShort(0)
-      b.put(Array[Byte](0, 0, 0, 0, 0, 0, -1, -1)) // type=0 (string), 0xFFFF marker
-      b.putShort(0).putInt(0)
-      b.putShort(rgce.length.toShort).put(rgce)
-      val chars = cachedText.getBytes("ISO-8859-1")
-      val s = le(3 + chars.length)
-      s.putShort(chars.length.toShort).put(0.toByte).put(chars)
-      rec(0x06, b.array()) ++ rec(0x207, s.array())
-    }
-    // rgce token builders (value-class where classed)
-    def tRef(row: Int, c: Int, rel: Boolean = true): Array[Byte] = {
-      val colField = c | (if (rel) 0xC000 else 0)
-      le(5).put(0x44.toByte).putShort(row.toShort).putShort(colField.toShort).array()
-    }
-    def tArea(r1: Int, r2: Int, c1: Int, c2: Int): Array[Byte] = {
-      val b = le(9).put(0x45.toByte)
-      b.putShort(r1.toShort).putShort(r2.toShort)
-      b.putShort((c1 | 0xC000).toShort).putShort((c2 | 0xC000).toShort).array()
-    }
-    def tInt(v: Int): Array[Byte] = le(3).put(0x1E.toByte).putShort(v.toShort).array()
-    def tStr(s: String): Array[Byte] = {
-      val chars = s.getBytes("ISO-8859-1")
-      le(3 + chars.length).put(0x17.toByte).put(chars.length.toByte)
-        .put(0.toByte).put(chars).array()
-    }
-    def tFuncVar(cargs: Int, id: Int): Array[Byte] =
-      le(4).put(0x42.toByte).put(cargs.toByte).putShort(id.toShort).array()
-    def tFunc(id: Int): Array[Byte] =
-      le(3).put(0x41.toByte).putShort(id.toShort).array()
-    val tAdd: Array[Byte] = Array(0x03)
-    val tMul: Array[Byte] = Array(0x05)
-    val tConcat: Array[Byte] = Array(0x08)
-    val tParen: Array[Byte] = Array(0x15)
-
-    /** One-sheet workbook around the given sheet cell records. */
-    def workbook(cellRecs: Array[Byte]*): Array[Byte] = {
-      val name = "S"
-      // globals size: BOF(20) + BOUNDSHEET(12 + |name|) + EOF(4)
-      val globals = bof(0x05) ++ boundsheet(20 + 12 + name.length + 4, name) ++ eof
-      val sheet = bof(0x10) ++ cellRecs.flatten ++ eof
-      StdFixture.cfb(Seq("Workbook" -> (globals ++ sheet)))
-    }
-
-    // ---- 3-D / defined-name globals (MS-XLS 2.4.150/2.4.265/2.4.271)
-    def supbookSelf(ctab: Int): Array[Byte] =
-      rec(0x1AE, le(4).putShort(ctab.toShort).putShort(0x0401.toShort).array())
-    def externsheet(entries: (Int, Int, Int)*): Array[Byte] =
-      externsheetSplit(Int.MaxValue, entries: _*)
-    /** EXTERNSHEET whose rgXTI spills into a CONTINUE record after
-      * `split` entries (the >1370-entry real-file shape, miniature). */
-    def externsheetSplit(split: Int, entries: (Int, Int, Int)*): Array[Byte] = {
-      def pack(es: Seq[(Int, Int, Int)]): Array[Byte] = {
-        val b = le(es.length * 6)
-        es.foreach { case (iSup, first, last) =>
-          b.putShort(iSup.toShort).putShort(first.toShort).putShort(last.toShort)
-        }
-        b.array()
-      }
-      val (head, tail) = entries.splitAt(split)
-      val first = rec(0x17,
-        le(2).putShort(entries.length.toShort).array() ++ pack(head))
-      if (tail.isEmpty) first else first ++ rec(0x3C, pack(tail))
-    }
-    def lbl(name: String, builtin: Boolean = false): Array[Byte] = {
-      val chars = name.getBytes("ISO-8859-1")
-      val b = le(15 + chars.length)
-      b.putShort(if (builtin) 0x20.toShort else 0.toShort) // grbit
-      b.put(0.toByte).put(chars.length.toByte) // chKey, cch
-      b.putShort(0).putShort(0).putShort(0) // cce, reserved, itab
-      b.putInt(0) // 4 menu/description/help/status lengths
-      b.put(0.toByte).put(chars) // XLUnicodeStringNoCch, compressed
-      rec(0x18, b.array())
-    }
-    def tRef3d(ixti: Int, row: Int, c: Int): Array[Byte] =
-      le(7).put(0x5A.toByte).putShort(ixti.toShort)
-        .putShort(row.toShort).putShort((c | 0xC000).toShort).array()
-    def tArea3d(ixti: Int, r1: Int, r2: Int, c1: Int, c2: Int): Array[Byte] =
-      le(11).put(0x5B.toByte).putShort(ixti.toShort)
-        .putShort(r1.toShort).putShort(r2.toShort)
-        .putShort((c1 | 0xC000).toShort).putShort((c2 | 0xC000).toShort).array()
-    def tName(index1: Int): Array[Byte] =
-      le(5).put(0x43.toByte).putShort(index1.toShort).putShort(0).array()
-    def tExp(rw: Int, c: Int): Array[Byte] =
-      le(5).put(0x01.toByte).putShort(rw.toShort).putShort(c.toShort).array()
-    def tRefN(rowOff: Int, colOff: Int,
-        rowRel: Boolean = true, colRel: Boolean = true): Array[Byte] = {
-      val colField = (if (colRel) (colOff & 0xFF) | 0x4000 else colOff & 0x3FFF) |
-        (if (rowRel) 0x8000 else 0)
-      le(5).put(0x4C.toByte).putShort(rowOff.toShort).putShort(colField.toShort).array()
-    }
-    def tAreaN(r1: Int, r2: Int, c1: Int, c2: Int): Array[Byte] = {
-      def cf(c: Int) = ((c & 0xFF) | 0xC000).toShort
-      le(9).put(0x4D.toByte).putShort(r1.toShort).putShort(r2.toShort)
-        .putShort(cf(c1)).putShort(cf(c2)).array()
-    }
-    def shrfmla(rwFirst: Int, rwLast: Int, colFirst: Int, colLast: Int,
-        rgce: Array[Byte]): Array[Byte] = {
-      val b = le(10 + rgce.length)
-      b.putShort(rwFirst.toShort).putShort(rwLast.toShort)
-      b.put(colFirst.toByte).put(colLast.toByte)
-      b.put(0.toByte).put(2.toByte) // unused, cUse
-      b.putShort(rgce.length.toShort).put(rgce)
-      rec(0x4BC, b.array())
-    }
-    def arrayRec(rwFirst: Int, colFirst: Int,
-        rgce: Array[Byte] = Array.emptyByteArray,
-        rgcb: Array[Byte] = Array.emptyByteArray): Array[Byte] = {
-      val b = le(16 + rgce.length + rgcb.length)
-      b.putShort(rwFirst.toShort).putShort(rwFirst.toShort)
-      b.put(colFirst.toByte).put(colFirst.toByte)
-      b.putShort(0).putInt(0) // flags, chn
-      b.putShort(rgce.length.toShort).put(rgce).put(rgcb)
-      rec(0x221, b.array())
-    }
-    /** tArray token (7 unused operand bytes; values ride rgcb). */
-    val tArray: Array[Byte] = Array[Byte](0x40, 0, 0, 0, 0, 0, 0, 0)
-    /** SerArray rgcb block: values row-major, each (type, payload). */
-    def serArray(cols: Int, rows: Int, values: Seq[Any]): Array[Byte] = {
-      val buf = new java.io.ByteArrayOutputStream()
-      buf.write(cols - 1)
-      buf.write((rows - 1) & 0xFF); buf.write(((rows - 1) >> 8) & 0xFF)
-      values.foreach {
-        case d: Double =>
-          buf.write(0x01)
-          buf.writeBytes(le(8).putDouble(d).array())
-        case s: String =>
-          buf.write(0x02)
-          val chars = s.getBytes("ISO-8859-1")
-          buf.write(chars.length & 0xFF); buf.write((chars.length >> 8) & 0xFF)
-          buf.write(0) // compressed
-          buf.writeBytes(chars)
-        case v: Boolean =>
-          buf.write(0x04)
-          buf.write(if (v) 1 else 0)
-          buf.writeBytes(new Array[Byte](7))
-        case e: Int => // error code
-          buf.write(0x10)
-          buf.write(e)
-          buf.writeBytes(new Array[Byte](7))
-      }
-      buf.toByteArray
-    }
-
-    /** Multi-sheet workbook with SUPBOOK/EXTERNSHEET/LBL globals:
-      * cellRecs land on the FIRST sheet; the second ("My Sheet") holds
-      * one number so 3-D refs have a real target. */
-    def workbook3d(lbls: Seq[Array[Byte]], xti: Seq[(Int, Int, Int)],
-        cellRecs: Array[Byte]*): Array[Byte] = {
-      val names = Seq("S", "My Sheet")
-      val fixed = bof(0x05) ++ supbookSelf(names.length) ++
-        // the second XTI entry rides a CONTINUE record, so the e2e
-        // arms also pin the EXTERNSHEET merge path
-        externsheetSplit(1, xti: _*) ++ lbls.flatten
-      val bsLen = names.map(n => 12 + n.length).sum
-      val globalsLen = fixed.length + bsLen + 4
-      val sheet1 = bof(0x10) ++ cellRecs.flatten ++ eof
-      val globals = fixed ++
-        boundsheet(globalsLen, names(0)) ++
-        boundsheet(globalsLen + sheet1.length, names(1)) ++ eof
-      val sheet2 = bof(0x10) ++ number(0, 0, 7) ++ eof
-      StdFixture.cfb(Seq("Workbook" -> (globals ++ sheet1 ++ sheet2)))
-    }
-  }
-
   test("formula cells: cached values by default, formula text on outputFormulaValues=false") {
     val wb = Biff.workbook(
       Biff.label(0, 0, "a"), Biff.label(0, 1, "b"), Biff.label(0, 2, "f"),
