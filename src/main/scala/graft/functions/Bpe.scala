@@ -3,16 +3,17 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-pair-encoding model: the ORDERED merge list learned by
   * [[graft.ops.Bpe.train]] (Sennrich et al. 2016). Symbols are Unicode
   * code points with a `</w>` end-of-word marker; rank = merge priority
-  * (lower merges first). The ranks map and the per-thread word cache
+  * (lower merges first). The ranks map and the per-thread word caches
   * are rebuilt lazily on each executor after broadcast.
   *
   * `alphabet` is the model's BASE symbol set (the distinct initial
@@ -101,14 +102,38 @@ case class BpeModel(
     m
   }
 
-  /** Per-thread LRU word cache: natural text is Zipfian, so most words
-    * repeat — cache the encoded form per distinct word (bounded). */
+  /** Per-thread LRU cache of token STRINGS per word (or per mapped
+    * byte-level chunk), for [[BpeUtil.tokens]] and the byte-level
+    * paths: natural text is Zipfian, so most words repeat — cache the
+    * encoded form per distinct word, at most [[BpeModel.CacheWords]]. */
   @transient lazy val cache: ThreadLocal[java.util.LinkedHashMap[String, Array[String]]] =
     ThreadLocal.withInitial(() =>
       new java.util.LinkedHashMap[String, Array[String]](1024, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[String, Array[String]]): Boolean = size() > 10000
+            e: java.util.Map.Entry[String, Array[String]]): Boolean =
+          size() > BpeModel.CacheWords
       })
+
+  /** Per-thread state of the word-level [[BpeUtil.tokenIds]]: its own
+    * word → ids cache (it never fills [[cache]]) and the reused id
+    * buffer. */
+  @transient private[graft] lazy val idScratch: ThreadLocal[BpeIdScratch] =
+    ThreadLocal.withInitial(() => new BpeIdScratch)
+}
+
+/** One thread's word-level id-encoding state: `words` maps a word's
+  * UTF-8 bytes to its token ids, at most [[BpeModel.CacheWords]]
+  * entries, evicting the oldest INSERTED word (a hit does not reorder,
+  * so it is one hash lookup); `buf` gathers a row's ids and is reused
+  * across rows while it stays at most [[BpeModel.KeptIds]] long. */
+private[graft] final class BpeIdScratch {
+  val words: java.util.LinkedHashMap[UTF8String, Array[Int]] =
+    new java.util.LinkedHashMap[UTF8String, Array[Int]](1024, 0.75f, false) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[UTF8String, Array[Int]]): Boolean =
+        size() > BpeModel.CacheWords
+    }
+  var buf: Array[Int] = new Array[Int](1024)
 }
 
 object BpeModel {
@@ -119,6 +144,10 @@ object BpeModel {
   val UnkId = 1
   val PadToken = "<pad>"
   val UnkToken = "<unk>"
+  /** Words per thread in each encode cache. */
+  val CacheWords = 10000
+  /** The longest id buffer a thread keeps between rows (256 KB). */
+  val KeptIds: Int = 1 << 16
 }
 
 /** BYTE-level BPE plumbing (the GPT-2-family published-tokenizer
@@ -211,6 +240,11 @@ object BpeUtil {
 
   private val wsSet = " \t\n\u000B\f\r"
   private def isWs(cp: Int): Boolean = cp < 128 && wsSet.indexOf(cp) >= 0
+
+  /** [[isWs]] on one UTF-8 byte: the same six ASCII code points (9-13
+    * and 32). No byte of a multi-byte UTF-8 sequence is below 0x80, so
+    * splitting the bytes here splits the text where [[isWs]] does. */
+  private def isWsByte(b: Byte): Boolean = b == 32 || (b >= 9 && b <= 13)
 
   /** Word -> code-point symbols + end-of-word marker. */
   private[graft] def initialSymbols(word: String): Array[String] = {
@@ -316,12 +350,6 @@ object BpeUtil {
     new GenericArrayData(out.toArray[Any])
   }
 
-  /** [[tokens]] mapped through the model's [[BpeModel.vocab]]: the
-    * token-ID stream a trainer's data loader consumes. Same split,
-    * same greedy encode (and the same per-thread word cache — the
-    * cache holds symbol arrays; the id lookup is one hash get per
-    * token); symbols outside the vocabulary become [[BpeModel.UnkId]].
-    * ids(text) and tokens(text) are index-aligned by construction. */
   /** ids → text (see [[BpeDecodeIds]] for the contract): vocabulary
     * lookup per id (out-of-range / NULL → the unk marker, pad dropped),
     * concatenate, split on the end-of-word markers, single-space join.
@@ -395,27 +423,57 @@ object BpeUtil {
       new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8))
   }
 
+  /** [[tokens]] mapped through the model's [[BpeModel.vocab]]: the
+    * token-ID stream a trainer's data loader consumes, index-aligned
+    * with [[tokens]]; symbols outside the vocabulary become the
+    * model's unk id. The word-level path never decodes the text: it
+    * splits the UTF-8 bytes on the whitespace bytes ([[isWsByte]]),
+    * looks each word up through a zero-copy view in the per-thread
+    * word → ids cache ([[BpeModel.idScratch]]), and on a miss decodes
+    * that one word, runs the greedy encode and maps it through
+    * [[BpeModel.vocabIds]]. The ids gather in the thread's reused
+    * buffer and leave as one primitive `UnsafeArrayData`. Called from
+    * generated code — keep the signature stable. */
   def tokenIds(text: UTF8String, m: BpeModel): ArrayData = {
     if (m.byteLevel) return byteLevelTokenIds(text, m)
-    val s = text.toString
-    val out = new scala.collection.mutable.ArrayBuilder.ofInt
+    val scratch = m.idScratch.get()
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val n = text.numBytes
+    var buf = scratch.buf
+    var len = 0
     var i = 0
-    val n = s.length
     while (i < n) {
-      while (i < n && isWs(s.charAt(i))) i += 1
+      while (i < n && isWsByte(Platform.getByte(base, off + i))) i += 1
       val start = i
-      while (i < n && !isWs(s.charAt(i))) i += 1
+      while (i < n && !isWsByte(Platform.getByte(base, off + i))) i += 1
       if (i > start) {
-        val toks = encodeWord(s.substring(start, i), m)
-        var k = 0
-        while (k < toks.length) {
-          val id = m.vocabIds.get(toks(k))
-          out += (if (id == null) m.unkId else id.intValue())
-          k += 1
-        }
+        val ids = wordIds(UTF8String.fromAddress(base, off + start, i - start), scratch, m)
+        if (len + ids.length > buf.length)
+          buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, len + ids.length))
+        System.arraycopy(ids, 0, buf, len, ids.length)
+        len += ids.length
       }
     }
-    new GenericArrayData(out.result().map(Int.box: Int => Any))
+    if (buf.length <= BpeModel.KeptIds) scratch.buf = buf
+    UnsafeArrayData.fromPrimitiveArray(buf, Platform.INT_ARRAY_OFFSET, len, 4)
+  }
+
+  /** One word's ids from the thread's cache; a miss encodes the word
+    * and caches its ids under a copy of the view's bytes. */
+  private def wordIds(word: UTF8String, scratch: BpeIdScratch, m: BpeModel): Array[Int] = {
+    val cached = scratch.words.get(word)
+    if (cached != null) return cached
+    val toks = encodeSymbols(initialSymbols(word.toString), m)
+    val ids = new Array[Int](toks.length)
+    var k = 0
+    while (k < toks.length) {
+      val id = m.vocabIds.get(toks(k))
+      ids(k) = if (id == null) m.unkId else id.intValue()
+      k += 1
+    }
+    scratch.words.put(word.copy(), ids)
+    ids
   }
 
   private def byteLevelTokenIds(text: UTF8String, m: BpeModel): ArrayData = {
@@ -433,7 +491,7 @@ object BpeUtil {
         k += 1
       }
     }
-    new GenericArrayData(out.result().map(Int.box: Int => Any))
+    UnsafeArrayData.fromPrimitiveArray(out.result())
   }
 }
 
@@ -473,9 +531,13 @@ case class BpeTokens(
 
 /** BPE token IDS of a string column under a broadcast [[BpeModel]] —
   * [[BpeTokens]]' id sibling: the same whitespace split and greedy
-  * encode, each token mapped through the model's derived vocabulary
-  * ([[BpeModel.vocab]]; unknown symbols → [[BpeModel.UnkId]]). This is
-  * the stream a training data loader actually reads. */
+  * encode, each token mapped through the model's vocabulary
+  * ([[BpeModel.vocab]]; unknown symbols → the model's unk id). This is
+  * the stream a training data loader actually reads, and `size(...)`
+  * of it is the token count ([[graft.ops.Bpe.tokenCount]]). The
+  * word-level kernel ([[BpeUtil.tokenIds]]) scans the UTF-8 bytes,
+  * caches word → ids per thread and returns a primitive int array
+  * without building token strings. */
 case class BpeIds(
     child: Expression,
     modelBc: org.apache.spark.broadcast.Broadcast[BpeModel])

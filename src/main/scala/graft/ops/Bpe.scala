@@ -20,8 +20,10 @@ import graft.functions.{bpeExprs, BpeModel, BpeUtil}
   *      (top 1M words cover ~all occurrences of any natural corpus),
   *      so the driver state is capped by contract, not by luck.
   *   3. Encoding is a broadcast model + the native codegen'd
-  *      [[graft.functions.BpeTokens]] expression — stateless, streams
-  *      unchanged, per-thread LRU word cache on the executors.
+  *      [[graft.functions.BpeTokens]]/[[graft.functions.BpeIds]]
+  *      expressions — stateless, streams unchanged, bounded per-thread
+  *      word caches on the executors (ids: a UTF-8 byte scan into a
+  *      word → ids cache, emitted as a primitive int array).
   *
   * Determinism contract: merge selection is max pair count with ties
   * broken by the lexicographically smallest (left, right) pair, and
@@ -276,9 +278,11 @@ object Bpe {
     bpeExprs.bpe_tokens(c, modelBc)
 
   /** Real-tokenizer token count (the budget unit a mixture/packing
-    * step should use once a tokenizer exists). */
+    * step should use once a tokenizer exists): the size of [[ids]],
+    * which are index-aligned with [[tokens]], so it equals
+    * `size(tokens(c))` without building the token strings. */
   def tokenCount(c: Column, modelBc: Broadcast[BpeModel]): Column =
-    size(tokens(c, modelBc))
+    size(ids(c, modelBc))
 
   /** BPE token IDS of `c` (array<int>) under the model's derived
     * vocabulary ([[graft.functions.BpeModel.vocab]]: pad 0, unk 1,
@@ -315,7 +319,10 @@ object Bpe {
     * (bucket-sum pass + output pass). `tokenCount` is deterministic,
     * so that is CORRECT — but at corpus scale encoding twice is wasted
     * work; `localCheckpoint` (or persist) the frame this returns
-    * before feeding a budgeting op if the encode cost matters. */
+    * before feeding a budgeting op if the encode cost matters (the
+    * measured gain is in [[graft.ops.Packing.packTokenIds]]' note:
+    * smaller since the id kernel stopped decoding text, larger for a
+    * costlier encoder). */
   def withTokenCount(df: DataFrame, textCol: String, outCol: String,
       modelBc: Broadcast[BpeModel]): DataFrame =
     df.withColumn(outCol, tokenCount(col(textCol), modelBc))

@@ -16,9 +16,10 @@ import org.apache.spark.rdd.RDD
   *    committed: only then is the old dir swapped out (rename away,
   *    rename staging in, delete old) — a job failure at any earlier
   *    point leaves the existing data untouched and only the staging
-  *    dir to clean (done in the failure path). A delete-then-write
-  *    shape would lose the previous data the moment a doomed job
-  *    started.
+  *    dir to clean (done in the failure path; tasks create their files
+  *    non-recursively, so one still running cannot bring it back). A
+  *    delete-then-write shape would lose the previous data the moment
+  *    a doomed job started.
   *
   * Staging lives beside `dir` (same parent, same filesystem) so the
   * commit renames are metadata moves, never copies. */
@@ -48,7 +49,13 @@ private[sources] object StagedCommit {
         val attempt = Option(org.apache.spark.TaskContext.get())
           .map(_.taskAttemptId()).getOrElse(0L)
         val tmp = new HPath(stagingStr, f"part-$idx%05d$ext.attempt-$attempt")
-        val os = fs.create(tmp, true)
+        // non-recursive: only the driver makes the staging dir. A task
+        // of a failed job runs on until it next reads a record, so it
+        // can reach this line after the failure path removed staging;
+        // it must then fail here, not recreate the dir as a leftover
+        val os = fs.createNonRecursive(tmp, true,
+          fs.getConf.getInt("io.file.buffer.size", 4096),
+          fs.getDefaultReplication(tmp), fs.getDefaultBlockSize(tmp), null)
         // the writer owns (and closes) the stream on success; on ITS
         // failure the descriptor must still be released before the
         // task reports the error (double-close is harmless)

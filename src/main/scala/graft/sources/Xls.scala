@@ -41,7 +41,10 @@ import java.time.format.DateTimeFormatter
   * `IllegalArgumentException` naming what is wrong, never an index,
   * arithmetic or date-time error. Each record handler checks that its
   * payload holds the fixed fields it reads, every string is bounded by
-  * its record, and the SST cursor stops at its last CONTINUE block.
+  * its record, and the SST cursor stops at its last CONTINUE block. A
+  * record whose declared length runs past the Workbook stream (sized
+  * by its directory entry, so the stream was cut) and a LABELSST cell
+  * naming a shared string the SST does not hold both reject too.
   */
 private[graft] object XlsParser {
 
@@ -185,7 +188,12 @@ private[graft] object XlsParser {
     while (pos + 4 <= stream.length) {
       val id = (stream(pos) & 0xFF) | ((stream(pos + 1) & 0xFF) << 8)
       val len = (stream(pos + 2) & 0xFF) | ((stream(pos + 3) & 0xFF) << 8)
-      if (pos + 4 + len > stream.length) return out.result()
+      // the stream is sized by its directory entry, so a record that
+      // runs past it was cut short, not padded
+      if (pos + 4 + len > stream.length)
+        throw new IllegalArgumentException(
+          f"truncated xls record 0x$id%04X at stream offset $pos: declares $len " +
+            s"payload bytes, the Workbook stream holds ${stream.length - pos - 4}")
       out += Rec(id, java.util.Arrays.copyOfRange(stream, pos + 4, pos + 4 + len), pos)
       pos += 4 + len
     }
@@ -431,8 +439,13 @@ private[graft] object XlsParser {
         case 0x0A => depth -= 1; if (depth <= 0) done = true // EOF
         case 0xFD => // LABELSST
           val b = fields(r, 10, "LABELSST")
-          put(b.getShort(0) & 0xFFFF, b.getShort(2) & 0xFFFF,
-            sst.lift(b.getInt(6)).orNull)
+          val (row, col, isst) = (b.getShort(0) & 0xFFFF, b.getShort(2) & 0xFFFF, b.getInt(6))
+          if (isst < 0 || isst >= sst.length)
+            throw new IllegalArgumentException(
+              s"corrupt LABELSST record at stream offset ${r.offset}: cell " +
+                s"${XlsFormula.colLetters(col)}${row + 1} names shared string " +
+                s"${isst & 0xFFFFFFFFL}, the SST holds ${sst.length}")
+          put(row, col, sst(isst))
         case 0x203 => // NUMBER
           val b = fields(r, 14, "NUMBER")
           put(b.getShort(0) & 0xFFFF, b.getShort(2) & 0xFFFF,
@@ -667,7 +680,7 @@ private[sources] object XlsFormula {
     354 -> ("ROMAN", 2), 359 -> ("HYPERLINK", 1), 361 -> ("AVERAGEA", 1),
     362 -> ("MAXA", 1), 363 -> ("MINA", 1))
 
-  private def colLetters(c: Int): String = {
+  def colLetters(c: Int): String = {
     var n = c
     var s = ""
     while (n >= 0) { s = ('A' + n % 26).toChar.toString + s; n = n / 26 - 1 }

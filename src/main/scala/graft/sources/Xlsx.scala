@@ -47,8 +47,9 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
   * Hostile bytes: a corrupt zip fails in `java.util.zip` (an
   * `IOException` or `IllegalArgumentException`), malformed XML in StAX
   * (`XMLStreamException`), and a well-formed part with a bad value (a
-  * non-integer `numFmtId`, `s` or shared-string index, a non-numeric
-  * `<v>`, a cell reference without a column A..XFD) with an
+  * non-integer `numFmtId`, `s` or shared-string index, a shared-string
+  * index outside the table, a non-numeric `<v>`, a cell reference
+  * without a column A..XFD) with an
   * `IllegalArgumentException` naming the cell or attribute, never a
   * `NumberFormatException`, index or date-time error.
   */
@@ -243,7 +244,12 @@ private[graft] object XlsxParser {
 
     def formatted(cell: => String, t: String, s: Int, v: String, inline: String): String = t match {
       case _ if v == null && t != "inlineStr" => null // a cell with no <v> is empty
-      case "s"         => shared.lift(integer(v, s"cell $cell shared-string index")).orNull
+      case "s" =>
+        val i = integer(v, s"cell $cell shared-string index")
+        if (i < 0 || i >= shared.length)
+          throw new IllegalArgumentException(s"corrupt xlsx: cell $cell shared-string " +
+            s"index $i is outside the ${shared.length}-string table")
+        shared(i)
       case "inlineStr" => inline
       case "str"       => v
       case "b"         => if (v.trim == "1") "TRUE" else "FALSE"

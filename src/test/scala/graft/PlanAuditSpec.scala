@@ -290,6 +290,28 @@ class PlanAuditSpec extends AnyFunSuite {
       s"the spread must pin an explicit partition count: ${exchanges.head}")
   }
 
+  test("q_avro_roundtrip spreads a single-task orders scan and leaves a parallel one unshuffled") {
+    // the avro gate's write input goes through Par.spreadNarrow, and
+    // the staged write emits one part file per input partition, so the
+    // part count shows which arm ran: a narrow scan becomes exactly the
+    // pinned count (4 here); a parallel scan keeps its own count
+    def parts(ordersDir: String): Int = {
+      val back = SparkEntry.queries("q_avro_roundtrip")(spark, ordersDir)
+      assert(back.count() == Tables.load(spark, ordersDir, "orders").count())
+      val out = new java.io.File(s"${System.getProperty("java.io.tmpdir")}/graft-gate-avro-" +
+        s"${ProcessHandle.current().pid()}-${Integer.toHexString(ordersDir.hashCode)}/orders_avro")
+      out.listFiles().count(f => f.getName.startsWith("part-") && f.getName.endsWith(".avro"))
+    }
+    val narrow = Tables.load(spark, dir, "orders").rdd.getNumPartitions
+    assert(narrow == 1, s"the sf0.001 orders scan should plan one task, got $narrow")
+    assert(parts(dir) == 4, "a single-task scan must be spread to the pinned count")
+    val wideDir = java.nio.file.Files.createTempDirectory("graft-audit-avro").toString
+    Tables.load(spark, dir, "orders").repartition(6).write.parquet(s"$wideDir/orders.parquet")
+    val wide = Tables.load(spark, wideDir, "orders").rdd.getNumPartitions
+    assert(wide >= 2 && wide != 4, s"the wide arm needs 2+ scan tasks other than 4, got $wide")
+    assert(parts(wideDir) == wide, "a parallel scan must be written without a repartition")
+  }
+
   test("gopherDupNgramSignals plans as one pruned-scan projection — no shuffle, one expression") {
     val df = ops.TextOps.gopherDupNgramSignals(
       spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")

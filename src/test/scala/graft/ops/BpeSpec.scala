@@ -251,6 +251,142 @@ class BpeSpec extends AnyFunSuite {
     }
   }
 
+  /** A seeded byte corpus under a seeded model, for the pinned-ids
+    * spec: dictionary words, unseen words, every ASCII whitespace byte
+    * as a separator, the non-splitting NBSP/U+2028/U+3000 inside
+    * words, non-BMP code points, malformed UTF-8 runs, leading and
+    * trailing whitespace, empty and whitespace-only texts. The second
+    * model swaps in an explicit token table (a third of the derived
+    * vocabulary dropped, the rest reversed, unk at slot 5), so unknown
+    * symbols take a non-default id. */
+  private def pinnedCorpus(): (Seq[BpeModel], Seq[Array[Byte]]) = {
+    val r = new scala.util.Random(20261019L)
+    val cps = Array("a", "b", "c", "d", "e", "n", "t", "é", "ß", "中", "文",
+      "\uD83D\uDE00", "\uD834\uDD1E", "<", "/", "w", ">")
+    def word(): String = Seq.fill(1 + r.nextInt(7))(cps(r.nextInt(cps.length))).mkString
+    val dict = Seq.fill(400)(word()).distinct.map(w => (w, 1L + r.nextInt(40)))
+    val m = Bpe.trainFromWordCounts(dict, numMerges = 150, minPairCount = 2)
+    val table = m.vocab.indices.filter(_ % 3 != 2).map(m.vocab(_)).reverse.toArray
+    val ext = BpeModel(m.merges, m.alphabet, table, externalPadId = 0, externalUnkId = 5)
+    val seps = Array(" ", "\t", "\n", "\u000B", "\f", "\r", "  ", " \t\r\n")
+    val joins = Array("\u00A0", "\u2028", "\u3000")
+    val bad = Array(Array(0xE2, 0x82), Array(0x80), Array(0xC0, 0xAF),
+      Array(0xED, 0xA0, 0x80), Array(0xF0, 0x9F), Array(0xFF)).map(_.map(_.toByte))
+    def utf8(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val texts = Seq.fill(600) {
+      val out = new java.io.ByteArrayOutputStream()
+      if (r.nextInt(4) == 0) out.write(utf8(seps(r.nextInt(seps.length))))
+      (0 until r.nextInt(40)).foreach { k =>
+        if (k > 0) out.write(utf8(seps(r.nextInt(seps.length))))
+        r.nextInt(10) match {
+          case 0 => out.write(utf8(word() + "xq" + word()))
+          case 1 => out.write(utf8(word() + joins(r.nextInt(joins.length)) + word()))
+          case 2 =>
+            out.write(utf8(word())); out.write(bad(r.nextInt(bad.length)))
+            if (r.nextBoolean()) out.write(utf8(word()))
+          case _ => out.write(utf8(dict(r.nextInt(dict.length))._1))
+        }
+      }
+      if (r.nextInt(4) == 0) out.write(utf8(seps(r.nextInt(seps.length))))
+      out.toByteArray
+    } ++ Seq(Array.emptyByteArray, utf8(" \t\n\u000B\f\r"))
+    (Seq(m, ext), texts)
+  }
+
+  private def idsSha256(models: Seq[BpeModel], texts: Seq[Array[Byte]]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = java.nio.ByteBuffer.allocate(4)
+    def put(i: Int): Unit = { buf.clear(); buf.putInt(i); md.update(buf.array()) }
+    for (m <- models; t <- texts) {
+      val ids = BpeUtil.tokenIds(org.apache.spark.unsafe.types.UTF8String.fromBytes(t), m)
+        .toIntArray()
+      put(ids.length); ids.foreach(put)
+    }
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  test("ids are pinned: a seeded hostile corpus hashes to the captured SHA-256") {
+    // captured from the String-decoding encoder before the byte-scan
+    // rewrite; any change to the split, the cache or the id mapping
+    // that moves one id moves this hash
+    val (models, texts) = pinnedCorpus()
+    assert(idsSha256(models, texts) ==
+      "faf649a5c827b2766682e6a0b1e635bedde0227c925089b9daf055095e05b152")
+    // the codegen'd column path yields the same ids as the direct call
+    val df = texts.toDF("b").select(Bpe.ids(col("b").cast("string"),
+      Bpe.broadcastModel(spark, models(1))))
+    val viaSpark = df.collect().map(_.getSeq[Int](0))
+    texts.zip(viaSpark).foreach { case (t, got) =>
+      assert(got == BpeUtil.tokenIds(
+        org.apache.spark.unsafe.types.UTF8String.fromBytes(t), models(1)).toIntArray().toSeq)
+    }
+  }
+
+  test("hostile bytes: ids == tokens through vocabIds and tokenCount == size(tokens)") {
+    import org.apache.spark.unsafe.Platform
+    import org.apache.spark.unsafe.types.UTF8String
+    val corpus = (1 to 20).flatMap(_ => Seq("the cat sat on the mat", "the thin cat café 中文"))
+      .toDF("text")
+    val m = Bpe.train(corpus, "text", numMerges = 25, minPairCount = 2)
+    val bc = Bpe.broadcastModel(spark, m)
+    def b(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    def u(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    def check(what: String, text: UTF8String): Unit = {
+      val toks = BpeUtil.tokens(text, m)
+      val want = (0 until toks.numElements()).map(i =>
+        Option(m.vocabIds.get(toks.getUTF8String(i).toString)).fold(m.unkId)(_.intValue))
+      val ids = BpeUtil.tokenIds(text, m)
+      assert(ids.toIntArray().toSeq == want, what)
+      assert(ids.numElements() == toks.numElements(), what)
+    }
+    val cases: Seq[(String, Array[Byte])] = Seq(
+      "truncated lead byte before a space" -> (u("cat") ++ b(0xE2, 0x82) ++ u(" the")),
+      "truncated lead byte at the end" -> (u("the ") ++ b(0xE2, 0x82)),
+      "lone continuation byte" -> (u("the") ++ b(0x80) ++ u("cat mat")),
+      "overlong C0 AF" -> (u("a ") ++ b(0xC0, 0xAF) ++ u(" t")),
+      "encoded surrogate ED A0 80" -> (u("sat") ++ b(0xED, 0xA0, 0x80) ++ u("on")),
+      "every ASCII whitespace byte" -> u("the\tcat\nsat\u000Bon\fthe\rmat the"),
+      "NBSP, U+2028 and U+3000 do not split" -> u("the\u00A0cat the\u2028mat on\u3000the"),
+      "non-BMP code points" -> u("\uD83D\uDE00 the\uD834\uDD1Ecat \uD83D\uDE00\uD83D\uDE00"),
+      "empty text" -> Array.emptyByteArray,
+      "whitespace-only text" -> u(" \t\n\u000B\f\r "))
+    // the non-splitting spaces stay inside one word
+    assert(BpeUtil.tokenIds(UTF8String.fromBytes(cases(6)._2), m).numElements() ==
+      BpeUtil.tokens(UTF8String.fromString("the_cat the_mat on_the"), m).numElements())
+    assert(BpeUtil.tokenIds(UTF8String.fromBytes(cases(9)._2), m).numElements() == 0)
+    cases.foreach { case (what, bytes) =>
+      check(what, UTF8String.fromBytes(bytes))
+      // a slice that does not start at offset 0, with bytes on both
+      // sides that would change the split if they were read
+      val framed = b(0x41, 0xE2, 0x80) ++ bytes ++ b(0x80, 0x42)
+      check(s"$what (slice)", UTF8String.fromBytes(framed, 3, bytes.length))
+      // an off-heap string (null base object, absolute address)
+      val addr = Platform.allocateMemory(math.max(bytes.length, 1).toLong)
+      try {
+        Platform.copyMemory(bytes, Platform.BYTE_ARRAY_OFFSET, null, addr, bytes.length.toLong)
+        check(s"$what (off-heap)", UTF8String.fromAddress(null, addr, bytes.length))
+      } finally Platform.freeMemory(addr)
+    }
+    // more distinct words than the per-thread cache holds: early words
+    // are evicted, and meeting them again re-encodes to the same ids
+    val many = (0 until 12000).map(i => "the" + Integer.toString(i, 36).map(c =>
+      if (c.isDigit) ('a' + (c - '0')).toChar else c) + "cat")
+    val big = UTF8String.fromString(many.mkString(" "))
+    check("12,000 distinct words", big)
+    check("12,000 distinct words, again", big)
+    many.take(50).foreach(w => check(w, UTF8String.fromString(w)))
+    // as columns, through codegen: tokenCount == size(tokens) and ids
+    // == tokens through vocabIds
+    val rows = cases.map(_._2).toDF("b").select(col("b").cast("string").as("t"))
+      .select(Bpe.tokenCount(col("t"), bc), size(Bpe.tokens(col("t"), bc)),
+        Bpe.ids(col("t"), bc), Bpe.tokens(col("t"), bc)).collect()
+    rows.zip(cases).foreach { case (r, (what, _)) =>
+      assert(r.getInt(0) == r.getInt(1), what)
+      assert(r.getSeq[Int](2) == r.getSeq[String](3).map(t =>
+        Option(m.vocabIds.get(t)).fold(m.unkId)(_.intValue)), what)
+    }
+  }
+
   test("continuation grows the alphabet; duplicate merge pairs keep the original rank") {
     val base = Bpe.trainFromWordCounts(Seq(("aab", 10L)), numMerges = 2, minPairCount = 2)
     val grown = Bpe.continueFromWordCounts(base, Seq(("ccd", 5L), ("ccd x", 1L)),

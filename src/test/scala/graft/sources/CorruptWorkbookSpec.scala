@@ -178,6 +178,42 @@ class CorruptWorkbookSpec extends AnyFunSuite {
       cutTo(formulaNum(1, 0, 1, tInt(1)), 23))))
   }
 
+  private val header =
+    """<row r="1"><c r="A1" t="inlineStr"><is><t>h</t></is></c>""" +
+      """<c r="B1" t="inlineStr"><is><t>g</t></is></c></row>"""
+  private def withRow(cells: String) =
+    WorkbookSeeds.xlsx(sheetData = header + s"""<row r="2">$cells</row>""")
+
+  test("xls: a stream cut inside its last record rejects, naming the record and offset") {
+    import Biff._
+    val cells = Seq(label(0, 0, "h"), number(1, 0, 1), number(2, 0, 2))
+    val stream = workbookStream(Nil, cells)
+    assert(parseXls(StdFixture.cfb(Seq("Workbook" -> stream))).rows ==
+      Vector(Vector("1"), Vector("2")))
+    // drop the EOF and all but the first 5 bytes of the last NUMBER:
+    // the Workbook stream's directory entry says it ends there
+    val cut = stream.dropRight(4 + number(2, 0, 2).length - 5)
+    rejects(s"truncated xls record 0x0203 at stream offset ${cut.length - 5}")(
+      parseXls(StdFixture.cfb(Seq("Workbook" -> cut))))
+  }
+
+  test("a shared-string index outside the table rejects, naming the cell") {
+    import Biff._
+    // xls: LABELSST names string 99 of a 1-string SST
+    val table = sst(Seq("a"), continueAt = 1)
+    assert(parseXls(workbookWith(Seq(table), Seq(label(0, 0, "h"), labelSst(1, 0, 0)))).rows ==
+      Vector(Vector("a")))
+    rejects("cell A2 names shared string 99, the SST holds 1")(
+      parseXls(workbookWith(Seq(table), Seq(label(0, 0, "h"), labelSst(1, 0, 99)))))
+    // xlsx: the seed's table holds 6 strings, so index 5 reads and 6 rejects
+    assert(parseXlsx(withRow("""<c r="A2" t="s"><v>5</v></c>""")).rows ==
+      Vector(Vector("gamma", null)))
+    rejects("cell A2 shared-string index 6 is outside the 6-string table")(
+      parseXlsx(withRow("""<c r="A2" t="s"><v>6</v></c>""")))
+    rejects("cell A2 shared-string index -1")(
+      parseXlsx(withRow("""<c r="A2" t="s"><v>-1</v></c>""")))
+  }
+
   test("xls: a date-styled serial Excel cannot date renders as its General number") {
     import Biff._
     val cells = Seq(label(0, 0, "d"),
@@ -195,12 +231,6 @@ class CorruptWorkbookSpec extends AnyFunSuite {
       Seq(label(0, 0, "d"), number(1, 0, 2957003, xf = 1), number(2, 0, 2957004, xf = 1))))
     assert(sheet1904.rows.map(_.head) == Vector("9999-12-31", "2957004"))
   }
-
-  private val header =
-    """<row r="1"><c r="A1" t="inlineStr"><is><t>h</t></is></c>""" +
-      """<c r="B1" t="inlineStr"><is><t>g</t></is></c></row>"""
-  private def withRow(cells: String) =
-    WorkbookSeeds.xlsx(sheetData = header + s"""<row r="2">$cells</row>""")
 
   test("xlsx: hostile values inside a CRC-valid zip reject by name") {
     val styles = WorkbookSeeds.defaultStyles

@@ -23,6 +23,16 @@ class TfRecordSpec extends AnyFunSuite {
   private def tmp(tag: String): String =
     Files.createTempDirectory(s"graft-tfr-$tag").toString
 
+  /** `feature { key: "a" value {} }`: an Example whose one Feature sets
+    * NO bytes/float/int64 kind. Our writer never emits this, so the
+    * wire bytes are hand-assembled: Example > features(field 1) > map
+    * entry { key(field 1) = "a", value(field 2) = empty Feature }. */
+  private val kindlessExample: Array[Byte] = {
+    val entry = Array[Byte](0x0a, 0x01, 'a', 0x12, 0x00) // key "a", empty value
+    val features = Array[Byte](0x0a, entry.length.toByte) ++ entry
+    Array[Byte](0x0a, features.length.toByte) ++ features
+  }
+
   test("framing golden bytes: length, masked CRC32C, payload CRC") {
     // TF's own worked constants: crc32c("") masked = 0xa282ead8 + rot(0)
     val framed = TfRecord.frame(Array.emptyByteArray)
@@ -262,16 +272,9 @@ class TfRecordSpec extends AnyFunSuite {
   }
 
   test("present-but-empty Feature (no kind set) reads as NULL, not a kind-mismatch NPE") {
-    // a hostile/foreign shard can hold `feature { key: "a" value {} }`
-    // — a Feature message with NO bytes/float/int64 kind. Our writer
-    // never emits this, so hand-assemble the wire bytes: Example >
-    // features(field 1) > map entry { key(field 1) = "a",
-    // value(field 2) = empty Feature }
-    val entry = Array[Byte](0x0a, 0x01, 'a', 0x12, 0x00) // key "a", empty value
-    val features = Array[Byte](0x0a, entry.length.toByte) ++ entry
-    val example = Array[Byte](0x0a, features.length.toByte) ++ features
+    // a hostile/foreign shard can hold a Feature message with no kind
     val dir = tmp("emptyfeat")
-    Files.write(Paths.get(dir, "part-00000.tfrecord"), TfRecord.frame(example))
+    Files.write(Paths.get(dir, "part-00000.tfrecord"), TfRecord.frame(kindlessExample))
     val out = TfRecord.read(spark, dir,
       StructType(Seq(StructField("a", StringType)))).collect()
     assert(out.length == 1 && out.head.isNullAt(0),
@@ -372,7 +375,9 @@ class TfRecordSpec extends AnyFunSuite {
     // deviation our own reader happens to mirror (wrong field number,
     // unmasked CRC, wrong endianness) would roundtrip in-JVM but
     // disagree here. Every accepted type, 10-byte varints, multi-byte
-    // UTF-8, non-UTF-8 binary, empty lists and the all-null row.
+    // UTF-8, non-UTF-8 binary, empty lists and the all-null row; and
+    // a hand-framed record whose Feature sets no kind, which both
+    // decoders read as a feature without a value.
     val schema = StructType(scalarSchema.fields ++ arraySchema.fields)
     val rows = Seq(
       Row("béta 日😀", Array[Byte](-1, 0, -2), Long.MinValue, -1, (-2).toShort, 7.toByte,
@@ -381,8 +386,14 @@ class TfRecordSpec extends AnyFunSuite {
       Row(Seq.fill(15)(null): _*))
     val dir = tmp("crossimpl")
     TfRecord.write(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema), dir)
-    val file = new java.io.File(dir).listFiles()
+    val written = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".tfrecord")).head
+    val withKindless = tmp("crossimpl_kindless")
+    val file = Files.write(Paths.get(withKindless, "part-00000.tfrecord"),
+      Files.readAllBytes(written.toPath) ++ TfRecord.frame(kindlessExample)).toFile
+    val a = TfRecord.read(spark, withKindless, StructType(Seq(StructField("a", StringType))))
+      .collect()
+    assert(a.length == 3 && a.forall(_.isNullAt(0)), a.toSeq)
     val p = new ProcessBuilder("python3", "tools/tfrecord_check.py",
       file.getAbsolutePath).start()
     p.getOutputStream.close()
@@ -390,7 +401,7 @@ class TfRecordSpec extends AnyFunSuite {
     val err = new String(p.getErrorStream.readAllBytes, "UTF-8")
     assert(p.waitFor() == 0, s"python decoder failed: $err")
     val lines = out.trim.split("\n")
-    assert(lines.length == 2, s"expected 2 records, got:\n$out")
+    assert(lines.length == 3, s"expected 3 records, got:\n$out")
     def feature(kind: String, values: String) = s"""{"kind": "$kind", "values": [$values]}"""
     val expected = Seq(
       "s" -> feature("bytes", "\"béta 日😀\""),
@@ -412,6 +423,7 @@ class TfRecordSpec extends AnyFunSuite {
     assert(lines(0) == expected.sortBy(_._1)
       .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}"))
     assert(lines(1) == "{}", "the all-null row carries no feature")
+    assert(lines(2) == """{"a": {"kind": null, "values": []}}""")
   }
 
   test("null array elements fail the write loudly, naming the column") {
@@ -483,6 +495,29 @@ class TfRecordSpec extends AnyFunSuite {
     Files.write(Paths.get(mixed, "more.tfrecord.gz"), gz.toByteArray)
     assert(TfRecord.read(spark, mixed, schema).collect()
       .map(_.getLong(0)).sorted.toSeq == (1L to 11L))
+  }
+
+  test("a task that outlives its failed write cannot recreate the staging dir") {
+    // partition 0 fails at once; partition 1 reaches its file create
+    // only after the job has failed and the driver has removed the
+    // staging dir (a killed task runs on until its next record)
+    val dir = tmp("late")
+    val rows = spark.sparkContext.parallelize(Seq(0, 1), 2).mapPartitionsWithIndex { (i, it) =>
+      if (i == 0) throw new IllegalStateException("injected task failure")
+      Thread.sleep(1500)
+      it
+    }
+    intercept[Exception] {
+      StagedCommit.write(rows, dir, ".bin") { (_, part, os) =>
+        part.foreach(os.write); os.close()
+      }
+    }
+    val parent = new java.io.File(dir).getParentFile
+    val name = new java.io.File(dir).getName
+    def leftovers = parent.listFiles().map(_.getName)
+      .filter(_.startsWith(s".$name-graft-staging-"))
+    Thread.sleep(3000) // partition 1 wakes at 1.5 s and tries its create
+    assert(leftovers.isEmpty, s"staging recreated: ${leftovers.mkString(", ")}")
   }
 
   test("failed write keeps previous data (shared staged commit)") {

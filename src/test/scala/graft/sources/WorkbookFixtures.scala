@@ -334,12 +334,16 @@ object Biff {
 
   /** One-sheet workbook: `globalRecs` (SST, XF, FORMAT, ...) between
     * the globals' BOF and its BOUNDSHEET, then the sheet's cell records. */
-  def workbookWith(globalRecs: Seq[Array[Byte]], cellRecs: Seq[Array[Byte]]): Array[Byte] = {
+  def workbookWith(globalRecs: Seq[Array[Byte]], cellRecs: Seq[Array[Byte]]): Array[Byte] =
+    StdFixture.cfb(Seq("Workbook" -> workbookStream(globalRecs, cellRecs)))
+
+  /** [[workbookWith]]'s BIFF8 Workbook stream, before the CFB wrap. */
+  def workbookStream(globalRecs: Seq[Array[Byte]], cellRecs: Seq[Array[Byte]]): Array[Byte] = {
     val name = "S"
     val fixed = bof(0x05) ++ globalRecs.flatten
     // globals size: fixed + BOUNDSHEET(12 + |name|) + EOF(4)
     val globals = fixed ++ boundsheet(fixed.length + 12 + name.length + 4, name) ++ eof
-    StdFixture.cfb(Seq("Workbook" -> (globals ++ bof(0x10) ++ cellRecs.flatten ++ eof)))
+    globals ++ bof(0x10) ++ cellRecs.flatten ++ eof
   }
 
   // ---- 3-D / defined-name globals (MS-XLS 2.4.150/2.4.265/2.4.271)

@@ -10,7 +10,8 @@ spec fails.
 Usage: tfrecord_check.py <file.tfrecord>
 Prints one JSON object per record: {feature: {"kind": k, "values": [...]}}
 (bytes values print as UTF-8 strings; a value that is not valid UTF-8,
-e.g. a binary feature, prints as {"hex": "<lowercase hex>"}).
+e.g. a binary feature, prints as {"hex": "<lowercase hex>"}; a Feature
+that sets no list kind prints as {"kind": null, "values": []}).
 """
 import json
 import struct
@@ -115,7 +116,8 @@ def parse_feature(b: bytes):
             else:
                 raise ValueError("unexpected BytesList field")
         return {"kind": "bytes", "values": vals}
-    raise ValueError("empty Feature")
+    # a Feature that sets no list kind: TfRecord.read reads it as NULL
+    return {"kind": None, "values": []}
 
 
 def parse_example(payload: bytes):
