@@ -2119,7 +2119,7 @@ object SparkEntry {
       // must survive bit-for-bit through the logical-type mapping. Path
       // keyed per (pid, sf) for the same reuse/isolation reasons as
       // q_orc_roundtrip above.
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft-gate-avro-${ProcessHandle.current().pid()}-${Integer.toHexString(dir.hashCode)}/orders_avro"
+      val out = avroGateOut(dir)
       // CONDITIONAL keyed spread before the write (r22,
       // Par.spreadNarrow): the per-row GenericRecord encode is the
       // cost here, and a single-file scan would serialize it into one
@@ -4689,6 +4689,10 @@ SELECT cast(d.doc_id AS BIGINT) AS doc_id,
 FROM docs300 d LEFT JOIN dec dc USING (doc_id)
 ORDER BY doc_id"""
   }
+
+  /** Where q_avro_roundtrip writes its Avro copy of `dir`'s orders. */
+  private[graft] def avroGateOut(dir: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft-gate-avro-${ProcessHandle.current().pid()}-${Integer.toHexString(dir.hashCode)}/orders_avro"
 
   private[graft] def bpeGateBc(s: SparkSession) =
     ops.Bpe.broadcastModel(s,

@@ -122,13 +122,13 @@ case class BpeModel(
 }
 
 /** One thread's word-level id-encoding state: `words` maps a word's
-  * UTF-8 bytes to its token ids, at most [[BpeModel.CacheWords]]
-  * entries, evicting the oldest INSERTED word (a hit does not reorder,
-  * so it is one hash lookup); `buf` gathers a row's ids and is reused
-  * across rows while it stays at most [[BpeModel.KeptIds]] long. */
+  * UTF-8 bytes to its token ids, an LRU of at most
+  * [[BpeModel.CacheWords]] entries like [[BpeModel.cache]]; `buf`
+  * gathers a row's ids and is reused across rows while it stays at
+  * most [[BpeModel.KeptIds]] long. */
 private[graft] final class BpeIdScratch {
   val words: java.util.LinkedHashMap[UTF8String, Array[Int]] =
-    new java.util.LinkedHashMap[UTF8String, Array[Int]](1024, 0.75f, false) {
+    new java.util.LinkedHashMap[UTF8String, Array[Int]](1024, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[UTF8String, Array[Int]]): Boolean =
         size() > BpeModel.CacheWords

@@ -298,18 +298,25 @@ class PlanAuditSpec extends AnyFunSuite {
     def parts(ordersDir: String): Int = {
       val back = SparkEntry.queries("q_avro_roundtrip")(spark, ordersDir)
       assert(back.count() == Tables.load(spark, ordersDir, "orders").count())
-      val out = new java.io.File(s"${System.getProperty("java.io.tmpdir")}/graft-gate-avro-" +
-        s"${ProcessHandle.current().pid()}-${Integer.toHexString(ordersDir.hashCode)}/orders_avro")
-      out.listFiles().count(f => f.getName.startsWith("part-") && f.getName.endsWith(".avro"))
+      new java.io.File(SparkEntry.avroGateOut(ordersDir)).listFiles()
+        .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".avro"))
     }
     val narrow = Tables.load(spark, dir, "orders").rdd.getNumPartitions
     assert(narrow == 1, s"the sf0.001 orders scan should plan one task, got $narrow")
     assert(parts(dir) == 4, "a single-task scan must be spread to the pinned count")
     val wideDir = java.nio.file.Files.createTempDirectory("graft-audit-avro").toString
-    Tables.load(spark, dir, "orders").repartition(6).write.parquet(s"$wideDir/orders.parquet")
-    val wide = Tables.load(spark, wideDir, "orders").rdd.getNumPartitions
-    assert(wide >= 2 && wide != 4, s"the wide arm needs 2+ scan tasks other than 4, got $wide")
-    assert(parts(wideDir) == wide, "a parallel scan must be written without a repartition")
+    try {
+      Tables.load(spark, dir, "orders").repartition(6).write.parquet(s"$wideDir/orders.parquet")
+      val wide = Tables.load(spark, wideDir, "orders").rdd.getNumPartitions
+      assert(wide >= 2 && wide != 4, s"the wide arm needs 2+ scan tasks other than 4, got $wide")
+      assert(parts(wideDir) == wide, "a parallel scan must be written without a repartition")
+    } finally {
+      // the narrow arm's output is the gate's own per-(pid, sf) dir,
+      // reused by every later run of it; the wide arm's is this test's
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(wideDir))
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(SparkEntry.avroGateOut(wideDir)).getParentFile)
+    }
   }
 
   test("gopherDupNgramSignals plans as one pruned-scan projection — no shuffle, one expression") {

@@ -498,26 +498,42 @@ class TfRecordSpec extends AnyFunSuite {
   }
 
   test("a task that outlives its failed write cannot recreate the staging dir") {
-    // partition 0 fails at once; partition 1 reaches its file create
-    // only after the job has failed and the driver has removed the
-    // staging dir (a killed task runs on until its next record)
+    // partition 0 fails at once; partition 1 waits until the driver's
+    // failure path has removed the staging dir (a killed task runs on
+    // until its next record), then reaches its file create. Its task
+    // end (after that create) drops a marker the test waits for
     val dir = tmp("late")
+    val parentDir = new java.io.File(dir).getParent
+    val prefix = s".${new java.io.File(dir).getName}-graft-staging-"
+    def leftovers = new java.io.File(parentDir).listFiles()
+      .filter(_.getName.startsWith(prefix)).toSeq
+    val ended = new java.io.File(tmp("late-ended"), "ended")
+    val endedPath = ended.getPath
     val rows = spark.sparkContext.parallelize(Seq(0, 1), 2).mapPartitionsWithIndex { (i, it) =>
       if (i == 0) throw new IllegalStateException("injected task failure")
-      Thread.sleep(1500)
+      org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit] { _ =>
+        new java.io.File(endedPath).createNewFile()
+      }
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (new java.io.File(parentDir).listFiles().exists(_.getName.startsWith(prefix)) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
       it
     }
-    intercept[Exception] {
-      StagedCommit.write(rows, dir, ".bin") { (_, part, os) =>
-        part.foreach(os.write); os.close()
+    try {
+      intercept[Exception] {
+        StagedCommit.write(rows, dir, ".bin") { (_, part, os) =>
+          part.foreach(os.write); os.close()
+        }
       }
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!ended.exists() && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(ended.exists(), "partition 1's task never ended")
+      assert(leftovers.isEmpty, s"staging recreated: ${leftovers.mkString(", ")}")
+    } finally {
+      // a leftover here would fail every later scan for staging dirs
+      leftovers.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+      org.apache.commons.io.FileUtils.deleteDirectory(ended.getParentFile)
     }
-    val parent = new java.io.File(dir).getParentFile
-    val name = new java.io.File(dir).getName
-    def leftovers = parent.listFiles().map(_.getName)
-      .filter(_.startsWith(s".$name-graft-staging-"))
-    Thread.sleep(3000) // partition 1 wakes at 1.5 s and tries its create
-    assert(leftovers.isEmpty, s"staging recreated: ${leftovers.mkString(", ")}")
   }
 
   test("failed write keeps previous data (shared staged commit)") {
