@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query at the scale factor in
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -17,14 +16,14 @@ import org.apache.spark.sql.SparkSession
   * converges to the true cost from above — it can only over-report
   * contention, never under-report work.
   *
-  * The JSON line reports steady-state per query (`queries`) plus scalar
-  * totals for both; per-query cold times go to stderr only. The FULL
-  * line is the LAST stdout line (r22 — the driver parses the final
-  * JSON line, and r18-r21 all recorded "parsed": null while a
-  * queries-less summary sat last); it is kept short (3-decimal
-  * rounding, no second map, no prose fields) and is ALSO written whole
-  * to BENCH_LOCAL.json in the working directory, so a truncated
-  * tail-capture can never be the only artifact.
+  * Output: ONE JSON line on stdout, at most [[MaxLineBytes]] bytes so a
+  * tail capture of the last 2,000 characters always holds all of it
+  * (see [[finalLine]]): the steady value of every query as a 2-decimal
+  * array in sorted-name order, a hash of that name list, the totals,
+  * the CPU anchor and the machine load. Per-query cold times go to
+  * stderr only. The same record plus the name list and the failed
+  * names is written to BENCH_LOCAL_c<cpus>.json in the working
+  * directory, so runs at different core counts keep separate files.
   */
 object Bench {
 
@@ -56,18 +55,46 @@ object Bench {
     once(); math.min(once(), once())
   }
 
+  /** Upper bound on the final stdout line, in UTF-8 bytes. */
+  private[graft] val MaxLineBytes = 1900
+
+  // Locale.ROOT: a comma decimal separator would corrupt the JSON
+  private def fmt(digits: Int, v: Double): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+  private def r3(v: Double): String = fmt(3, v)
+
+  private def jsonString(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  /** First 16 hex digits of the SHA-256 of the names, newline-joined:
+    * tells a reader whether two runs' `steady` arrays line up. */
+  private[graft] def namesHash(names: Seq[String]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(names.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(8).map(b => f"${b & 0xff}%02x").mkString
+
+  /** The final stdout line: `value` (the steady total), `n`, the
+    * `scalars` as given (already JSON-encoded values), `names_sha256`
+    * ([[namesHash]] of `names`) and `steady`, the per-query steady
+    * seconds to 2 decimals in the order of `names` (sorted by the
+    * caller). `BenchLineSpec` holds the real query set under
+    * [[MaxLineBytes]]. */
+  private[graft] def finalLine(
+      names: Seq[String], steady: Seq[Double], scalars: Seq[(String, String)]): String = {
+    require(names.length == steady.length, "one steady value per name")
+    val fields = Seq("metric" -> "\"total\"", "value" -> r3(steady.sum),
+      "unit" -> "\"sec\"", "n" -> names.length.toString) ++ scalars ++ Seq(
+      "names_sha256" -> jsonString(namesHash(names)),
+      "steady" -> steady.map(fmt(2, _)).mkString("[", ",", "]"))
+    fields.map { case (k, v) => jsonString(k) + ":" + v }.mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     val loadBefore = loadAvg1()
     val anchorMs = cpuAnchorMs()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     // warm the session (executor threads, parquet footer reads, codegen
     // of a trivial plan) so the first timed query isn't charged startup
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
@@ -141,39 +168,35 @@ object Bench {
         System.err.println(s"[bench] WARNING $name row counts differ across runs: ${counts.mkString("/")}")
       (name, cold(name)._1, steady, counts.exists(_ < 0) || counts.distinct.size != 1)
     }
-    // Locale.ROOT: a comma decimal separator would corrupt the JSON
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val steadyObj = results
-      .map { case (k, _, s, _) => "\"" + k + "\":" + r3(s) }.mkString("{", ",", "}")
+    val loadAfter = loadAvg1()
     val total = results.map(_._3).sum
     val totalCold = results.map(_._2).sum
-    val failed = results.filter(_._4).map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val loadAfter = loadAvg1()
+    val failed = results.filter(_._4).map(_._1)
     // the RECORDED flag (see the trigger comment above): final ratio
     // after the extra sweep had its chance to repair the steady floor
     val contendedFinal =
       totalCold / math.max(total, 1e-3) > 1.6 ||
         loadBefore > cpus.toDouble / 8
-    val loadPart =
-      s""""load_avg_before":${r3(loadBefore)},"load_avg_after":${r3(loadAfter)},""" +
-        s""""cpu_anchor_ms":${r3(anchorMs)},""" +
-        s""""cold_steady_ratio":${r3(totalCold / math.max(total, 1e-3))},""" +
-        s""""contended_suspect":$contendedFinal,"extra_sweeps":${s3.size},"""
-    // The FULL one-line JSON (per-query map included) is the LAST
-    // stdout line — r21 verdict: the driver's parser reads the final
-    // JSON line of the output, and rounds 18-21 all recorded
-    // "parsed": null because the last line was a compact summary
-    // WITHOUT the `queries` map (the full line before it fell off the
-    // tail capture). The summary (same scalars, no map) now prints
-    // FIRST, purely for humans reading a truncated tail; the full
-    // line is kept minimal (the r21 "timing" prose dropped) and is
-    // also written whole to BENCH_LOCAL.json so no capture window can
-    // ever be the only artifact.
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.length},"total_cold":${r3(totalCold)},"failed":$failed,$loadPart"sf":"$sfDir","queries":$steadyObj}"""
-    try java.nio.file.Files.writeString(java.nio.file.Path.of("BENCH_LOCAL.json"), line + "\n")
-    catch { case e: Exception => System.err.println(s"[bench] BENCH_LOCAL.json write failed: $e") }
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.length},"total_cold":${r3(totalCold)},"failed":$failed,$loadPart"sf":"$sfDir","note":"summary; the full line with the queries map follows LAST (and in BENCH_LOCAL.json)"}""")
+    val line = finalLine(names, results.map(_._3), Seq(
+      "total_cold" -> r3(totalCold),
+      "failed" -> failed.length.toString,
+      "cpus" -> cpus,
+      "load_avg_before" -> r3(loadBefore),
+      "load_avg_after" -> r3(loadAfter),
+      "cpu_anchor_ms" -> r3(anchorMs),
+      "cold_steady_ratio" -> r3(totalCold / math.max(total, 1e-3)),
+      "contended_suspect" -> contendedFinal.toString,
+      "extra_sweeps" -> s3.size.toString,
+      "sf" -> jsonString(sfDir)))
+    val record = line.dropRight(1) +
+      s""","names":${names.map(jsonString).mkString("[", ",", "]")}""" +
+      s""","failed_names":${failed.map(jsonString).mkString("[", ",", "]")}}"""
+    val localFile = s"BENCH_LOCAL_c$cpus.json"
+    try java.nio.file.Files.writeString(java.nio.file.Path.of(localFile), record + "\n")
+    catch { case e: Exception => System.err.println(s"[bench] $localFile write failed: $e") }
+    val bytes = line.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+    if (bytes > MaxLineBytes)
+      System.err.println(s"[bench] WARNING the final line is $bytes bytes > $MaxLineBytes")
     println(line)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage candidate-pair attribution for the two similarity-dedup
   * flagships at the gate-query parameters, across scale dirs — the
@@ -16,12 +15,7 @@ object BenchScaleAttrib {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft-sf1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
 
     def j(m: Map[String, Long]): String =
       m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")

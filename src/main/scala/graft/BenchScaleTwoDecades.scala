@@ -2,9 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Multi-decade scaling measurement: the [[BenchScale]] methodology
-  * (cold warm-up run, steady = min of two repeats, per-query log-log
-  * slope) over FOUR corpus sizes — sf0.01 → sf0.1 → an sf1-equivalent
+/** Multi-decade scaling measurement: per (query, corpus size), one
+  * cold run warms codegen and the steady number is the MINIMUM of two
+  * repeats (the [[Bench]] method: min over repeats of a deterministic
+  * query converges to the true cost from above); the per-query log-log
+  * slope log10(t(hi) / t(lo)) is then ≈ 1 for linear work, < 1 while
+  * fixed overhead dominates, and > ~1.3 where superlinear work (a pair
+  * enumeration, an unbounded window, a driver loop) creeps in. Run
+  * over FOUR corpus sizes — sf0.01 → sf0.1 → an sf1-equivalent
   * (10 replicas) → an sf2.6-equivalent (26 replicas, [[ScaleCorpus]]'s
   * rotation ceiling) — so each family shows two consecutive decade
   * slopes, and the worst families a third ~0.4-decade confirmation
@@ -47,7 +52,17 @@ object BenchScaleTwoDecades {
     * `worst_diagnostic` and excluded from the production headline. */
   val diagnosticQueries: Set[String] = Set("q_dedup_semantic_fixed")
 
-  val queries: Seq[String] = BenchScale.heavyQueries ++ Seq(
+  /** The heaviest dedup/decontamination gates by steady-state time
+    * in BENCH_r07.json, plus q_dedup_ngram_blocked (the corpus-scale
+    * sibling of the labeled-quadratic q_dedup_ngram, which is excluded
+    * by design: its all-pairs form is documented reference-scale), the
+    * iterative-CC path and the chunking generator. */
+  val heavyQueries: Seq[String] = Seq(
+    "q_dedup_minhash_cluster", "q_dedup_cross", "q_dedup_minhash",
+    "q_dedup_ngram_blocked", "q_decontaminate_bloom", "q_prep_mix",
+    "q_dedup_cluster", "q_chunk")
+
+  val queries: Seq[String] = heavyQueries ++ Seq(
     "q_dedup_exact", "q_dedup_semantic", "q_dedup_semantic_fixed",
     // q_simsearch_lsh (fixed 4-bit bands) ran here through r15's
     // sweep, which measured it saturating at sf1+ (all 64 buckets
@@ -168,13 +183,7 @@ object BenchScaleTwoDecades {
     // one division (r14 verdict #6)
     val anchorMs = Bench.cpuAnchorMs()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
 
     val qmap = SparkEntry.queries ++ extraThunks
     val missing = queries.filterNot(qmap.contains)

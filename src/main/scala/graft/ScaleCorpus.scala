@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthesize an sf-N-EQUIVALENT corpus by union-replicating a source
@@ -51,12 +50,7 @@ object ScaleCorpus {
       s"replicas must be in [1, 26] (got $replicas): only 26 distinct " +
         "alphabet rotations preserve cross-replica shingle disjointness")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
 
     val docs = Tables.load(spark, src, "documents")
     val docReplicas = (0 until replicas).map { k =>

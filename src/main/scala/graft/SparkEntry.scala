@@ -2635,8 +2635,8 @@ object SparkEntry {
 
     "q_pack" -> { (s, dir) =>
       // concat-and-chunk sequence packing: exact global token prefix
-      // sum via order-aligned buckets + per-bucket windows (never one
-      // global window partition), then 512-token shard assignment
+      // sum via order-aligned buckets + the PrefixSum operator (never
+      // one global window partition), then 512-token shard assignment
       val docs = t(s, dir, "documents")
         .withColumn("n_tokens", ops.TextOps.tokenCount(col("text")).cast(LongType))
       ops.Packing.assignShards(docs, "doc_id", "n_tokens", budget = 512, bucketWidth = 100)
@@ -3006,7 +3006,7 @@ object SparkEntry {
     "q_mixture_order" -> { (s, dir) =>
       // stride-scheduled mixture interleaving under the oracle: the
       // training ORDER for an en:de:zh = 4:1:2 mixture. Per-stratum
-      // hash-order ranks via the bucketed prefix-sum protocol,
+      // hash-order ranks via the bucketed prefix sum,
       // priority = (rank+1)/weight — rank+1 is double-exact and the
       // division one IEEE op, so DuckDB recomputes every priority
       // bit-identically from its own window ranks; es/fr are unlisted

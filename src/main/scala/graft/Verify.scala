@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,16 +11,10 @@ object Verify {
       case _ => sys.error("usage: Verify <sfDir> <outDir> [queryName ...]")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // write timestamps as TIMESTAMP_MICROS: the driver's pyarrow read
-      // of INT96 yields timestamp[ns], but DuckDB emits timestamp[us]
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
+    // write timestamps as TIMESTAMP_MICROS: the driver's pyarrow read
+    // of INT96 yields timestamp[ns], but DuckDB emits timestamp[us]
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     val ran = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }

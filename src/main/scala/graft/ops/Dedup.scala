@@ -169,31 +169,6 @@ object Dedup {
       .distinct()
   }
 
-  /** MinHash signature column (array<long> of `numHashes` minima over
-    * shingle hashes). Seeded by hash index — deterministic everywhere.
-    *
-    * HASH-FAMILY NOTE: this composable form derives the k-th hash as
-    * xxhash64(shingle, k) (multi-arg hashing), while the native
-    * [[graft.functions.MinHashSig]] uses Kirsch-Mitzenmacher
-    * h1 + k*h2 with wrapping long arithmetic — which built-ins cannot
-    * express (no public seed parameter for the second hash, and ANSI
-    * mode rejects wrapping `+`/`*`). Signatures from the three APIs are
-    * therefore NOT comparable across APIs; each is self-consistent, and
-    * all downstream screening compares signatures produced by one API.
-    *
-    * NOTE: nested higher-order functions run interpreted (no codegen) —
-    * fine for a handful of rows, but for corpus-scale signature
-    * computation use [[minhashSignatures]], whose explode+aggregate
-    * shape stays inside whole-stage codegen (~100x faster per row and
-    * parallel regardless of input file layout). */
-  def minhashSignature(textCol: Column, shingleN: Int, numHashes: Int): Column =
-    // shingle array once-bound: an unbound reference re-shingles the
-    // document per hash index (TextOps.once scaladoc)
-    TextOps.once(TextOps.shingles(textCol, shingleN)) { sh =>
-      transform(sequence(lit(0), lit(numHashes - 1)),
-        j => array_min(transform(sh, s => xxhash64(s, j))))
-    }
-
   /** Corpus-scale MinHash signatures: one row (id, __sig__) per input
     * row, via the native [[graft.functions.MinHashSig]] expression — a
     * single tight-loop pass per row inside whole-stage codegen, no
@@ -207,25 +182,6 @@ object Dedup {
       .select(col("__id__"),
         graft.functions.exprs.minhash_sig(
           shingler(col("__t__"), shingleN), numHashes).as("__sig__"))
-
-  /** The explode + N-aggregates formulation — the pure-built-in
-    * alternative (SURVEY §7.3 preference (a)): `numHashes` codegen'd
-    * min(xxhash64(shingle, j)) aggregates with map-side partials. Same
-    * scale shape, but hashes every shingle `numHashes` times and pays a
-    * shuffle; the native expression is ~an order of magnitude cheaper.
-    * Uses the same xxhash64(shingle, j) family as [[minhashSignature]]
-    * (interchangeable with it) but NOT with the native
-    * [[minhashSignatures]] — see the hash-family note above. */
-  def minhashSignaturesAgg(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    df.select(col(idCol).as("__id__"), col(textCol).as("__t__"))
-      .repartition(par)
-      .select(col("__id__"), explode(TextOps.shingles(col("__t__"), shingleN)).as("__sh__"))
-      .groupBy("__id__")
-      .agg(array((0 until numHashes).map(j => min(xxhash64(col("__sh__"), lit(j)))): _*).as("__sig__"))
-  }
 
   /** Candidate near-dup pairs via LSH banding of the MinHash signature.
     *

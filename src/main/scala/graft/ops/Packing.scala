@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -13,172 +12,48 @@ import org.apache.spark.sql.{Column, DataFrame}
   * entire corpus, the classic global-window bottleneck.
   *
   * Scale shape instead: order-aligned buckets (`orderCol div
-  * bucketWidth`), per-bucket partial sums pulled to the driver (one
-  * bounded row per bucket — guarded), exclusive prefix offsets
-  * broadcast back, and a per-BUCKET window cumsum (many small ordered
-  * partitions in parallel, never one global one). Deterministic and
-  * bit-exact vs the naive window for integral weights.
+  * bucketWidth`) and the [[graft.plans.PrefixSum]] operator — per-bucket
+  * sums in one pass over the bucket-partitioned rows, offsets folded on
+  * the driver (one bounded row per bucket), running totals in a second
+  * pass over the same partitions (many small ordered cells in parallel,
+  * never one global partition). Deterministic and bit-exact vs the
+  * naive window for integral weights.
   */
 object Packing {
 
-  /** Above this many (partition, bucket) cells the per-bucket offsets
-    * stop being driver material — choose a wider `bucketWidth`. */
-  private val maxBuckets = 4000000
-
-  /** The shared order-aligned-bucket exclusive-prefix-sum protocol
-    * behind [[globalCumsum]] (no partitions) and
-    * [[graft.ops.Sampling.sampleByTokenBudget]] (one running total per
-    * stratum): bucket rows by a prefix of their order key, pull ONE
-    * bounded sum row per (partition, bucket) cell to the driver,
-    * fold exclusive offsets (reset at each partition-key change —
-    * cells arrive partition-major), broadcast them back, and window
-    * only within (partition, bucket) — many small ordered partitions,
-    * never one global (or one per-stratum) window.
+  /** The shared exclusive prefix sum behind [[globalCumsum]] (no
+    * partitions) and the [[graft.ops.Sampling]] callers (one running
+    * total per stratum): rows are bucketed by a prefix of their order
+    * key and handed to [[graft.plans.PrefixSum]] with cells
+    * (partitionCols, bucket). The input runs once, inside the action.
     *
     * `bucket` must order consistently with `orderCols` (a bucket holds
-    * an order-contiguous range), and partition/bucket keys must be
-    * NON-NULL — a NULL there fails loudly: the driver fold would
-    * misplace the null cell AND the equality join would silently drop
-    * its rows while their weight still inflated later offsets. */
+    * an order-contiguous range). Partition, bucket and order keys must
+    * be NON-NULL and the order key UNIQUE — with `requireUniqueOrder =
+    * false` (the Sampling callers) tied keys are tolerated only as
+    * copies of one weight: duplicate keys there are SELF-ties (the order
+    * cols are (hash(key), key)), and the hostile-inputs contract is
+    * "tolerate, don't throw", but tied rows with DIFFERING weights make
+    * the budget/priority cut rerun-unstable (the arbitrary tie order
+    * decides which weight crosses the budget), so that case still
+    * raises. Copies that differ only in non-weight payload get their
+    * two positions in arbitrary per-copy assignment — callers that care
+    * must make the key unique (the documented composite-key rule). The
+    * layout paths (globalCumsum/packTokenIds/shards) stay strict: their
+    * tie order IS the output. Every check fails loudly when the action
+    * runs; none can be pruned away with `cum_before`. */
   private[ops] def bucketedCumsum(
       df: DataFrame, partitionCols: Seq[String], bucket: Column,
       orderCols: Seq[Column], weight: Column, what: String,
       requireUniqueOrder: Boolean = true): DataFrame = {
-    (Seq("__b__", "__ob__", "__off__", "cum_before") ++
-      partitionCols.map(c => s"__p_$c")).foreach(c =>
+    Seq("__b__", "cum_before").foreach(c =>
       require(!df.columns.contains(c), s"input already has a column named $c"))
-    val bucketed = df.withColumn("__b__", bucket)
-    val cellCols = partitionCols :+ "__b__"
-
-    // The bucket-sum pass carries ONLY the weight sum — it combines
-    // map-side, so the shuffle moves one partial row per
-    // (mapPartition, cell), never per corpus row. (A count_distinct
-    // here would be "the same scan" but would defeat the partial
-    // aggregate: mixed distinct forces one shuffled row per distinct
-    // order key ≈ per input row — a corpus-sized shuffle on the pass
-    // shared by every Packing/Sampling caller. Order-key uniqueness
-    // is checked inside the output window instead — see below.)
-    val sums = bucketed.groupBy(cellCols.map(col): _*)
-      .agg(sum(weight).as("__s__"))
-      .orderBy(cellCols.map(col): _*)
-      .limit(maxBuckets + 1)
-      .collect()
-    require(sums.length <= maxBuckets,
-      s"$what: more than $maxBuckets (partition, bucket) cells — widen the bucket")
-    val np = partitionCols.length
-    require(sums.forall(r => (0 to np).forall(!r.isNullAt(_))),
-      s"$what: a partition/order key contains NULL — keys must be non-null " +
-        "(a null key has no position in the running order)")
-
-    var prevKey: Seq[Any] = null
-    var acc = 0L
-    val offsetRows: Seq[org.apache.spark.sql.Row] = sums.toIndexedSeq.map { r =>
-      // VALUE equality for the partition-change test: a collected
-      // BinaryType cell is an Array[Byte], whose Seq equality is
-      // reference-based — without the wrap, every cell would look like
-      // a new partition and silently zero every offset
-      val raw = (0 until np).map(r.get)
-      val pk = raw.map {
-        case a: Array[Byte] => a.toSeq
-        case x => x
-      }
-      if (pk != prevKey) { prevKey = pk; acc = 0L }
-      // the Row carries the RAW values — createDataFrame needs
-      // Array[Byte] for BinaryType, the wrap is comparison-only
-      val row = org.apache.spark.sql.Row.fromSeq(raw ++ Seq(r.get(np), acc))
-      acc += r.getLong(np + 1)
-      row
-    }
-    val spark = df.sparkSession
-    val offSchema = org.apache.spark.sql.types.StructType(
-      partitionCols.map(c => bucketed.schema(c).copy(name = s"__p_$c")) ++ Seq(
-        bucketed.schema("__b__").copy(name = "__ob__"),
-        org.apache.spark.sql.types.StructField(
-          "__off__", org.apache.spark.sql.types.LongType, nullable = false)))
-    val offsetDf = broadcast(spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(offsetRows).asJava, offSchema))
-
-    val joinCond = (partitionCols.map(c => bucketed(c) === offsetDf(s"__p_$c")) :+
-      (bucketed("__b__") === offsetDf("__ob__"))).reduce(_ && _)
-    val w = Window.partitionBy(cellCols.map(col): _*).orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // Order-key contract enforcement, riding the window sort the
-    // prefix sum already pays (same partition + order spec ⇒ one
-    // Window exec, one sort — zero extra scan or shuffle):
-    //  - NULL order key → no position in the running order;
-    //  - duplicate order key → the within-cell tie order is arbitrary,
-    //    so the layout would not be rerun-stable. Duplicates always
-    //    share a bucket (same key ⇒ same bucket ⇒ same cell), so
-    //    adjacent-after-sort equality is a COMPLETE global uniqueness
-    //    check. Both raise from the executors at execution time
-    //    (fail-loud, distributed — no driver-side distinct pass).
-    // `requireUniqueOrder = false` (the Sampling callers): duplicate
-    // keys there are SELF-ties — the order cols are (hash(key), key),
-    // so two tied rows are copies of the same key, and the
-    // hostile-inputs contract is "tolerate, don't throw" — PROVIDED
-    // the copies carry the same weight: tied rows with DIFFERING
-    // weights make the budget/priority cut rerun-unstable (the
-    // arbitrary tie order decides which weight crosses the budget),
-    // so that case still raises. Copies that differ only in
-    // non-weight payload get their two positions in arbitrary
-    // per-copy assignment — callers that care must make the key
-    // unique (the documented composite-key rule). The layout paths
-    // (globalCumsum/packTokenIds/shards) stay strict: their tie
-    // order IS the output.
-    val wLag = Window.partitionBy(cellCols.map(col): _*).orderBy(orderCols: _*)
-    val nullKey = orderCols.map(_.isNull).reduce(_ || _)
-    val keysTie = orderCols.map(c => lag(c, 1).over(wLag) <=> c).reduce(_ && _)
-    val dupKey =
-      if (requireUniqueOrder) keysTie
-      else keysTie && !(lag(weight, 1).over(wLag) <=> weight)
-    val dupMsg =
-      if (requireUniqueOrder)
-        s"$what: duplicate order keys — the running order must be a total " +
-          "order, so the order key must be UNIQUE (use a row id that is a " +
-          "key, or a composite like doc_id*K+copy for oversampled corpora)"
-      else
-        s"$what: duplicate order keys with DIFFERING weights — tied rows " +
-          "must be identical copies (same weight), or the arbitrary tie " +
-          "order decides which weight crosses the budget and the cut is " +
-          "not rerun-stable (use a composite key for oversampled corpora)"
-    // The guard travels as its OWN column consumed by a Filter — not
-    // folded into cum_before — so a caller (or a future pruning
-    // change) that drops cum_before before the action cannot silently
-    // skip contract enforcement: a Filter's predicate column survives
-    // pruning by construction, and the optimizer cannot remove a
-    // filter it cannot prove always-true.
-    val orderGuard = when(nullKey, raise_error(lit(
-        s"$what: NULL order key — order keys must be NON-NULL " +
-          "(a null key has no position in the running order)")))
-      .when(dupKey, raise_error(lit(dupMsg)))
-      .otherwise(lit(0L))
-    // ONE select holding both window expressions (the prefix sum and
-    // the lag-based guard): same partition+order spec ⇒ Catalyst
-    // extracts them into ONE Window exec over ONE sort (the
-    // plan-pinned shuffle-free-guard contract)
-    val keep = bucketed.columns.map(bucketed(_))
-    bucketed.join(offsetDf, joinCond)
-      .select(keep ++ Seq(
-        (col("__off__") + coalesce(sum(weight).over(w), lit(0L))).as("cum_before"),
-        orderGuard.as("__guard__")): _*)
-      .filter(col("__guard__") === 0L)
-      .drop("__b__", "__guard__")
+    graft.plans.PrefixSum.add(df.withColumn("__b__", bucket),
+      partitionCols.map(col) :+ col("__b__"), orderCols, weight, what,
+      requireUniqueOrder)
+      .drop("__b__")
   }
 
-  /** Adds `cum_before` = sum of `weightCol` over all rows strictly
-    * before this one in `orderCol` order (exclusive prefix sum).
-    * `orderCol` must be integral, UNIQUE, and NON-NULL — both checked
-    * loudly (a null key has no position; duplicate keys make the tie
-    * order arbitrary, so the result would not be rerun-stable; the
-    * uniqueness check rides the output window's existing sort, not an
-    * extra scan, and raises at execution time); NULL weights count as 0
-    * (matching SQL SUM's null-skipping); weights should be
-    * non-negative (shard assignment uses truncating division).
-    *
-    * The input is executed twice — a column-pruned (orderCol,
-    * weightCol) pass for the bucket sums, then the full output plan —
-    * so it must be DETERMINISTIC (as any reused DataFrame must);
-    * localCheckpoint a non-deterministic source first. */
   /** Exact long floor-division bucket: `floorDiv(key, width)` without
     * the double rounding of `floor(col / width)` (a key above 2^53
     * would bucket a few keys off the true boundary — benign for the
@@ -192,6 +67,20 @@ object Packing {
     expr(s"(cast($orderCol AS BIGINT) - pmod(cast($orderCol AS BIGINT), " +
       s"$bucketWidth)) div $bucketWidth")
 
+  /** Adds `cum_before` = sum of `weightCol` over all rows strictly
+    * before this one in `orderCol` order (exclusive prefix sum).
+    * `orderCol` must be integral, UNIQUE, and NON-NULL — both checked
+    * loudly (a null key has no position; duplicate keys make the tie
+    * order arbitrary, so the result would not be rerun-stable; the
+    * uniqueness check rides the prefix sum's existing sort, not an
+    * extra scan, and raises at execution time); NULL weights count as 0
+    * (matching SQL SUM's null-skipping); weights should be
+    * non-negative (shard assignment uses truncating division).
+    *
+    * Lazy: building the frame runs nothing. The action runs the input
+    * once, through one exchange on the `bucketWidth`-wide order-key
+    * buckets, and [[graft.plans.PrefixSum]] reads that exchange's
+    * output twice (bucket sums, then running totals). */
   def globalCumsum(
       df: DataFrame, orderCol: String, weightCol: String,
       bucketWidth: Long = 100000): DataFrame = {
@@ -315,29 +204,17 @@ object Packing {
     *
     * `orderCol` inherits [[globalCumsum]]'s full contract: integral,
     * NON-NULL, and UNIQUE — duplicate order keys would make the
-    * within-bucket window tie order arbitrary, so the packed layout
-    * would not be rerun-stable. BOTH are checked loudly (a lag probe
-    * riding the output window's existing sort — zero extra scan or
-    * shuffle, raising from the executors at execution time); use a
-    * row id that is a key, as every gate does with doc_id, or a
-    * composite key when the corpus is oversampled (q_pack_epochs'
-    * doc_id·K+copy pattern).
-    * The input is also EXECUTED TWICE (the [[globalCumsum]] contract:
-    * a pruned (orderCol, size(ids)) pass for the bucket sums, then
-    * the full plan) — when `idsCol` comes from an expensive encoder,
-    * persist the input first: size(ids) forces the encode, so the
-    * pruned pass re-pays it (measured at sf0.1 asking for 2k merges,
-    * 107 learned, median of 9 interleaved runs on 4 cores:
-    * persist-first is 7% faster whole-op with the byte-scan id kernel,
-    * 14% with the String-decoding kernel it replaced; the gap grows
-    * with the encoder's cost per row — more distinct words or a larger
-    * model mean more word-cache misses, each a full greedy encode).
-    * The op stays lazy by design (an internal
-    * localCheckpoint would force the tensor through block storage on
-    * its way to a one-pass sink and hide the plan from audits).
+    * within-bucket tie order arbitrary, so the packed layout would not
+    * be rerun-stable. BOTH are checked loudly, in the prefix sum's own
+    * pass over its sorted cells (zero extra scan or shuffle, raising
+    * from the executors at execution time); use a row id that is a
+    * key, as every gate does with doc_id, or a composite key when the
+    * corpus is oversampled (q_pack_epochs' doc_id·K+copy pattern).
+    * The op is lazy and its input runs ONCE, inside the action: an
+    * expensive `idsCol` encoder needs no persist.
     *
     * Scale shape: the exclusive prefix sum is [[globalCumsum]]'s
-    * order-aligned-bucket protocol (never one global window); each
+    * bucketed [[graft.plans.PrefixSum]] (never one global window); each
     * document then EXPLODES into at most ceil(w/seqLen)+1
     * (sequence, piece) slices — pure per-row arithmetic — and one
     * groupBy(seq_id) assembles sequences whose per-group state is
@@ -577,11 +454,10 @@ object Packing {
     *     [[assignShards]] exactness rule)
     *
     * Scale shape: the rank is an exclusive prefix COUNT through
-    * [[bucketedCumsum]]'s order-aligned-bucket protocol — the hash
-    * prefix's own leading `bucketHexDigits` digits are the bucket (a
-    * hex-string bucket orders consistently with the full hash by
-    * construction), so the permutation costs per-bucket window sorts,
-    * never one global sort. 16^2 = 256 buckets at the default; raise
+    * [[bucketedCumsum]] — the hash prefix's own leading
+    * `bucketHexDigits` digits are the bucket (a hex-string bucket
+    * orders consistently with the full hash by construction), so the
+    * permutation costs per-bucket sorts, never one global sort. 16^2 = 256 buckets at the default; raise
     * to 3-4 digits (4096/65536 buckets) for billion-sequence sets.
     * `idCol` must be non-null ([[bucketedCumsum]] fails loudly). A
     * writer partitions by `shard_id` and sorts by `rank` within each

@@ -1,6 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Partition-count pinning for WORK-heavy exchanges (optimization
   * guide §2.5): AQE's coalescing sizes post-shuffle partitions by
@@ -27,13 +30,23 @@ object Par {
     catch { case _: Exception => ss.sparkContext.defaultParallelism }
   }
 
-  /** Planned physical partition count of `df` (no execution — the
-    * physical plan is compiled, not run). -1 when it cannot be known
-    * (streaming frames have no static partitioning). */
+  /** Planned physical partition count of `df`, read without running
+    * anything. -1 when it cannot be known so: a streaming frame (no
+    * static partitioning), or a physical plan holding an exchange, an
+    * adaptive plan, a cached scan or a subquery — building the RDD of
+    * any of those runs their upstream jobs (AQE materializes every
+    * shuffle stage to learn the final partition count). A plan of
+    * narrow operators over its scans builds its RDD without a job. */
   private def plannedPartitions(df: DataFrame): Int =
     if (df.isStreaming) -1
-    else try df.queryExecution.toRdd.getNumPartitions
-    catch { case _: Exception => -1 }
+    else try {
+      val plan = df.queryExecution.executedPlan
+      val runsJobs = plan.exists {
+        case _: Exchange | _: AdaptiveSparkPlanExec | _: InMemoryTableScanExec => true
+        case p => p.subqueries.nonEmpty
+      }
+      if (runsJobs) -1 else df.queryExecution.toRdd.getNumPartitions
+    } catch { case _: Exception => -1 }
 
   /** Keyed repartition to the pinned count ONLY when the input's
     * planned parallelism is under a QUARTER of it — the conditional

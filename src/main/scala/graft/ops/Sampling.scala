@@ -111,12 +111,11 @@ object Sampling {
     * holding most of the corpus. Instead, the leading `bucketHexDigits`
     * of the decision hash split every stratum into 16^digits
     * hash-ordered buckets ([[graft.ops.Packing.globalCumsum]]'s
-    * order-aligned-bucket trick, keyed per stratum): per-bucket sums
-    * collect to the driver (bounded, guarded), exclusive offsets
-    * broadcast back, and the windows run per (stratum, bucket) — many
-    * small ordered partitions, never one per stratum. The input plan
-    * executes twice (bucket-sum pass + output pass), so it must be
-    * deterministic — localCheckpoint a non-deterministic source first.
+    * order-aligned-bucket trick, keyed per stratum), and
+    * [[graft.plans.PrefixSum]] sums and numbers each (stratum, bucket)
+    * cell in its own task — many small ordered cells, never one
+    * partition per stratum. The op is lazy; the action runs the input
+    * once, through one exchange on the cells.
     *
     * `key` must be non-null (it has no hash position); NULL weights
     * count as 0, like SQL SUM. Duplicate keys are tolerated ONLY as
@@ -142,24 +141,11 @@ object Sampling {
       case ((label, b), els) => when(col(stratumCol) === label, lit(b)).otherwise(els)
     }
     // budget-less strata leave before any aggregation work; the
-    // prefix-sum protocol itself is Packing's (one audited
-    // implementation — including the loud null-key guard: a null key
-    // hashes to a null bucket, which would silently misplace weight).
-    // LAZY localCheckpoint (r22, guide §5): the two-pass protocol
-    // executes its input twice (bucket-sum pass + output pass), which
-    // re-ran the whole upstream chain — decontamination, quality
-    // bucketing, BPE token counting — once per pass (measured:
-    // q_prep_mix 2.06s, q_sample_budget_bpe 0.63s, both paying their
-    // dominant upstream twice). The budget-filtered slice materializes
-    // as a side effect of the FIRST pass (lazy — no extra action) and
-    // the output pass reads the stored blocks; the blocks are freed by
-    // the ContextCleaner when the frame goes unreferenced (the
-    // LshBlocking discipline). Trade at scale: store the shipped slice
-    // once instead of computing its upstream twice — the same trade
-    // packTokenIds already makes for the same protocol.
+    // prefix sum itself is Packing's (one audited implementation —
+    // including the loud null-key guard: a null key hashes to a null
+    // bucket, which would silently misplace weight)
     val hashed = df.filter(budget.isNotNull)
       .withColumn("__tbh__", hashPrefix(key, salt))
-      .localCheckpoint(false)
     Packing.bucketedCumsum(
       hashed, Seq(stratumCol),
       substring(col("__tbh__"), 1, bucketHexDigits),
@@ -368,8 +354,8 @@ object Sampling {
     * any prefix holds each stratum's share in ratio of the weights
     * (±1 document). Unlisted strata are dropped (a mixture lists what
     * ships). Scale shape: the rank is the bucketed exclusive
-    * prefix-sum protocol at weight 1 ([[graft.ops.Packing]]'s — per
-    * (stratum, bucket) windows, never one window per stratum), the
+    * prefix sum at weight 1 ([[graft.ops.Packing]]'s — per
+    * (stratum, bucket) cells, never one partition per stratum), the
     * division a codegen'd projection; the SORT is the consumer's
     * (usually per-shard after [[graft.ops.Packing.assignShards]], or a
     * global range sort when a single serial order is really wanted).

@@ -170,16 +170,6 @@ object VectorOps {
     Seq.fill(nPlanes)(Seq.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Sign-LSH bit signature (array<int> of 0/1) of a vector column.
-    * Interpreted (nested higher-order functions) — fine for a few rows;
-    * corpus-scale signature computation goes through [[lshSignatures]].
-    */
-  def lshSignature(v: Column, planes: Seq[Seq[Double]]): Column = {
-    val h = typedLit(planes)
-    transform(sequence(lit(0), lit(planes.size - 1)),
-      i => when(dot(v, element_at(h, i + 1)) >= 0, lit(1)).otherwise(lit(0)))
-  }
-
   /** Corpus-scale sign-LSH signatures: (id, vector, signature) rows via
     * the native [[graft.functions.SignLshSig]] expression — one
     * codegen'd pass over the vector per plane, zero shuffles beyond the

@@ -146,25 +146,30 @@ case class AsOfJoinExec(
   }
 }
 
-/** SparkSessionExtensions entry point: build sessions with
+/** SparkSessionExtensions entry point for graft's plan operators
+  * ([[AsOfJoin]], [[PrefixSum]]): build sessions with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` (or
   * `.withExtensions(new GraftExtensions)`). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+}
+
+object GraftExtensions {
+  private val strategies: Seq[SparkStrategy] = Seq(AsOfJoinStrategy, PrefixSumStrategy)
+
+  /** Ensure the strategies are available on `spark` even when the
+    * session was built without [[GraftExtensions]] (idempotent). */
+  def install(spark: SparkSession): Unit = {
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val missing = strategies.filterNot(cs.experimental.extraStrategies.contains)
+    if (missing.nonEmpty)
+      cs.experimental.extraStrategies = cs.experimental.extraStrategies ++ missing
+  }
 }
 
 /** Public as-of join API over DataFrames. */
 object AsOf {
-
-  /** Ensure the strategy is available on `spark` even when the session
-    * was built without [[GraftExtensions]] (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cs.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      cs.experimental.extraStrategies =
-        cs.experimental.extraStrategies :+ AsOfJoinStrategy
-  }
 
   /** For each left row: columns of the right row with equal keys
     * (`leftOn(i) == rightOn(i)`) and the greatest `rightTimeCol`
@@ -176,7 +181,7 @@ object AsOf {
       leftOn: Seq[String], rightOn: Seq[String],
       leftTimeCol: String, rightTimeCol: String): DataFrame = {
     require(leftOn.length == rightOn.length, "key lists must align")
-    install(leftDf.sparkSession)
+    GraftExtensions.install(leftDf.sparkSession)
     val lp = Bridge.analyzed(leftDf)
     val rp = Bridge.analyzed(rightDf)
     def attr(p: LogicalPlan, n: String): Attribute =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.StringType
 
 import java.io.{File, OutputStreamWriter, PrintWriter}
 import java.nio.charset.StandardCharsets
+import java.time.LocalDate
 
 /** Public sink contract (reference `Sink.groovy:5-12`:
   * name/attach/result/close). The declarative equivalent of
@@ -113,7 +114,12 @@ final class JsonFileSink(
   * (`XlsxSink.groovy:44-63`): strings as inline strings, numerics as
   * native number cells, booleans as boolean cells, dates/timestamps as
   * real date cells (day serials styled with builtin formats 14/22).
-  * One documented fix over the reference: a header row is written
+  * Excel's first date is 1900-01-01: an earlier date or timestamp has
+  * no day serial (written, it would be a negative number that Excel
+  * shows as `####` and a reader takes for a number), so the write
+  * refuses it with an IllegalArgumentException naming its column and
+  * row, and leaves no file behind — cast such a column to string to
+  * keep it. One documented fix over the reference: a header row is written
   * first — the reference's sink omits headers, which its own
   * XlsxSource then misreads (first DATA row becomes the headers).
   */
@@ -171,16 +177,30 @@ final class XlsxFileSink(
     sb.toString
   }
 
-  private def cellXml(ref: String, v: Any): String = v match {
+  /** `d`, or the refusal of a date Excel cannot store (see above). */
+  private def excelDay(d: LocalDate, shown: Any, column: String, row: Int): LocalDate = {
+    if (d.isBefore(LocalDate.of(1900, 1, 1)))
+      throw new IllegalArgumentException(
+        s"$name: column '$column', row $row (sheet row ${row + 1}): $shown is " +
+          "before 1900-01-01, which Excel cannot store as a date — cast the " +
+          "column to string to keep it")
+    d
+  }
+
+  /** One cell; `column` and `row` (1-based data row) name it in errors. */
+  private def cellXml(ref: String, v: Any, column: String = "", row: Int = 0): String = v match {
     case null => ""
     case s: String =>
       s"""<c r="$ref" t="inlineStr"><is><t xml:space="preserve">${esc(s)}</t></is></c>"""
     case b: Boolean =>
       s"""<c r="$ref" t="b"><v>${if (b) 1 else 0}</v></c>"""
     case d: java.sql.Date =>
-      s"""<c r="$ref" s="1"><v>${graft.sources.XlsxParser.toSerial(d.toLocalDate)}</v></c>"""
+      val day = excelDay(d.toLocalDate, d, column, row)
+      s"""<c r="$ref" s="1"><v>${graft.sources.XlsxParser.toSerial(day)}</v></c>"""
     case t: java.sql.Timestamp =>
-      s"""<c r="$ref" s="2"><v>${graft.sources.XlsxParser.toSerial(t.toLocalDateTime)}</v></c>"""
+      val ts = t.toLocalDateTime
+      excelDay(ts.toLocalDate, t, column, row)
+      s"""<c r="$ref" s="2"><v>${graft.sources.XlsxParser.toSerial(ts)}</v></c>"""
     case d: java.math.BigDecimal =>
       s"""<c r="$ref"><v>${d.toPlainString}</v></c>"""
     case n @ (_: Int | _: Long | _: Short | _: Byte | _: Double | _: Float) =>
@@ -201,6 +221,7 @@ final class XlsxFileSink(
       zip.write(content.getBytes(StandardCharsets.UTF_8))
       zip.closeEntry()
     }
+    var written = false
     try {
       val main = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
       part("[Content_Types].xml",
@@ -250,13 +271,18 @@ final class XlsxFileSink(
       while (it.hasNext) {
         val row = it.next()
         w.write(cols.indices.map(i =>
-          cellXml(s"${colRef(i)}$r", row.get(i))).mkString(s"""<row r="$r">""", "", "</row>"))
+          cellXml(s"${colRef(i)}$r", row.get(i), cols(i), r - 1))
+          .mkString(s"""<row r="$r">""", "", "</row>"))
         r += 1
       }
       w.write("</sheetData></worksheet>")
       w.flush()
       zip.closeEntry()
-    } finally zip.close()
+      written = true
+    } finally {
+      zip.close()
+      if (!written) file.delete()
+    }
     Map("file" -> path, "filename" -> file.getAbsolutePath)
   }
 }

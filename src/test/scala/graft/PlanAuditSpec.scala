@@ -3,7 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression guards for the plan properties the gate queries rely on:
@@ -28,13 +33,40 @@ class PlanAuditSpec extends AnyFunSuite {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.executedPlan
   }
 
-  private def planString(p: SparkPlan): String = {
-    def unwrap(x: SparkPlan): Seq[SparkPlan] = x match {
-      case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
-      case q: QueryStageExec => unwrap(q.plan)
-      case other => other +: other.children.flatMap(unwrap)
+  /** Every node of a physical plan, through AQE wrappers and stages. */
+  private def nodes(x: SparkPlan): Seq[SparkPlan] = x match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  private def planString(p: SparkPlan): String =
+    nodes(p).map(_.verboseString(1000)).mkString("\n")
+
+  /** The prefix-sum contract (Packing/Sampling): exactly `n`
+    * PrefixSumExec; the exchange under each hash-partitions on exactly
+    * `cellKeys` (the bucket included) — never a range or single
+    * partition, which would be the global (or per-stratum) ordered
+    * partition the bucketing exists to avoid; no unpartitioned Window
+    * anywhere; no pair joins. */
+  private def assertPrefixSums(p: SparkPlan, cellKeys: Seq[String], n: Int = 1): Unit = {
+    val all = nodes(p)
+    val sums = all.collect { case x: graft.plans.PrefixSumExec => x }
+    assert(sums.length == n, s"expected $n PrefixSum exec(s):\n${planString(p)}")
+    sums.foreach { x =>
+      val ex = nodes(x.child).collectFirst { case e: ShuffleExchangeExec => e }
+        .getOrElse(fail(s"no exchange under the prefix sum:\n${planString(p)}"))
+      ex.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.map { case a: Attribute => a.name; case e => e.sql } == cellKeys,
+            s"prefix-sum exchange not on the cells $cellKeys: $h")
+        case other => fail(s"prefix-sum exchange is $other, not hash on the cells")
+      }
     }
-    unwrap(p).map(_.verboseString(1000)).mkString("\n")
+    all.collect { case w: WindowExec => w }.foreach(w =>
+      assert(w.partitionSpec.nonEmpty, s"unpartitioned (global) window: $w"))
+    assert(!all.exists(x => x.isInstanceOf[CartesianProductExec] ||
+      x.isInstanceOf[BroadcastNestedLoopJoinExec]), s"pair enumeration in:\n${planString(p)}")
   }
 
   test("q1_agg scan is pruned to exactly the referenced lineitem columns") {
@@ -214,26 +246,18 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q_pack's prefix sum windows are bucket-partitioned, never global") {
-    val s = planString(executed(SparkEntry.queries("q_pack")(spark, dir)))
-    // a window spec without partitioning pulls the whole corpus into
-    // one task — the exact bottleneck Packing.globalCumsum exists to
-    // avoid; every window here must be partitioned on the bucket
-    val windows = s.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-    assert(windows.nonEmpty, s"no window in plan:\n$s")
-    windows.foreach(l =>
-      assert(l.contains("__b__"), s"unpartitioned (global) window: $l"))
+    // one global ordered partition pulls the whole corpus into one
+    // task — the exact bottleneck Packing.globalCumsum exists to
+    // avoid; the prefix sum's cells ("windows") are the buckets
+    assertPrefixSums(executed(SparkEntry.queries("q_pack")(spark, dir)), Seq("__b__"))
   }
 
   test("q_sample_budget's prefix sum windows are (stratum, bucket)-partitioned, never per-stratum") {
-    val s = planString(executed(SparkEntry.queries("q_sample_budget")(spark, dir)))
-    // one window partition per stratum would hold most of a real
-    // mixture's corpus in one task; every window must also carry the
-    // hash bucket, and the offsets must fold back via broadcast
-    val windows = s.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-    assert(windows.nonEmpty, s"no window in plan:\n$s")
-    windows.foreach(l =>
-      assert(l.contains("__b__"), s"window not bucket-partitioned: $l"))
-    assert(s.contains("BroadcastHashJoin"), s"offsets not broadcast:\n$s")
+    // one partition per stratum would hold most of a real mixture's
+    // corpus in one task; the prefix sum's cells must also carry the
+    // hash bucket
+    assertPrefixSums(executed(SparkEntry.queries("q_sample_budget")(spark, dir)),
+      Seq("lang", "__b__"))
   }
 
   test("q_domain_stats prunes the scan and never enumerates pairs") {
@@ -363,18 +387,13 @@ class PlanAuditSpec extends AnyFunSuite {
     val df = ops.Packing.packTokenIds(
       ops.Bpe.withTokenIds(docs, "text", "__tids__", bc),
       "doc_id", "__tids__", seqLen = 256, padId = 0)
-    val s = planString(executed(df))
-    // the prefix-sum window must stay per-bucket (never one global
-    // ordered partition) with the offsets broadcast back
-    val windows = s.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-    assert(windows.nonEmpty, s"no window in plan:\n$s")
-    windows.foreach(l =>
-      assert(l.contains("__b__"), s"window not bucket-partitioned: $l"))
-    assert(s.contains("BroadcastHashJoin"), s"offsets not broadcast:\n$s")
-    assert(!s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoopJoin"),
-      s"pair enumeration in:\n$s")
-    // id payload movement: the window partitioning + the groupBy(seq_id)
-    // regroup — hash exchanges only, and no more than those two shapes
+    val p = executed(df)
+    val s = planString(p)
+    // the prefix sum must stay per-bucket (never one global ordered
+    // partition), and no pair joins
+    assertPrefixSums(p, Seq("__b__"))
+    // id payload movement: the prefix sum's bucket partitioning + the
+    // groupBy(seq_id) regroup — hash exchanges only
     val exchanges = s.linesIterator.filter(_.trim.startsWith("Exchange")).toSeq
     assert(exchanges.nonEmpty && exchanges.forall(_.contains("hashpartitioning")),
       s"unexpected exchange shape (range/single-partition would be the global-window bottleneck):\n$s")
@@ -384,14 +403,11 @@ class PlanAuditSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val df = ops.Packing.assignShuffledShards(
       docs.select("doc_id", "lang"), "doc_id", ":pa", rowsPerShard = 64)
-    val s = planString(executed(df))
-    // the rank is a per-bucket window cumsum (hash-prefix buckets),
-    // never one global ordered partition
-    val windows = s.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-    assert(windows.nonEmpty, s"no window in plan:\n$s")
-    windows.foreach(l =>
-      assert(l.contains("__b__"), s"window not bucket-partitioned: $l"))
-    assert(s.contains("BroadcastHashJoin"), s"offsets not broadcast:\n$s")
+    val p = executed(df)
+    val s = planString(p)
+    // the rank is a per-bucket prefix count (hash-prefix buckets, the
+    // offsets broadcast to the tasks), never one global ordered partition
+    assertPrefixSums(p, Seq("__b__"))
     // a rangepartitioning exchange would BE the global sort this op
     // exists to avoid; singlepartition would be the same bottleneck
     val exchanges = s.linesIterator.filter(_.trim.startsWith("Exchange")).toSeq
@@ -400,21 +416,17 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q_sample_budget_bpe keeps the bucket-partitioned windows under the real-token weight") {
-    val s = planString(executed(SparkEntry.queries("q_sample_budget_bpe")(spark, dir)))
-    val windows = s.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-    assert(windows.nonEmpty, s"no window in plan:\n$s")
-    windows.foreach(l =>
-      assert(l.contains("__b__"), s"window not bucket-partitioned: $l"))
-    assert(s.contains("BroadcastHashJoin"), s"offsets not broadcast:\n$s")
+    // the (stratum, bucket) cells of the prefix sum ("windows") hold
+    // under the BPE weight too
+    assertPrefixSums(executed(SparkEntry.queries("q_sample_budget_bpe")(spark, dir)),
+      Seq("lang", "__b__"))
   }
 
   test("q_mixture_order ranks via (stratum, bucket) windows with broadcast offsets") {
-    val s = planString(executed(SparkEntry.queries("q_mixture_order")(spark, dir)))
-    val windows = s.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-    assert(windows.nonEmpty, s"no window in plan:\n$s")
-    windows.foreach(l =>
-      assert(l.contains("__b__"), s"window not bucket-partitioned: $l"))
-    assert(s.contains("BroadcastHashJoin"), s"offsets not broadcast:\n$s")
+    // the rank is a prefix count over (stratum, bucket) cells
+    // ("windows"); the per-cell offsets reach the tasks as a broadcast
+    assertPrefixSums(executed(SparkEntry.queries("q_mixture_order")(spark, dir)),
+      Seq("lang", "__b__"))
   }
 
   test("q_warc_linkage stays equi-join shaped — no nested loop, no cartesian") {

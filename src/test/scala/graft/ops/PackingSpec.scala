@@ -119,13 +119,15 @@ class PackingSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 0L, 2L -> 5L, 3L -> 5L))
     val withNullId = Seq((Some(1L), 5L), (None, 3L)).toDF("id", "w")
+    // building the frame runs nothing; the driver's cell check raises
+    // when the action runs
     val e = intercept[IllegalArgumentException](
-      Packing.globalCumsum(withNullId, "id", "w", 2))
+      Packing.globalCumsum(withNullId, "id", "w", 2).collect())
     assert(e.getMessage.contains("NULL"))
   }
 
   // The order-key contract raises from the executors at execution
-  // time (the check rides the output window); the message we planted
+  // time (the check rides the prefix sum's pass); the message we planted
   // sits somewhere down the task-failure cause chain.
   private def execFailureMessage(body: => Unit): String = {
     val e = intercept[Throwable](body)
@@ -167,7 +169,7 @@ class PackingSpec extends AnyFunSuite {
       Packing.globalCumsum(dup, "id", "w", 100).drop("cum_before").collect())
     assert(m.contains("UNIQUE"), m)
     val nul = Seq((Some(1L), 5L), (None, 3L)).toDF("id", "w")
-    // (the driver-side bucket-sum pass catches the null first — either
+    // (the driver-side cell check catches the null first — either
     // guard layer firing is contract-satisfying)
     val m2 = execFailureMessage(
       Packing.globalCumsum(nul, "id", "w", 100).drop("cum_before").collect())
@@ -178,11 +180,10 @@ class PackingSpec extends AnyFunSuite {
       .drop("cum_before").count() == 3)
   }
 
-  test("the order-key guard rides the prefix-sum window: ONE Window exec, ONE sort") {
-    // the shuffle-free claim under audit: the lag-based duplicate
-    // probe shares the prefix sum's (partition, order) spec, so
-    // Catalyst must plan ONE WindowExec over ONE sort — a second
-    // Window or Sort would mean the guard bought its check with an
+  test("the order-key guard rides the prefix sum: ONE PrefixSum exec, ONE sort") {
+    // the shuffle-free claim under audit: the null/duplicate probe runs
+    // in the prefix sum's own pass over its sorted cells — a Window or
+    // a second Sort would mean the guard bought its check with an
     // extra pass over the corpus
     val clean = Seq((1L, 5L), (2L, 3L), (3L, 7L), (4L, 2L)).toDF("id", "w")
     val out = Packing.globalCumsum(clean, "id", "w", 2)
@@ -192,11 +193,46 @@ class PackingSpec extends AnyFunSuite {
     val plan = out.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
+    val sums = plan.linesIterator.count(_.contains("PrefixSum cells="))
     val windows = plan.linesIterator.count(_.contains("Window ["))
     val sorts = plan.linesIterator.count(l =>
       l.contains("Sort [") && !l.contains("SortMergeJoin"))
-    assert(windows == 1, s"expected exactly one Window exec:\n$plan")
-    assert(sorts == 1, s"expected exactly one Sort (the window's):\n$plan")
+    assert(sums == 1, s"expected exactly one PrefixSum exec:\n$plan")
+    assert(windows == 0, s"expected no Window exec:\n$plan")
+    assert(sorts == 1, s"expected exactly one Sort (the prefix sum's):\n$plan")
+  }
+
+  test("packTokenIds: the upstream runs once per input row, not once per pass") {
+    // the prefix sum reads its exchange twice (cell sums, then running
+    // totals); the rows above the exchange — an encoder in a real flow
+    // — must be computed once
+    val sc = spark.sparkContext
+    val evals = sc.longAccumulator("pack-upstream-evals")
+    val n = 1000
+    val rdd = sc.parallelize(0 until n, 4).map { i =>
+      evals.add(1L)
+      org.apache.spark.sql.Row(i.toLong, Seq.fill(1 + i % 7)(i % 50))
+    }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("ids",
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.IntegerType))))
+    val seqs = Packing.packTokenIds(spark.createDataFrame(rdd, schema), "id", "ids",
+      seqLen = 16).collect()
+    val tokens = (0 until n).map(i => 1 + i % 7).sum
+    assert(seqs.length == (tokens + 15) / 16)
+    assert(evals.value == n.toLong,
+      s"upstream evaluated ${evals.value} rows for a $n-row input")
+  }
+
+  test("globalCumsum output joins with itself") {
+    // the analyzer renews the exprIds of a self-joined side; cum_before
+    // must be one it can renew
+    val c = Packing.globalCumsum(df, "id", "w", 2)
+    val pairs = c.as("a").join(c.as("b"), col("a.id") === col("b.id"))
+      .select(col("a.cum_before"), col("b.cum_before")).collect()
+    assert(pairs.length == 7 && pairs.forall(r => r.getLong(0) == r.getLong(1)))
+    assert(pairs.map(_.getLong(0)).toSet == naive.values.toSet)
   }
 
   test("NULL in a secondary order column fails with the NULL-key message") {

@@ -133,13 +133,11 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("sampleByTokenBudget: the upstream chain executes ONCE, not once per pass") {
-    // the r22 scoped-materialization contract (guide §5): the bucketed
-    // prefix-sum protocol is two passes (bucket-sum action + output
-    // plan), and before the lazy localCheckpoint each pass re-ran the
-    // WHOLE upstream — q_prep_mix paid its decontaminate+bucket+BPE
-    // chain twice. An accumulator-bumping upstream proves the input
-    // rows are now computed exactly once and the second pass reads the
-    // checkpointed blocks.
+    // the prefix sum makes two passes (cell sums, then running totals),
+    // both over its own exchange's output: the upstream — q_prep_mix's
+    // decontaminate+bucket+BPE chain — runs once, in that exchange's
+    // map stage, with no checkpoint or persist. An accumulator-bumping
+    // upstream proves the input rows are computed exactly once.
     val sc = spark.sparkContext
     val evals = sc.longAccumulator("upstream-evals")
     val rdd = sc.parallelize(0L until 1000L, 4).map { i =>
@@ -403,9 +401,8 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("sampleByTokenBudget: a null key fails loudly instead of corrupting offsets") {
-    // a null key hashes to a null bucket: the driver fold would count
-    // its weight into every later offset while the join dropped the
-    // row — the shared guard in Packing.bucketedCumsum must fire
+    // a null key hashes to a null bucket, a cell with no place in the
+    // running order — the prefix sum's driver-side cell check must fire
     val df = Seq((Option(1L), "a", 10L), (Option.empty[Long], "a", 10L))
       .toDF("k", "s", "tok")
     val e = intercept[IllegalArgumentException] {

@@ -143,6 +143,29 @@ class XlsxSpec extends AnyFunSuite {
     assert(byName("Dinner Plate").getString(2) == "36") // integral double undecorated
   }
 
+  test("a date or timestamp before 1900 is refused, naming its column and row") {
+    // Excel has no serial before 1900-01-01: the sink used to write a
+    // negative one, shown as #### and read back as the number -18260
+    import spark.implicits._
+    val dir = tmp
+    val out = dir.resolve("old.xlsx")
+    val dates = Seq(("a", "1900-01-01"), ("b", "1850-01-01")).toDF("k", "born")
+      .withColumn("born", to_date(col("born")))
+    val e = intercept[IllegalArgumentException](
+      new XlsxFileSink(out.toString).write(dates.orderBy("k")))
+    assert(e.getMessage.contains("column 'born', row 2"), e.getMessage)
+    assert(e.getMessage.contains("1850-01-01"), e.getMessage)
+    assert(!Files.exists(out), "a refused write must not leave a workbook behind")
+    val stamps = Seq(("a", "1899-06-30 12:00:00")).toDF("k", "at")
+      .withColumn("at", to_timestamp(col("at")))
+    val e2 = intercept[IllegalArgumentException](
+      new XlsxFileSink(out.toString).write(stamps))
+    assert(e2.getMessage.contains("column 'at', row 1"), e2.getMessage)
+    // the first day Excel can store round-trips as a date
+    new XlsxFileSink(out.toString).write(dates.filter(col("k") === "a"))
+    assert(Xlsx.read(spark, out.toString).toDF.head().getString(1) == "1900-01-01")
+  }
+
   test("nulls, sheet names, and missing sheets") {
     import spark.implicits._
     val dir = tmp
