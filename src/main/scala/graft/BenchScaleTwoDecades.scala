@@ -119,8 +119,8 @@ object BenchScaleTwoDecades {
         ops.VectorOps.lshNeighborsAuto(
           Tables.load(s, dir, "embeddings"), "vec_id", "embedding")),
       // the full tensor pipeline at corpus scale: encode to ids +
-      // bucketed prefix sum + piece explode + one groupBy into
-      // 1024-id fixed-length sequences
+      // 1024-id fixed-length sequences cut inside the bucketed prefix
+      // sum
       "q_pack_ids_full" -> ((s, dir) =>
         ops.Packing.packTokenIds(
           ops.Bpe.withTokenIds(Tables.load(s, dir, "documents"),

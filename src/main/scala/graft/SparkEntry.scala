@@ -4864,14 +4864,16 @@ ORDER BY doc_id"""
       require(p.waitFor() == 0, s"gpg ${args.mkString(" ")} failed: $err")
       out
     }
-    val params = home.resolve("gen.txt")
-    java.nio.file.Files.writeString(params,
-      "%no-protection\nKey-Type: RSA\nKey-Length: 2048\n" +
-        "Name-Real: Graft Gate\nName-Email: gate@graft.test\n" +
-        "Expire-Date: 0\n%commit\n")
-    gpg("--batch", "--quiet", "--gen-key", params.toString)
-    (gpg("--batch", "--export", "--armor", "gate@graft.test"),
-      gpg("--batch", "--export-secret-keys", "--armor", "gate@graft.test"))
+    try {
+      val params = home.resolve("gen.txt")
+      java.nio.file.Files.writeString(params,
+        "%no-protection\nKey-Type: RSA\nKey-Length: 2048\n" +
+          "Name-Real: Graft Gate\nName-Email: gate@graft.test\n" +
+          "Expire-Date: 0\n%commit\n")
+      gpg("--batch", "--quiet", "--gen-key", params.toString)
+      (gpg("--batch", "--export", "--armor", "gate@graft.test"),
+        gpg("--batch", "--export-secret-keys", "--armor", "gate@graft.test"))
+    } finally ops.Pgp.tearDownHome(home)
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
 import org.apache.spark.sql.{Column, DataFrame}
 
 /** Sequence packing for training shards: documents are conceptually
@@ -17,7 +18,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * the driver (one bounded row per bucket), running totals in a second
   * pass over the same partitions (many small ordered cells in parallel,
   * never one global partition). Deterministic and bit-exact vs the
-  * naive window for integral weights.
+  * naive window for integral weights. [[packTokenIds]] cuts its
+  * fixed-length sequences in that second pass too, so its token ids
+  * cross one exchange and are never regrouped.
   */
 object Packing {
 
@@ -189,7 +192,8 @@ object Packing {
     *     sequence)
     * Documents with NULL or empty ids contribute nothing (a
     * zero-token document has no place in a token tensor — filter or
-    * default upstream if that matters).
+    * default upstream if that matters). Ids are cast to `array<int>`;
+    * a NULL element inside an ids array fails loudly.
     *
     * `sepId` (optional) is the EOS/document-separator id: appended
     * after each non-empty document's ids BEFORE the cut — real
@@ -213,62 +217,40 @@ object Packing {
     * The op is lazy and its input runs ONCE, inside the action: an
     * expensive `idsCol` encoder needs no persist.
     *
-    * Scale shape: the exclusive prefix sum is [[globalCumsum]]'s
-    * bucketed [[graft.plans.PrefixSum]] (never one global window); each
-    * document then EXPLODES into at most ceil(w/seqLen)+1
-    * (sequence, piece) slices — pure per-row arithmetic — and one
-    * groupBy(seq_id) assembles sequences whose per-group state is
-    * seqLen-BOUNDED by construction (array_sort over ≤seqLen pieces,
-    * flatten to exactly seqLen ids). One shuffle of the id payload,
-    * which is the inherent movement: ids must regroup from document
-    * order to sequence order. */
+    * Scale shape: the cut happens inside [[graft.plans.PrefixSum]]'s
+    * cut mode, over `bucketWidth`-wide order-key buckets (never one
+    * global window), with ONE exchange: the documents' order keys and
+    * ids, hash-partitioned by bucket. The summing job reads that
+    * exchange unsorted and returns, per bucket, its id count and its
+    * first `seqLen - 1` ids; the driver folds the bucket offsets and
+    * hands each bucket the ids that finish its last sequence (from the
+    * heads of the buckets after it — at most `seqLen - 1` ids per
+    * bucket, bounded by [[graft.plans.PrefixSum.MaxCutIds]]: widen
+    * `bucketWidth` past it). The output pass then walks each bucket's
+    * sorted documents and emits every sequence that starts in it as a
+    * finished row, holding one sequence at a time. Sequences never
+    * regroup: no per-piece rows, no second shuffle, no aggregate. */
   def packTokenIds(
       df: DataFrame, orderCol: String, idsCol: String,
       seqLen: Int, padId: Int = 0, bucketWidth: Long = 100000,
       sepId: Option[Int] = None): DataFrame = {
     require(seqLen >= 1, s"seqLen must be >= 1, got $seqLen")
-    Seq("__w__", "__seq__", "__piece__").foreach(c =>
+    require(bucketWidth > 0, "bucketWidth must be positive")
+    Seq("__w__", "__b__").foreach(c =>
       require(!df.columns.contains(c), s"input already has a column named $c"))
-    val base = sepId match {
-      case Some(sid) => df.withColumn(idsCol,
-        when(size(col(idsCol)) > 0,
-          concat(col(idsCol), array(lit(sid)))).otherwise(col(idsCol)))
-      case None => df
+    val ids = df.schema(idsCol).dataType match {
+      case ArrayType(IntegerType, _) => col(idsCol)
+      case _ => col(idsCol).cast("array<int>")
     }
-    val withW = base
-      .withColumn("__w__", coalesce(size(col(idsCol)).cast("long"), lit(0L)))
+    val sep = if (sepId.isDefined) 1 else 0
+    val docs = df
+      .select(col(orderCol), ids.as(idsCol),
+        coalesce(when(size(ids) > 0, size(ids) + sep), lit(0)).cast("long").as("__w__"),
+        floorDivBucket(orderCol, bucketWidth).as("__b__"))
       .filter(col("__w__") > 0)
-    val cum = globalCumsum(withW, orderCol, "__w__", bucketWidth)
-    val L = lit(seqLen.toLong)
-    val pieces = cum
-      // sequences this doc overlaps: first token at cum_before, last at
-      // cum_before + w - 1
-      .withColumn("__seq__", explode(sequence(
-        expr("cum_before div " + seqLen),
-        expr(s"(cum_before + __w__ - 1) div $seqLen"))))
-      .withColumn("__piece__", {
-        val gStart = greatest(col("__seq__") * L, col("cum_before"))
-        val gEnd = least((col("__seq__") + 1) * L, col("cum_before") + col("__w__"))
-        struct(
-          (gStart - col("__seq__") * L).cast("int").as("off"),
-          slice(col(idsCol), (gStart - col("cum_before") + 1).cast("int"),
-            (gEnd - gStart).cast("int")).as("ids"))
-      })
-      .select(col("__seq__").as("seq_id"), col("__piece__"))
-    pieces.groupBy("seq_id")
-      .agg(array_sort(collect_list(col("__piece__"))).as("__m__"))
-      .select(
-        col("seq_id"),
-        flatten(transform(col("__m__"), p => p.getField("ids"))).as("__ids__"),
-        transform(col("__m__"), p => p.getField("off")).as("doc_offsets"),
-        size(col("__m__")).as("n_docs"))
-      .select(
-        col("seq_id"),
-        concat(col("__ids__"),
-          array_repeat(lit(padId), lit(seqLen) - size(col("__ids__"))))
-          .as("input_ids"),
-        col("doc_offsets"), col("n_docs"),
-        (lit(seqLen) - size(col("__ids__"))).as("n_pad"))
+    graft.plans.PrefixSum.cut(docs, col("__b__"), Seq(col(orderCol)), col(idsCol),
+      col("__w__"), graft.plans.SequenceCut(seqLen, padId, sepId),
+      s"packTokenIds($orderCol)")
   }
 
   /** Greedy NEXT-FIT whole-document packing — the SFT-data shape: a

@@ -127,7 +127,7 @@ object Pgp {
     * (holding 2 inotify instances each) — without the kill, repeated
     * runs exhaust the kernel's per-user inotify-instance limit and
     * unrelated tools (sbt's file watcher, editors) start failing. */
-  private def tearDownHome(home: Path): Unit = {
+  private[graft] def tearDownHome(home: Path): Unit = {
     try {
       val pb = new ProcessBuilder("gpgconf", "--kill", "gpg-agent")
       pb.environment().put("GNUPGHOME", home.toString)

@@ -1,7 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
 
 /** Deterministic, rerun-stable sampling and dataset splitting — the
   * sampling family a training-data pipeline actually needs. Every
@@ -203,30 +207,63 @@ object Sampling {
     }
   }
 
-  /** Temperature mixture sampling in one call: ONE small aggregate
-    * (stratum cardinality — driver-bounded, loud past `maxStrata`)
-    * computes [[temperatureFractions]], then the [[sampleByStratum]]
-    * scan-time cut — the corpus itself is never shuffled. Rows with a
+  /** Temperature mixture sampling in one call: the stratum counts
+    * (driver-bounded, loud past `maxStrata`) feed
+    * [[temperatureFractions]], then the [[sampleByStratum]] scan-time
+    * cut — the corpus itself is never shuffled. The counts are ONE
+    * shuffle-free job ([[strataTotals]]), and it runs while the frame
+    * is built: building the sampler executes its input once (plus the
+    * map stages of any exchange in it), outside the action. Rows with a
     * NULL stratum are dropped (no label, no share — the
     * [[sampleByTokenBudget]] budget-less rule); an empty corpus
     * passes through empty. */
   def sampleByTemperature(
       df: DataFrame, key: Column, stratumCol: String, targetDocs: Long,
       alpha: Double, salt: String, maxStrata: Int = 100000): DataFrame = {
+    val counts = strataTotals(df, stratumCol, lit(1L), maxStrata, "sampleByTemperature")
+    if (counts.isEmpty) df.filter(col(stratumCol).isNotNull)
+    else sampleByStratum(df, key, col(stratumCol),
+      temperatureFractions(counts, targetDocs, alpha),
+      defaultFraction = 0.0, salt)
+  }
+
+  /** Per-stratum totals of `value` (a LONG: 1 per row counts rows)
+    * over the rows with a non-null stratum, labelled by the stratum's
+    * string form. ONE shuffle-free job, run while the caller builds its
+    * frame: each task sums its partition's rows of the two pruned
+    * columns in a hash map, and the driver merges the maps. An input
+    * with exchanges adds their map stages' jobs. Loud past
+    * `maxStrata`, in a task and after the merge. */
+  private def strataTotals(
+      df: DataFrame, stratumCol: String, value: Column, maxStrata: Int,
+      what: String): Seq[(String, Long)] = {
     require(maxStrata > 0, "maxStrata must be positive")
-    val rows = df.filter(col(stratumCol).isNotNull)
-      .groupBy(col(stratumCol)).count()
-      .orderBy(col(stratumCol)).limit(maxStrata + 1).collect()
-    require(rows.length <= maxStrata,
-      s"sampleByTemperature: more than $maxStrata strata — the fraction " +
+    val pruned = df.filter(col(stratumCol).isNotNull)
+      .select(col(stratumCol), value.cast("long"))
+    val dt = pruned.schema.head.dataType
+    val parts = pruned.queryExecution.toRdd.mapPartitions { it =>
+      val totals = new java.util.HashMap[Any, Array[Long]]()
+      while (it.hasNext && totals.size <= maxStrata) {
+        val r = it.next()
+        val s = r.get(0, dt)
+        val t = totals.get(s)
+        val v = if (r.isNullAt(1)) 0L else r.getLong(1)
+        if (t != null) t(0) = Math.addExact(t(0), v)
+        else totals.put(s match { case u: UTF8String => u.clone(); case o => o }, Array(v))
+      }
+      Iterator.single(totals)
+    }.collect()
+    val merged = new java.util.HashMap[Any, Array[Long]]()
+    parts.foreach(_.forEach { (s, t) =>
+      val m = merged.putIfAbsent(s, t)
+      if (m != null) m(0) = Math.addExact(m(0), t(0))
+    })
+    // a task stops past maxStrata, so one partition's excess shows here
+    require(merged.size <= maxStrata,
+      s"$what: more than $maxStrata strata — the fraction " +
         "table is driver-held; pre-bucket the stratum column")
-    if (rows.isEmpty) df.filter(col(stratumCol).isNotNull)
-    else {
-      val counts = rows.map(r => (r.get(0).toString, r.getLong(1))).toSeq
-      sampleByStratum(df, key, col(stratumCol),
-        temperatureFractions(counts, targetDocs, alpha),
-        defaultFraction = 0.0, salt)
-    }
+    val label = CatalystTypeConverters.createToScalaConverter(dt)
+    merged.asScala.iterator.map { case (s, t) => (label(s).toString, t(0)) }.toSeq
   }
 
   /** Per-ROW keep probability — SOFT quality filtering (down-weight
@@ -318,23 +355,17 @@ object Sampling {
     * doc-level hash cut. Same determinism contract as
     * [[temperatureFractions]] (exact long sums feed it; alpha 0.5 /
     * 0.25 / 1.0 engine-portable). NULL weights count 0; NULL strata
-    * drop. */
+    * drop. Like [[sampleByTemperature]], building it runs ONE
+    * shuffle-free job: the token sums ([[strataTotals]]). */
   def sampleByTokenTemperature(
       df: DataFrame, key: Column, stratumCol: String, weightCol: String,
       targetTokens: Long, alpha: Double, salt: String,
       maxStrata: Int = 100000): DataFrame = {
-    require(maxStrata > 0, "maxStrata must be positive")
-    val rows = df.filter(col(stratumCol).isNotNull)
-      .groupBy(col(stratumCol))
-      .agg(sum(coalesce(col(weightCol).cast("long"), lit(0L))).as("__t__"))
-      .orderBy(col(stratumCol)).limit(maxStrata + 1).collect()
-    require(rows.length <= maxStrata,
-      s"sampleByTokenTemperature: more than $maxStrata strata — the fraction " +
-        "table is driver-held; pre-bucket the stratum column")
-    if (rows.isEmpty) df.filter(col(stratumCol).isNotNull)
+    val all = strataTotals(df, stratumCol, col(weightCol), maxStrata,
+      "sampleByTokenTemperature")
+    if (all.isEmpty) df.filter(col(stratumCol).isNotNull)
     else {
-      val totals = rows.map(r => (r.get(0).toString, r.getLong(1)))
-        .filter(_._2 > 0).toSeq
+      val totals = all.filter(_._2 > 0)
       require(totals.nonEmpty,
         "sampleByTokenTemperature: every stratum has zero total weight — " +
           "nothing to apportion")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
@@ -392,11 +393,16 @@ class PlanAuditSpec extends AnyFunSuite {
     // the prefix sum must stay per-bucket (never one global ordered
     // partition), and no pair joins
     assertPrefixSums(p, Seq("__b__"))
-    // id payload movement: the prefix sum's bucket partitioning + the
-    // groupBy(seq_id) regroup — hash exchanges only
-    val exchanges = s.linesIterator.filter(_.trim.startsWith("Exchange")).toSeq
-    assert(exchanges.nonEmpty && exchanges.forall(_.contains("hashpartitioning")),
+    // the sequences are cut inside the prefix sum: its hash exchange on
+    // the cells is the only payload movement — no seq_id regroup, no
+    // collect_list aggregate
+    val exchanges = nodes(p).collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.length == 1, s"expected exactly one exchange:\n$s")
+    assert(s.linesIterator.count(_.trim.startsWith("Exchange")) == 1 &&
+      s.linesIterator.filter(_.trim.startsWith("Exchange")).forall(_.contains("hashpartitioning")),
       s"unexpected exchange shape (range/single-partition would be the global-window bottleneck):\n$s")
+    assert(!nodes(p).exists(_.isInstanceOf[ObjectHashAggregateExec]) &&
+      !s.contains("collect_list"), s"a regroup aggregate in:\n$s")
   }
 
   test("assignShuffledShards: the permutation never plans a global sort — bucket windows + broadcast offsets") {

@@ -225,6 +225,40 @@ class PackingSpec extends AnyFunSuite {
       s"upstream evaluated ${evals.value} rows for a $n-row input")
   }
 
+  test("the summing pass sorts nothing: one result stage holds sort memory, the output pass") {
+    // a sort's tasks report peak execution memory; the summing job reads
+    // the exchange below the sort, so only the output pass may report any
+    val sc = spark.sparkContext
+    val peaks = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
+    @volatile var sentinel = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ResultTask" && e.taskMetrics != null)
+          peaks.merge(e.stageId, e.taskMetrics.peakExecutionMemory, (a, b) => a + b)
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == "sentinel") sentinel = true
+    }
+    def sortingStages(action: => Unit): Int = {
+      peaks.clear(); sentinel = false
+      action
+      sc.setJobGroup("sentinel", "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!sentinel && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinel, "listener never saw the sentinel job")
+      peaks.values.toArray.count(_.asInstanceOf[java.lang.Long] > 0)
+    }
+    val rows = spark.range(0, 2000, 1, 4)
+      .select(col("id"), (col("id") % 7).as("w"),
+        array_repeat(col("id").cast("int"), (col("id") % 5).cast("int")).as("ids"))
+    sc.addSparkListener(listener)
+    try {
+      assert(sortingStages(Packing.globalCumsum(rows, "id", "w", 100).collect()) == 1)
+      assert(sortingStages(Packing.packTokenIds(rows, "id", "ids", 16, bucketWidth = 100)
+        .collect()) == 1)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("globalCumsum output joins with itself") {
     // the analyzer renews the exprIds of a self-joined side; cum_before
     // must be one it can renew
@@ -425,21 +459,17 @@ class PackingSpec extends AnyFunSuite {
   }
 
   test("packTokenIds == naive concat-and-chunk reference on random corpora (seeded)") {
-    val rnd = new scala.util.Random(1414L)
-    (0 until 25).foreach { trial =>
-      val nDocs = 1 + rnd.nextInt(12)
-      val L = 1 + rnd.nextInt(9)
-      val docs = (0 until nDocs).map { i =>
-        (i.toLong, (0 until rnd.nextInt(3 * L)).map(_ => rnd.nextInt(1000)))
-      }
-      // naive reference: concat in id order, chunk every L, pad last;
-      // boundaries = within-seq starts of every slice
-      val flat = docs.sortBy(_._1).flatMap(_._2)
+    // naive reference: concat in id order (the separator after each
+    // non-empty doc), chunk every L, pad last; boundaries = within-seq
+    // starts of every slice
+    def check(what: String, docs: Seq[(Long, Seq[Int])], L: Int, bw: Long,
+        sep: Option[Int] = None): Unit = {
+      val streams = docs.sortBy(_._1).map(_._2).filter(_.nonEmpty).map(_ ++ sep)
+      val flat = streams.flatten
       val nSeq = (flat.length + L - 1) / L
       val expIds = (0 until nSeq).map(q =>
         flat.slice(q * L, (q + 1) * L).padTo(L, -7))
-      val starts = docs.sortBy(_._1).filter(_._2.nonEmpty)
-        .scanLeft(0)((acc, d) => acc + d._2.length).dropRight(1)
+      val starts = streams.scanLeft(0)((acc, d) => acc + d.length).dropRight(1)
       val expOffs = (0 until nSeq).map { q =>
         val inSeq = starts.filter(s => s >= q * L && s < math.min((q + 1) * L, flat.length))
           .map(_ - q * L)
@@ -447,16 +477,43 @@ class PackingSpec extends AnyFunSuite {
           starts.exists(_ < q * L)) Seq(0) else Seq.empty) ++ inSeq
       }.map(_.sorted)
       val got = Packing.packTokenIds(docs.toDF("id", "ids"), "id", "ids",
-        seqLen = L, padId = -7, bucketWidth = 1 + rnd.nextInt(4))
+        seqLen = L, padId = -7, bucketWidth = bw, sepId = sep)
         .orderBy("seq_id").collect()
-      assert(got.length == nSeq, s"trial $trial: ${got.length} != $nSeq")
+      assert(got.length == nSeq, s"$what: ${got.length} != $nSeq")
       got.zipWithIndex.foreach { case (r, q) =>
-        assert(r.getSeq[Int](1) == expIds(q), s"trial $trial seq $q ids")
-        assert(r.getSeq[Int](2) == expOffs(q), s"trial $trial seq $q offsets " +
+        assert(r.getLong(0) == q, s"$what seq $q id")
+        assert(r.getSeq[Int](1) == expIds(q), s"$what seq $q ids")
+        assert(r.getSeq[Int](2) == expOffs(q), s"$what seq $q offsets " +
           s"(got ${r.getSeq[Int](2)}, want ${expOffs(q)})")
         assert(r.getAs[Int]("n_docs") == expOffs(q).length)
+        assert(r.getAs[Int]("n_pad") == L - (flat.length - q * L).min(L), s"$what seq $q pad")
       }
     }
+    val rnd = new scala.util.Random(1414L)
+    (0 until 25).foreach { trial =>
+      val nDocs = 1 + rnd.nextInt(12)
+      val L = 1 + rnd.nextInt(9)
+      val docs = (0 until nDocs).map { i =>
+        (i.toLong, (0 until rnd.nextInt(3 * L)).map(_ => rnd.nextInt(1000)))
+      }
+      check(s"trial $trial", docs, L, 1 + rnd.nextInt(4))
+    }
+    // the edges of the cut, where a sequence meets a cell boundary
+    // (bucketWidth 1: one document per cell)
+    check("a sequence spanning six cells", (0L until 6L).map(i => (i, Seq(i.toInt, 50))), 11, 1)
+    check("cells of one 1-id document", (0L until 7L).map(i => (i, Seq(100 + i.toInt))), 3, 1)
+    check("a document longer than several seqLen",
+      Seq((0L, Seq(1, 2)), (1L, (10 until 33).toSeq), (2L, Seq(3)), (3L, Seq(4, 5))), 4, 1)
+    check("a long document inside a wide cell",
+      Seq((0L, Seq(1, 2)), (1L, (10 until 33).toSeq), (2L, Seq(3))), 4, 3)
+    check("cells ending on multiples of seqLen",
+      Seq((0L, Seq(1, 2)), (1L, Seq(3, 4)), (2L, Seq(5, 6, 7, 8)), (4L, Seq(9)), (5L, Seq(10))), 4, 2)
+    check("empty and gapped cells", Seq((0L, Seq(1)), (3L, Seq.empty[Int]), (9L, Seq(2, 3)),
+      (10L, Seq(4)), (20L, Seq(5, 6, 7))), 3, 2)
+    check("seqLen 1", Seq((0L, Seq(1, 2)), (1L, Seq(3)), (2L, Seq(4, 5, 6))), 1, 1)
+    val sepDocs = (0L until 9L).map(i => (i, (0 until (i % 4).toInt).map(j => 10 * i.toInt + j)))
+    Seq(1, 2, 3, 5, 8).foreach(L => Seq(1L, 2L, 4L).foreach(bw =>
+      check(s"sepId, L=$L bw=$bw", sepDocs, L, bw, Some(-9))))
   }
 
   test("packTokenIds sepId arm == packing with the separator pre-appended; sep labels always ignore") {

@@ -60,6 +60,9 @@ class PgpSpec extends AnyFunSuite with BeforeAndAfterAll {
     secRing = gpg("--batch", "--export-secret-keys", "--armor", "spec@graft.test")
   }
 
+  // the spec's home spawned a gpg-agent: stop it and remove the home
+  override def afterAll(): Unit = if (home != null) Pgp.tearDownHome(home)
+
   test("encryptPgp/decryptPgp round-trip a binary column") {
     assume(haveGpg)
     import spark.implicits._

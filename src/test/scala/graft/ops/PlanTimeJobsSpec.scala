@@ -75,6 +75,23 @@ class PlanTimeJobsSpec extends AnyFunSuite {
     }
   }
 
+  // the temperature samplers need their stratum totals before they can
+  // write the cut, so building them runs the counts: one job over an
+  // exchange-free input
+  Seq[(String, DataFrame => DataFrame)](
+    "sampleByTemperature" -> (d => Sampling.sampleByTemperature(d, col("id"), "lang",
+      targetDocs = 100, alpha = 0.5, salt = ":pt")),
+    "sampleByTokenTemperature" -> (d => Sampling.sampleByTokenTemperature(d, col("id"), "lang",
+      "w", targetTokens = 400, alpha = 0.5, salt = ":pt"))).foreach { case (name, build) =>
+    test(s"building $name runs ONE Spark job: its strata totals") {
+      val narrow = spark.range(0, 400, 1, 4).select(col("id"), (col("id") % 7 + 1).as("w"),
+        when(col("id") % 3 === 0, lit("en")).otherwise(lit("de")).as("lang"))
+      val (df, atBuild) = jobsDuring(build(narrow))
+      assert(atBuild == 1, s"$name ran $atBuild job(s) while the plan was built")
+      assert(df.collect().map(_.getString(2)).toSet == Set("en", "de"))
+    }
+  }
+
   test("Par.spreadNarrow over a shuffled input runs no Spark job") {
     val shuffled = spark.range(0, 100, 1, 4).toDF("id").repartition(2, col("id"))
     val (df, jobs) = jobsDuring(Par.spreadNarrow(shuffled, col("id")))

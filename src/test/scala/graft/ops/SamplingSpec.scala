@@ -323,6 +323,33 @@ class SamplingSpec extends AnyFunSuite {
     assert(m("b") > 1.0 && m("a") < 1.0)
   }
 
+  test("temperature samplers: maxStrata is loud within a partition and after the merge") {
+    // 6 strata over 3 partitions, 2 per partition: only the merge sees 6
+    val spread = (0 until 60).map(i => (i.toLong, s"s${i % 6}", 1L)).toDF("k", "s", "tok")
+      .repartition(3, (col("k") % 3).cast("int"))
+    // 6 strata in ONE partition: that task alone passes the bound
+    val packed = spread.coalesce(1)
+    Seq(spread, packed).foreach { df =>
+      val e = intercept[IllegalArgumentException](
+        Sampling.sampleByTemperature(df, col("k"), "s", 30, 0.5, ":ms", maxStrata = 5))
+      assert(e.getMessage.contains("more than 5 strata"), e.getMessage)
+      val t = intercept[IllegalArgumentException](
+        Sampling.sampleByTokenTemperature(df, col("k"), "s", "tok", 30, 0.5, ":ms", maxStrata = 5))
+      assert(t.getMessage.contains("more than 5 strata"), t.getMessage)
+      // at the bound itself both build
+      Sampling.sampleByTemperature(df, col("k"), "s", 30, 0.5, ":ms", maxStrata = 6)
+      Sampling.sampleByTokenTemperature(df, col("k"), "s", "tok", 30, 0.5, ":ms", maxStrata = 6)
+    }
+    // counts merge across partitions: the fractions see 10 rows per stratum
+    val kept = Sampling.sampleByTemperature(spread, col("k"), "s", 30, 0.5, ":ms")
+      .collect().map(_.getLong(0)).toSet
+    val fr = Sampling.temperatureFractions((0 until 6).map(i => s"s$i" -> 10L), 30, 0.5).toMap
+    val expect = spread.withColumn("h", Sampling.hashPrefix(col("k"), ":ms")).collect()
+      .filter(r => r.getString(3) < Sampling.hexThreshold(fr(r.getString(1))))
+      .map(_.getLong(0)).toSet
+    assert(kept == expect)
+  }
+
   test("sampleByTokenTemperature: token-mass fractions, zero-mass strata dropped, loud on all-zero") {
     // two strata with EQUAL doc counts but 9:1 token mass — doc-count
     // temperature would cut them identically; token-mass must not
