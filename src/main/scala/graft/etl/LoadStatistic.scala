@@ -9,8 +9,10 @@ package graft.etl
   * fused whole-stage-codegen'd plans, so [[Pipeline.go]] attributes the
   * plan's per-span `pipelineTime` metrics to steps by segmenting at the
   * rejecting steps' observe boundaries (see [[StepTiming]]) — steps
-  * fused into one segment share its value, and values are executor
-  * pipeline ms summed over parallel tasks, not wall-clock; sinks and
+  * fused into one segment share its value, a step's `pre` projection
+  * (a typed step's conversion) is charged to the segment before the
+  * step, and values are executor pipeline ms summed over parallel
+  * tasks, not wall-clock; sinks and
   * branches (separate actions) report their own wall time (documented
   * deviation, SURVEY.md §4). A trailing `save(path)` that [[Pipeline.go]]
   * runs as its one action reports that action's wall time, i.e. the

@@ -32,7 +32,10 @@ final case class MapStep(name: String, apply: DataFrame => DataFrame) extends PS
   * declares `pre = left_outer join + match marker`, `keep = marker is
   * not null` — in the uninstrumented plan Catalyst's EliminateOuterJoin
   * rewrites that back to a plain inner join, so [[Pipeline.toDF]] loses
-  * nothing.
+  * nothing. The typed steps use `pre` to compute their converted value
+  * once for `keep` and `onKept`. Under [[Pipeline.go]] `pre` runs below
+  * the step's observe, so [[StepTiming]] charges its time to the segment
+  * BEFORE the step (the previous rejecting step's, or the scan side).
   */
 final case class FilterStep(
     name: String,
@@ -680,18 +683,9 @@ final class Pipeline private (
   def asDouble(column: String): Pipeline = castStep(column, DoubleType, "a Double")
 
   private def castStep(column: String, to: DataType, label: String): Pipeline =
-    add(FilterStep(
-      s"as${to.simpleString.capitalize}($column)",
-      RejectionCategory.INVALID_FORMAT,
-      df => concat_ws(" ", lit("Could not parse"), col(column).cast(StringType), lit(s"to $label")),
-      df => {
-        val s = col(column).cast(StringType)
-        s.isNull || trim(s) === "" || s.try_cast(to).isNotNull
-      },
-      df => df.withColumn(column, {
-        val s = col(column).cast(StringType)
-        when(s.isNull || trim(s) === "", lit(null).cast(to)).otherwise(s.try_cast(to))
-      })))
+    typedStep(s"as${to.simpleString.capitalize}($column)", column, to,
+      concat_ws(" ", lit("Could not parse"), col(column).cast(StringType), lit(s"to $label")),
+      _.try_cast(to))
 
   /** gratum `asBoolean` (Pipeline.groovy:733-769): Y/N/yes/no/1/0/T/F
     * truth table; never rejects (garbage parses to false, as
@@ -718,22 +712,8 @@ final class Pipeline private (
     * round-trip against naive timestamps in other engines. */
   def asDate(column: String, formats: String*): Pipeline = {
     val fmts = if (formats.isEmpty) Seq("yyyy-MM-dd") else formats
-    def parsed(c: Column): Column =
-      coalesce(fmts.map(f => try_to_timestamp(c, lit(f))): _*).cast(TimestampNTZType)
-    add(FilterStep(
-      s"asDate($column, ${fmts.mkString(",")})",
-      RejectionCategory.INVALID_FORMAT,
-      df => concat_ws(" ", col(column).cast(StringType),
-        lit(s"could not be parsed by format ${fmts.mkString(",")}")),
-      df => {
-        val s = col(column).cast(StringType)
-        s.isNull || trim(s) === "" || parsed(s).isNotNull
-      },
-      df => df.withColumn(column, {
-        val s = col(column).cast(StringType)
-        when(s.isNull || trim(s) === "", lit(null).cast(TimestampNTZType))
-          .otherwise(parsed(s))
-      })))
+    dateStep(s"asDate($column, ${fmts.mkString(",")})", column, fmts,
+      s => coalesce(fmts.map(f => try_to_timestamp(s, lit(f))): _*).cast(TimestampNTZType))
   }
 
   /** [[asDate]] with the reference's EXACT SimpleDateFormat-lenient
@@ -747,22 +727,35 @@ final class Pipeline private (
     * parses reject INVALID_FORMAT, as in [[asDate]]. */
   def asDateLenient(column: String, formats: String*): Pipeline = {
     val fmts = if (formats.isEmpty) Seq("yyyy-MM-dd") else formats
-    def parsed(c: Column): Column =
-      graft.functions.dateExprs.lenient_simple_date(c, fmts)
-    add(FilterStep(
-      s"asDateLenient($column, ${fmts.mkString(",")})",
-      RejectionCategory.INVALID_FORMAT,
-      df => concat_ws(" ", col(column).cast(StringType),
+    dateStep(s"asDateLenient($column, ${fmts.mkString(",")})", column, fmts,
+      graft.functions.dateExprs.lenient_simple_date(_, fmts))
+  }
+
+  private def dateStep(stepName: String, column: String, fmts: Seq[String],
+      parse: Column => Column): Pipeline =
+    typedStep(stepName, column, TimestampNTZType,
+      concat_ws(" ", col(column).cast(StringType),
         lit(s"could not be parsed by format ${fmts.mkString(",")}")),
-      df => {
-        val s = col(column).cast(StringType)
-        s.isNull || trim(s) === "" || parsed(s).isNotNull
-      },
-      df => df.withColumn(column, {
-        val s = col(column).cast(StringType)
-        when(s.isNull || trim(s) === "", lit(null).cast(TimestampNTZType))
-          .otherwise(parsed(s))
-      })))
+      parse)
+
+  /** The one body of the typed steps: `pre` adds `convert` of the
+    * value's string form as a helper column, `keep` and `onKept` read
+    * it and `onRejected` drops it. Under [[go]] that projection sits
+    * below the step's observe (a pushdown barrier), so the observe, the
+    * filter and the output share one conversion per non-blank value;
+    * under [[toDF]] Catalyst inlines it into the pushed-down filter, so
+    * a kept value converts at most twice. null and blank values pass
+    * through as null; a value `convert` maps to null rejects
+    * INVALID_FORMAT with `reason`. */
+  private[etl] def typedStep(stepName: String, column: String, to: DataType,
+      reason: Column, convert: Column => Column): Pipeline = {
+    val s = col(column).cast(StringType)
+    val blank = s.isNull || trim(s) === ""
+    add(FilterStep(stepName, RejectionCategory.INVALID_FORMAT, _ => reason,
+      keep = _ => col(TypedValue).isNotNull || blank,
+      onKept = _.withColumn(column, col(TypedValue)).drop(TypedValue),
+      pre = _.withColumn(TypedValue, when(blank, lit(null).cast(to)).otherwise(convert(s))),
+      onRejected = (_, rejected) => rejected.drop(TypedValue)))
   }
 
   // ---------------------------------------------------- scalar transforms
@@ -1772,6 +1765,9 @@ object Pipeline {
     new Pipeline(name, () => df, Vector.empty, Vector.empty, Vector.empty, cacheOnGo = false)
 
   def of(df: => DataFrame): Pipeline = of("pipeline", df)
+
+  /** Helper column of a typed step's converted value (see `typedStep`). */
+  private val TypedValue = "__graft_typed__"
 
   /** Groovy-falsy test used by defaultValues/defaultsBy/fillDown,
     * mirroring the reference's `if(!row[column])` (Pipeline.groovy:

@@ -19,10 +19,13 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * observe k and observe k+1 holds step k's own predicate plus the
   * MapSteps up to step k+1 — every step in that declaration-order range
   * reports the segment's duration (fused steps in one segment are
-  * individually indistinguishable by construction). The plan below the
-  * first observe (the source scan) is charged to the steps before the
-  * first rejecting step, or to the first rejecting step when there are
-  * none. Times are executor pipeline milliseconds summed over parallel
+  * individually indistinguishable by construction). A step's `pre`
+  * projection also sits below its observe, so it lands in the segment
+  * BEFORE the step: a typed step's conversion (`asInt`, `asDate`, ...)
+  * is charged to the previous rejecting step, or, for the first
+  * rejecting step, to the scan side. The plan below the first observe
+  * (the source scan) is charged to the steps before the first
+  * rejecting step, or to the first rejecting step when there are none. Times are executor pipeline milliseconds summed over parallel
   * tasks — NOT wall-clock (`LoadStatistic.durationMs` is) — and within
   * one pipelined stage the codegen clock smears time across spans that
   * pull from each other, so intra-stage values are a rough split;

@@ -176,6 +176,143 @@ class PipelineSpec extends AnyFunSuite {
     assert(nulls.where(col("dt").isNull).count() == 2)
   }
 
+  /** A seeded frame of the values typed converters disagree on: blanks,
+    * padded and exponent numbers, int overflow, NaN/Infinity, decimal
+    * commas, impossible and unpadded dates, trailing spaces, dates only
+    * the second format parses, and non-string input columns. */
+  private def hostileTypedFrame(): DataFrame = {
+    import org.apache.spark.sql.Row
+    val r = new scala.util.Random(20261019L)
+    val nums = Seq(null, "", "   ", "\t", " 12 ", "12.0", "1e3", "2147483648", "-2147483648",
+      "NaN", "Infinity", "-Infinity", "1,5", "42", "-7", "+5", "007", "1.5", "0x1F", "abc")
+    val dates = Seq(null, "", "  ", "2023-01-15", "2023-02-30", "2023-2-3", "2023-01-15 ",
+      " 2023-01-15", "01/15/2023", "2/3/2023", "2023-13-01", "2023-01-05xyz", "2020-02-29",
+      "2021-02-29", "1899-12-31", "01/15/2023 ", "garbage")
+    val doubles = Seq[java.lang.Double](null, Double.NaN, Double.PositiveInfinity, 1.5, 3.0,
+      -0.0, 1e10, 2147483647.0)
+    val ints = Seq[Integer](null, 0, -1, Int.MaxValue, Int.MinValue, 17)
+    def pick[T](xs: Seq[T]): T = xs(r.nextInt(xs.length))
+    def day(): java.time.LocalDate =
+      java.time.LocalDate.of(1990 + r.nextInt(40), 1 + r.nextInt(12), 1 + r.nextInt(28))
+    val rows = (0 until 400).map { i =>
+      Row(i.toLong,
+        if (r.nextInt(4) == 0) (r.nextInt(2000) - 1000).toString else pick(nums),
+        if (r.nextInt(4) == 0) (r.nextInt(100000) / 1000.0).toString else pick(nums),
+        if (r.nextInt(4) == 0) day().toString else pick(dates),
+        if (r.nextInt(4) == 0) day().toString else pick(dates),
+        pick(doubles), pick(ints),
+        if (r.nextInt(5) == 0) null else day())
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("id", LongType, nullable = false), StructField("i", StringType),
+      StructField("d", StringType), StructField("dt", StringType), StructField("dl", StringType),
+      StructField("nd", DoubleType), StructField("ni", IntegerType), StructField("ndate", DateType))))
+  }
+
+  test("typed steps are pinned: kept rows, counts and rejections hash to the captured SHA-256") {
+    // captured on the two-parse FilterStep bodies before the typed steps
+    // moved to one converted column; any change to what a step keeps,
+    // converts, counts or reports moves this hash
+    import org.apache.spark.sql.Row
+    val frame = hostileTypedFrame()
+    val fmts = Seq("yyyy-MM-dd", "MM/dd/yyyy")
+    val flows: Seq[(String, Pipeline => Pipeline)] = Seq(
+      "asInt" -> (_.asInt("i")),
+      "asDouble" -> (_.asDouble("d")),
+      "asIntOfDecimals" -> (_.asInt("d")),
+      "asDoubleOfInts" -> (_.asDouble("i")),
+      "asDate" -> (_.asDate("dt", fmts: _*)),
+      "asDateLenient" -> (_.asDateLenient("dl", fmts: _*)),
+      "nonString" -> (_.asInt("nd").asDouble("ni").asDate("ndate")))
+    def show(v: Any): String = v match {
+      case null => "<null>"
+      case d: java.sql.Date => d.toLocalDate.toString
+      case other => other.toString
+    }
+    def render(r: Row): String = r.toSeq.map(show).mkString("|")
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def put(s: String): Unit = md.update((s + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val rejectionCols = Seq("rejectionCategory", "rejectionReason", "rejectionStep", "rejectionException")
+    flows.foreach { case (name, flow) =>
+      var rejected: (StructType, Seq[Row]) = null
+      val stat = flow(Pipeline.of(name, frame))
+        .onRejection(rej => rejected = (rej.schema, rej.collect().toSeq))
+        .go()
+      val kept = flow(Pipeline.of(name, frame)).toDF
+      val keptRows = kept.collect().toSeq
+      assert(stat.loaded == keptRows.size, name)
+      assert(stat.rejections == rejected._2.size, name)
+      // no helper column leaks into either output
+      assert(kept.columns.toSeq == frame.columns.toSeq, name)
+      assert(rejected._1.fieldNames.toSeq == frame.columns.toSeq ++ rejectionCols, name)
+      put(name); put(kept.schema.json); put(rejected._1.json)
+      put(s"loaded=${stat.loaded}")
+      stat.rejectionsByCategory.toSeq.sortBy(_._1.name).foreach { case (c, m) =>
+        m.toSeq.sorted.foreach { case (step, n) => put(s"${c.name}/$step=$n") }
+      }
+      keptRows.map(render).sorted.foreach(put)
+      rejected._2.map(render).sorted.foreach(put)
+    }
+    val sha = md.digest().map(b => f"${b & 0xff}%02x").mkString
+    assert(sha == "bd2f4bef1880763b8f05647dd881eb3c4293e3c213d0ec4fa332db91ad85fb84", s"typed-step outputs hash to $sha")
+  }
+
+  test("a typed step converts each non-blank value once under go(), at most twice under toDF") {
+    // the converter counts its own calls: 100 null, 100 blank, 700
+    // parseable and 100 unparseable values, so 800 non-blank
+    val calls = spark.sparkContext.longAccumulator("typed-step-calls")
+    val conv = udf((s: String) => {
+      calls.add(1)
+      scala.util.Try(Integer.valueOf(s.trim)).getOrElse(null): Integer
+    })
+    val df = spark.range(1000).toDF("id").withColumn("v",
+      when(col("id") < 100, lit(null).cast(StringType))
+        .when(col("id") < 200, lit("  "))
+        .when(col("id") < 900, col("id").cast(StringType))
+        .otherwise(concat(lit("x"), col("id").cast(StringType))))
+    def typed(p: Pipeline) = p.typedStep("countedInt(v)", "v", IntegerType, lit("bad"), conv(_))
+    // a trailing save makes the write go()'s one action and needs the
+    // converted column; a bare go() counts, which needs only the verdict
+    val dir = java.nio.file.Files.createTempDirectory("graft-typed-once").toString
+    Seq[Pipeline => Pipeline](_.save(s"$dir/out", "parquet"), identity).foreach { tail =>
+      calls.reset()
+      val stat = tail(typed(Pipeline.of(df))).go()
+      assert(stat.loaded == 900)
+      assert(stat.rejections(RejectionCategory.INVALID_FORMAT, "countedInt(v)") == 100)
+      assert(calls.value == 800, s"go(): ${calls.value} converter calls for 800 non-blank values")
+    }
+    assert(spark.read.parquet(s"$dir/out").where(col("v").isNotNull).count() == 700)
+    calls.reset()
+    val kept = typed(Pipeline.of(df)).toDF.collect()
+    assert(kept.length == 900)
+    assert(kept.count(_.isNullAt(1)) == 200)
+    assert(kept.filterNot(_.isNullAt(1)).forall(r => r.getInt(1) == r.getLong(0)))
+    assert(calls.value <= 1600, s"toDF: ${calls.value} converter calls for 800 non-blank values")
+  }
+
+  test("a typed-step pipeline under go() gets segment timings, not the action-duration fallback") {
+    // each step's conversion fuses below its own observe, so its cost is
+    // charged to the segment before it; the steps still land in distinct
+    // segments, and the heavy aggregate makes them differ
+    def build() = Pipeline.of(spark.range(200000L).toDF("id")
+        .withColumn("n", (col("id") % 1000).cast(StringType))
+        .withColumn("dt", date_format(date_add(lit("2020-01-01").cast(DateType),
+          (col("id") % 700).cast("int")), "yyyy-MM-dd")))
+      .asInt("n")
+      .asDate("dt")
+      .addField("g", col("n") % 100)
+      .groupAgg(Seq("g"))(
+        sum(xxhash64(sha2(repeat(col("id").cast("string"), 400), 512))).as("h"),
+        count(lit(1)).as("c"))
+    build().go() // warm the codegen paths
+    val stat = build().go()
+    assert(stat.loaded == 100)
+    val a = stat.stepTimings("asInt(n)")
+    val b = stat.stepTimings("asDate(dt, yyyy-MM-dd)")
+    assert(stat.stepTimings("groupBy(g)") == b)
+    assert(a != b, s"expected differing segment times, got a=$a b=$b (${stat.stepTimings})")
+  }
+
   test("unique keeps one row per key, rejects dups IGNORE_ROW") {
     val stat = Pipeline.of(hobbies).unique("id", orderBy = "hobby").go()
     assert(stat.loaded == 4)

@@ -15,10 +15,13 @@ The compare is deliberately STRICTER than the driver's:
   - Rows are compared IN FILE ORDER (every query carries a total ORDER
     BY on both engines), then again order-insensitively to distinguish
     "wrong order" from "wrong values".
+Each gate's line ends with the seconds its oracle SQL took in DuckDB,
+and the total is printed before the pass/fail summary.
 A green selfcheck should imply a green driver gate.
 """
 import json
 import sys
+import time
 
 import duckdb
 import pyarrow.parquet as pq
@@ -57,6 +60,7 @@ def main(sf_dir, out_dir):
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
     n_pass = n_fail = 0
+    oracle_s = 0.0
     for name, sql in sorted(oracles.items()):
         try:
             spark_tbl = pq.read_table(f"{out_dir}/{name}")
@@ -64,39 +68,45 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name}: no spark output ({e})")
             n_fail += 1
             continue
+        t0 = time.monotonic()
         try:
-            duck_tbl = con.execute(sql).fetch_arrow_table()
+            duck_tbl, err = con.execute(sql).fetch_arrow_table(), None
         except Exception as e:
-            print(f"FAIL {name}: oracle SQL error: {e}")
+            err = e
+        secs = time.monotonic() - t0
+        oracle_s += secs
+        took = f"[oracle {secs:.2f} s]"
+        if err is not None:
+            print(f"FAIL {name}: oracle SQL error: {err} {took}")
             n_fail += 1
             continue
         stypes, srows = canon(spark_tbl)
         dtypes, drows = canon(duck_tbl)
         if stypes != dtypes:
             diff = [(a, b) for a, b in zip(stypes, dtypes) if a != b]
-            print(f"FAIL {name}: arrow types differ: {diff or (stypes, dtypes)}")
+            print(f"FAIL {name}: arrow types differ: {diff or (stypes, dtypes)} {took}")
             n_fail += 1
             continue
         if len(srows) != len(drows):
-            print(f"FAIL {name}: rowcount spark={len(srows)} duck={len(drows)}")
+            print(f"FAIL {name}: rowcount spark={len(srows)} duck={len(drows)} {took}")
             n_fail += 1
             continue
         if srows != drows:
             if sorted(srows) == sorted(drows):
                 bad = [i for i, (a, b) in enumerate(zip(srows, drows)) if a != b]
                 print(f"FAIL {name}: values match but ROW ORDER differs "
-                      f"({len(bad)} positions; first at {bad[0]})")
+                      f"({len(bad)} positions; first at {bad[0]}) {took}")
             else:
                 ss, ds = sorted(srows), sorted(drows)
                 bad = [i for i, (a, b) in enumerate(zip(ss, ds)) if a != b]
-                print(f"FAIL {name}: {len(bad)}/{len(srows)} rows differ; first: ")
+                print(f"FAIL {name}: {len(bad)}/{len(srows)} rows differ {took}; first: ")
                 i = bad[0]
                 print(f"   cols : {[c for c, _ in stypes]}")
                 print(f"   spark: {ss[i]}")
                 print(f"   duck : {ds[i]}")
             n_fail += 1
             continue
-        print(f"PASS {name} ({len(srows)} rows)")
+        print(f"PASS {name} ({len(srows)} rows) {took}")
         n_pass += 1
     import os
     for d in sorted(os.listdir(out_dir)):
@@ -130,6 +140,7 @@ def main(sf_dir, out_dir):
         print("WARN no _manifest.json — cannot check declared-vs-produced "
               "(stale Verify build?)")
         n_fail += 1
+    print(f"== oracle SQL {oracle_s:.1f} s total ==")
     print(f"== {n_pass} pass / {n_fail} fail ==")
     return 1 if n_fail else 0
 
