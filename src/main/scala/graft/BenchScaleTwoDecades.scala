@@ -18,12 +18,15 @@ import org.apache.spark.sql.SparkSession
   * the THIRD point confirms (or falsifies) the decade-2 trend.
   *
   * Beyond timings, the artifact carries an ATTRIBUTION section
-  * ([[graft.ops.ScaleStats]]): per-stage candidate-pair and
-  * bucket/cell-occupancy counts for the similarity-dedup flagships,
-  * measured at mid/hi/xhi; at xhi additionally the cluster family's
-  * CC round structure and the auto-semantic train-vs-pair timing
-  * split. Attribution from round 11's first run (the reason the
-  * corpus-sized quantizer is now the DEFAULT semantic path):
+  * ([[attribution]]): per-stage candidate-pair and bucket/cell
+  * occupancy counts for the similarity-dedup flagships at mid/hi/xhi,
+  * plus the cluster family's gram occupancy and CC round structure and
+  * the cross family's occupancy at hi/xhi. Each family's counts come
+  * from one untimed run of its gate, read from the counters the pair
+  * operators observe on that run ([[graft.ops.Occupancy]]); the timed
+  * repeats carry no instrumentation. Attribution from round 11's first
+  * run (the reason the corpus-sized quantizer is now the DEFAULT
+  * semantic path):
   *  - semantic at fixed nCells=8: candidate pairs 0.999M → 100.0M for
   *    a 10× corpus — exact quadratic cell fill (Σ n_c² with n_c ∝ n);
   *    the auto-sized default pins occupancy and returns to linear.
@@ -160,14 +163,121 @@ object BenchScaleTwoDecades {
     * NOT run xhi: at 26 replicas every cell exceeds maxCell and the
     * operator FAILS LOUDLY (under-sized-quantizer guard) instead of
     * returning zero pairs — the attribution section still records its
-    * cell occupancy there via ScaleStats, which measures without
-    * running the guarded pair stage. */
+    * cell occupancy there: the guard trips after the counters are
+    * posted. */
   val xhiQueries: Seq[String] = Seq(
     "q_dedup_semantic", "q_dedup_minhash",
     "q_dedup_cross", "q_dedup_minhash_cluster", "q_dedup_cluster",
     "q_prep_mix", "q_simsearch_quant", "q_project_rp_full",
     "q_bpe_encode_full", "q_pack_ids_full",
     "q_dedup_cross_embedding_full")
+
+  /** Stage populations of the similarity-dedup families at `dir`, each
+    * from ONE untimed run of its gate: the counters the pair operators
+    * observed on that run ([[graft.ops.Occupancy]]) under the record's
+    * key names, plus the run's row count. A guard trip is a datapoint
+    * (`guard_tripped` = 1, zero emitted pairs): the counters are posted
+    * before the guard throws. `deep` adds the cluster family (default
+    * driver union-find path, so `cc_rounds` = 0 says the shortcut ran)
+    * and the cross family (the q_dedup_cross operator before its
+    * anti-join, whose row count is the verified pairs). */
+  def attribution(spark: SparkSession, dir: String, deep: Boolean)
+      : Seq[(String, Map[String, Long])] = {
+    import org.apache.spark.sql.functions.col
+    val counters = new Profile.Counters
+    val qmap = SparkEntry.queries ++ extraThunks
+    /** One untimed gate run: its rows, whether a guard tripped, and the
+      * counters it posted. */
+    final case class Run(rows: Long, tripped: Long,
+        observed: Map[String, org.apache.spark.sql.Row]) {
+      /** A counter; 0 when nothing was posted (an empty corpus). */
+      def apply(name: String, field: String = "rows"): Long =
+        observed.get(name).fold(0L)(_.getAs[Long](field))
+    }
+    def run(gate: => org.apache.spark.sql.DataFrame): Run =
+      counters.during(spark)(gate.count()) match {
+        case (Right(n), o) => Run(n, 0L, o)
+        case (Left(_: IllegalStateException), o) => Run(0L, 1L, o)
+        case (Left(e), _) => throw e
+      }
+    /** The shared occupancy counters under a family's key names. */
+    def occupancy(r: Run, name: String, unit: String, rowsKey: String): Map[String, Long] =
+      Map(rowsKey -> r(name),
+        s"${unit}s" -> r(name, "groups"),
+        s"max_$unit" -> r(name, "max_group"),
+        s"pairable_${unit}s" -> r(name, "pairable"),
+        s"capped_${unit}s" -> r(name, "capped"),
+        "candidate_pairs" -> r(name, "pairs"),
+        "capped_pairs" -> r(name, "capped_pairs"))
+    /** A family whose gate emits its pairs: the occupancy, the input
+      * rows (`rowsKey` holds `perRow` rows per input row) and the
+      * emitted pairs or a guard trip. */
+    def pairFamily(gate: String, name: String, unit: String, rowsKey: String,
+        perRow: Long): Map[String, Long] = {
+      val r = run(qmap(gate)(spark, dir))
+      occupancy(r, name, unit, rowsKey) ++ Map("rows" -> r(name) / perRow,
+        "emitted_pairs" -> r.rows, "guard_tripped" -> r.tripped)
+    }
+
+    val n = Tables.load(spark, dir, "embeddings")
+      .filter(col("embedding").isNotNull).count()
+    // q_dedup_minhash: 64 hashes in 8 bands
+    val minhash = {
+      val r = run(qmap("q_dedup_minhash")(spark, dir))
+      occupancy(r, "graft.lsh.buckets", "bucket", "band_rows") ++ Map(
+        "rows" -> r("graft.lsh.buckets") / 8,
+        "screen_survivors" -> r("graft.lsh.pairs"),
+        "verified_pairs" -> r.rows)
+    }
+    val (planPlanes, planRows) = ops.VectorOps.lshPlan(n, 0.7)
+    val autoCells = math.max(2L, (n * 2 + 511) / 512)
+    val families = Seq(
+      "minhash" -> minhash,
+      // q_simsearch_lsh: 16 planes in 4-plane bands; the fixed bands
+      // trip the all-capped guard at sf1+, the corpus-sized plan must not
+      "lsh" -> pairFamily("q_simsearch_lsh", "graft.lsh.buckets", "bucket", "band_rows", 4),
+      "lsh_auto" -> (pairFamily("q_simsearch_lsh_auto", "graft.lsh.buckets", "bucket",
+        "band_rows", planPlanes / planRows) ++
+        Map("n_planes" -> planPlanes.toLong, "rows_per_band" -> planRows.toLong)),
+      // the semantic gates replicate each vector into 2 cells
+      "semantic_fixed8" -> pairFamily("q_dedup_semantic_fixed", "graft.semantic.cells",
+        "cell", "assignments", 2),
+      "semantic_auto" -> (pairFamily("q_dedup_semantic", "graft.semantic.cells",
+        "cell", "assignments", 2) + ("n_cells" -> autoCells)))
+    if (!deep) families
+    else {
+      val cluster = {
+        val r = run(qmap("q_dedup_cluster")(spark, dir))
+        val rounds = Iterator.from(1).map(i => s"graft.cc.round.$i")
+          .takeWhile(r.observed.contains).map(r(_)).toSeq
+        val g = "graft.shingle.grams"
+        Map("gram_rows" -> r(g),
+          "distinct_grams" -> r(g, "groups"),
+          "pairable_grams" -> r(g, "pairable"),
+          "capped_grams" -> r(g, "capped"),
+          "max_gram_docs" -> r(g, "max_group"),
+          "edges" -> r("graft.shingle.edges"),
+          "cc_nodes" -> r("graft.cc.nodes"),
+          "cc_rounds" -> rounds.size.toLong,
+          "cc_max_round_edges" -> rounds.maxOption.getOrElse(0L),
+          "cc_final_edges" -> rounds.lastOption.getOrElse(0L))
+      }
+      val cross = {
+        val docs = Tables.load(spark, dir, "documents")
+        val id = col("doc_id")
+        val r = run(ops.Dedup.crossCorpusNearDups(
+          docs.filter(id % 10 =!= 0), docs.filter(id % 10 === 0), "doc_id", "text",
+          shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8, charShingles = true))
+        val b = "graft.lsh_cross.buckets"
+        occupancy(r, b, "bucket", "band_rows") ++ Map(
+          "corpus_rows" -> (r(b) - r(b, "b_rows")) / 8,
+          "reference_rows" -> r(b, "b_rows") / 8,
+          "screen_survivors" -> r("graft.lsh_cross.pairs"),
+          "verified_pairs" -> r.rows)
+      }
+      families ++ Seq("cluster" -> cluster, "cross" -> cross)
+    }
+  }
 
   /** xhi is 26 replicas vs hi's 10: 0.415 decades. */
   private val xhiDecades = math.log10(26.0 / 10.0)
@@ -212,109 +322,12 @@ object BenchScaleTwoDecades {
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def slope(lo: Double, hi: Double): Double = math.log10(hi / math.max(lo, 1e-3))
 
-    // per-stage attribution for the two flagship similarity families
-    // (mid/hi/xhi): candidate-pair populations are the cost driver,
-    // and their growth rate attributes each family's timing slope
     def jmap(m: Map[String, Long]): String =
       m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val attribution = Seq(midDir, hiDir, xhiDir).map { dir =>
-      val docs = Tables.load(spark, dir, "documents")
-      val emb = Tables.load(spark, dir, "embeddings")
-      val mh = ops.ScaleStats.minhash(docs, "doc_id", "text",
-        shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8,
-        maxBucket = 200, charShingles = true)
-      val se = ops.ScaleStats.semantic(emb, "vec_id", "embedding",
-        threshold = 0.4, nCells = 8, replication = 2)
-      val n = emb.filter(org.apache.spark.sql.functions.col("embedding").isNotNull).count()
-      val autoCells = math.max(2L, (n * 2 + 511) / 512).toInt
-      val seAuto = ops.ScaleStats.semantic(emb, "vec_id", "embedding",
-        threshold = 0.4, nCells = autoCells, replication = 2)
-      // the r14 watch item (q_simsearch_lsh/_exact at the top of the
-      // uniform drift band): band rows / candidate pairs / sig-vs-
-      // verify timing split at the gate's exact parameters, so the
-      // next cross-round ratio is attributable to a stage or to the
-      // anchor
-      val ls = ops.ScaleStats.lsh(emb, "vec_id", "embedding",
-        nPlanes = 16, rowsPerBand = 4, threshold = 0.25)
-      // the corpus-sized plan's occupancy next to the fixed shape's:
-      // the fixed 4-bit bands trip the all-capped guard at sf1+, the
-      // planned shape must show pairable buckets and live pairs there
-      val (planPlanes, planRows) = ops.VectorOps.lshPlan(n, 0.7)
-      val lsAuto = ops.ScaleStats.lsh(emb, "vec_id", "embedding",
-        nPlanes = planPlanes, rowsPerBand = planRows, threshold = 0.7) +
-        ("n_planes" -> planPlanes.toLong) + ("rows_per_band" -> planRows.toLong)
-      // the two steeper hi→xhi families get the deeper treatment at
-      // the LAST two points (r11 verdict #6): the cluster family's
-      // per-stage volumes + CC round structure (default path, AND the
-      // distributed path forced so its round shape is on record), and
-      // the auto-semantic train-vs-pair timing split
-      val deep =
-        if (dir == midDir) ""
-        else {
-          val cl = ops.ScaleStats.cluster(docs, "doc_id", "text", shingleN = 8)
-          val clDist = ops.ScaleStats.cluster(docs, "doc_id", "text",
-            shingleN = 8, maxDriverEdges = 0)
-          val ph = ops.ScaleStats.semanticPhases(emb, "vec_id", "embedding",
-            threshold = 0.4, targetCell = 512, replication = 2)
-          // the r13 hi→xhi watch item (cross 0.629): per-stage pair
-          // volumes + screen-vs-verify timing split at the q_dedup_cross
-          // parameters, so the slope attributes to a stage
-          val crossCol = org.apache.spark.sql.functions.col("doc_id")
-          def crossOnce() = ops.ScaleStats.cross(
-            docs.filter(crossCol % 10 =!= 0), docs.filter(crossCol % 10 === 0),
-            "doc_id", "text", shingleN = 5, numHashes = 64, bands = 8,
-            threshold = 0.8, maxBucket = 200, charShingles = true)
-          val cr = crossOnce()
-          // the r17 watch item: the hi→xhi slopes of q_dedup_cross and
-          // q_dedup_semantic oscillate 0.55↔0.81 / 0.81↔1.06 BETWEEN
-          // same-code runs. One measurement cannot attribute a band —
-          // repeat each family's stage split in the SAME process and
-          // emit both: the volume fields must agree exactly (the
-          // plans are deterministic), so whichever STAGE TIMING moves
-          // between the repeats is the band's carrier (and the band
-          // is thereby attributed to scheduler/cache variance on that
-          // stage's scan volume, not to plan shape).
-          val cr2 = crossOnce()
-          val ph2 = ops.ScaleStats.semanticPhases(emb, "vec_id", "embedding",
-            threshold = 0.4, targetCell = 512, replication = 2)
-          // the r18 watch item (q_simsearch_lsh_auto carried the
-          // worst production mid→hi slope, 0.556): the lsh_auto split
-          // repeated in the SAME process at hi/xhi. The volume fields
-          // (rows, band_rows, buckets, candidate_pairs) and the plan
-          // fields (n_planes, rows_per_band — already per-dir above)
-          // must agree exactly between the repeats; whatever remains
-          // of the slope after candidate_pairs growth and the
-          // n_planes·rows plan widening is the timing swing BETWEEN
-          // repeats — the scheduler/cache variance carrier, same
-          // discipline as cross/semantic.
-          val lsAuto2 = ops.ScaleStats.lsh(emb, "vec_id", "embedding",
-            nPlanes = planPlanes, rowsPerBand = planRows, threshold = 0.7) +
-            ("n_planes" -> planPlanes.toLong) +
-            ("rows_per_band" -> planRows.toLong)
-          // the r19 watch item (q_dedup_semantic hi→xhi oscillates
-          // 0.63↔0.98 between same-code runs at equal candidate
-          // volumes): the semantic CANDIDATE-VOLUME split repeated in
-          // the SAME process at hi/xhi — semantic_auto already carries
-          // the volume fields (assignments, cells, candidate_pairs,
-          // emitted_pairs) per dir; this repeat must reproduce them
-          // EXACTLY (the auto plan is deterministic), so the slope
-          // band attributes to timing variance on a fixed plan, the
-          // same discipline lsh_auto got in r19.
-          val seAuto2 = ops.ScaleStats.semantic(emb, "vec_id", "embedding",
-            threshold = 0.4, nCells = autoCells, replication = 2) +
-            ("n_cells" -> autoCells.toLong)
-          s""","cluster":${jmap(cl)},"cluster_distributed":${jmap(clDist)},""" +
-            s""""semantic_auto_phases":${jmap(ph)},""" +
-            s""""semantic_auto_phases_repeat":${jmap(ph2)},""" +
-            s""""semantic_auto_repeat":${jmap(seAuto2)},""" +
-            s""""cross":${jmap(cr)},"cross_repeat":${jmap(cr2)},""" +
-            s""""lsh_auto_repeat":${jmap(lsAuto2)}"""
-        }
+    val attributionJson = Seq(midDir, hiDir, xhiDir).map { dir =>
+      val families = attribution(spark, dir, deep = dir != midDir)
       System.err.println(s"[bench-scale2] attribution $dir done")
-      s""""$dir":{"minhash":${jmap(mh)},"lsh":${jmap(ls)},""" +
-        s""""lsh_auto":${jmap(lsAuto)},""" +
-        s""""semantic_fixed8":${jmap(se)},""" +
-        s""""semantic_auto":${jmap(seAuto + ("n_cells" -> autoCells.toLong))}$deep}"""
+      families.map { case (f, m) => s""""$f":${jmap(m)}""" }.mkString(s""""$dir":{""", ",", "}")
     }.mkString("{", ",", "}")
 
     val entries = queries.map { name =>
@@ -346,7 +359,7 @@ object BenchScaleTwoDecades {
       s""""sf_dirs":${dirs.map(d => s""""$d"""").mkString("[", ",", "]")},""" +
       s""""cpu_anchor_ms":${r3(anchorMs)},""" +
       s""""synthetic_hi":true,"xhi_replicas":26,"queries":{${entries.mkString(",")}},""" +
-      s""""attribution":$attribution}"""
+      s""""attribution":$attributionJson}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Path.of("BENCH_SCALE_r22.json"), line + "\n")
     catch { case e: Exception => System.err.println(s"[bench-scale2] write failed: $e") }

@@ -1,11 +1,14 @@
 package graft
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.graftbridge.Bridge
 import scala.collection.mutable
 
 /** Optimization-round instrumentation main (guide §1): runs selected
   * queries with a stage-level listener and reports where the time goes
   * — per-stage wall clock, task counts, shuffle bytes — plus the
+  * counters the pair operators observed on the measured run (one
+  * `counters` line, see [[graft.ops.Occupancy]]) and the
   * `.explain("formatted")` plan to `plans/<tag>/<query>_<suffix>.txt`.
   *
   * Usage: runMain graft.Profile [--plans r21,before] [query ...]
@@ -13,6 +16,35 @@ import scala.collection.mutable
   * Not part of the driver contract; purely a measurement tool.
   */
 object Profile {
+
+  /** Collects the counters the operators observe (names under
+    * `graft.`, see [[graft.ops.Occupancy]]) from every execution it
+    * sees; the last value posted under a name wins. */
+  private[graft] final class Counters
+      extends org.apache.spark.sql.util.QueryExecutionListener {
+    private val seen = mutable.LinkedHashMap.empty[String, org.apache.spark.sql.Row]
+    override def onSuccess(funcName: String,
+        qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+      qe.observedMetrics.foreach { case (k, v) =>
+        if (k.startsWith("graft.")) seen.synchronized(seen(k) = v)
+      }
+    override def onFailure(funcName: String,
+        qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+
+    /** Runs `body` with the listener attached and returns what it
+      * threw or returned, with the counters of its executions; every
+      * listener event of `body` has been delivered on return. */
+    def during[A](spark: org.apache.spark.sql.SparkSession)(body: => A)
+        : (Either[Throwable, A], Map[String, org.apache.spark.sql.Row]) = {
+      seen.synchronized(seen.clear())
+      spark.listenerManager.register(this)
+      try {
+        val result = try Right(body) catch { case e: Exception => Left(e) }
+        Bridge.drainListeners(spark)
+        (result, seen.synchronized(seen.toMap))
+      } finally spark.listenerManager.unregister(this)
+    }
+  }
 
   private case class StageRec(
       id: Int, name: String, tasks: Int, ms: Long,
@@ -77,6 +109,7 @@ object Profile {
           exception: Exception): Unit = ()
     }
 
+    val counters = new Counters
     for (name <- qnames) {
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query $name"))
@@ -96,8 +129,8 @@ object Profile {
           top
         }
         catch { case e: Throwable => s"EXPLAIN FAILED: $e" }
+        Bridge.drainListeners(spark)
         spark.listenerManager.unregister(qeListener)
-        Thread.sleep(200) // listener is async; let the bus drain
         val all = subPlans.synchronized(
           (s"== top-level plan ==\n$plan" +: subPlans.toSeq).mkString("\n\n"))
         java.nio.file.Files.writeString(dir.resolve(s"${name}_$suffix.txt"), all)
@@ -109,20 +142,24 @@ object Profile {
       stages.clear(); jobs.clear(); jobStart.clear()
       spark.sparkContext.addSparkListener(listener)
       spark.sparkContext.setJobDescription(s"$name measured")
-      val t0 = System.nanoTime()
-      val n = try fn(spark, sfDir).count() catch { case e: Throwable =>
-        System.err.println(s"[profile] $name FAILED: $e"); -1L }
-      val wallMs = (System.nanoTime() - t0) / 1e6
-      // drain listener events before reading (the bus is private[spark];
-      // a short sleep is fine for a measurement tool)
-      Thread.sleep(300)
-      spark.sparkContext.removeSparkListener(listener)
+      var wallMs = 0.0
+      val (result, observed) = counters.during(spark) {
+        val t0 = System.nanoTime()
+        try fn(spark, sfDir).count() finally wallMs = (System.nanoTime() - t0) / 1e6
+      }
+      val n = result.fold({ e => System.err.println(s"[profile] $name FAILED: $e"); -1L }, identity)
+      spark.sparkContext.removeSparkListener(listener) // during() drained its events
       val ss = stages.values.toSeq.sortBy(-_.ms)
       val stageSum = ss.map(_.ms).sum
       println(f"\n=== $name  wall=${wallMs / 1000}%.3fs rows=$n jobs=${jobs.size} stages=${ss.size} stageSum=${stageSum / 1000.0}%.3fs (gap=${(wallMs - stageSum) / 1000.0}%.3fs sched/driver)")
       ss.take(14).foreach { s =>
         println(f"    stage ${s.id}%4d ${s.ms}%6dms tasks=${s.tasks}%4d in=${s.inputMb}%8.2fMB sRead=${s.shuffleReadMb}%8.2fMB sWrite=${s.shuffleWriteMb}%8.2fMB  ${s.name.take(90)}")
       }
+      if (observed.nonEmpty)
+        println("    counters " + observed.map { case (k, r) =>
+          r.schema.fieldNames.zip(r.toSeq).map { case (f, v) => s"$f=$v" }
+            .mkString(s"$k{", ",", "}")
+        }.mkString(" "))
     }
     spark.stop()
   }

@@ -114,17 +114,15 @@ final class Pipeline private (
     private val source: () => DataFrame,
     private val steps: Vector[PStep],
     private val rejectionHandlers: Vector[DataFrame => Unit],
-    private val afterHandlers: Vector[LoadStatistic => Unit],
-    private val cacheOnGo: Boolean) {
+    private val afterHandlers: Vector[LoadStatistic => Unit]) {
 
   import Pipeline._
 
   private def copyWith(
       steps: Vector[PStep] = steps,
       rejectionHandlers: Vector[DataFrame => Unit] = rejectionHandlers,
-      afterHandlers: Vector[LoadStatistic => Unit] = afterHandlers,
-      cacheOnGo: Boolean = cacheOnGo): Pipeline =
-    new Pipeline(name, source, steps, rejectionHandlers, afterHandlers, cacheOnGo)
+      afterHandlers: Vector[LoadStatistic => Unit] = afterHandlers): Pipeline =
+    new Pipeline(name, source, steps, rejectionHandlers, afterHandlers)
 
   private def add(step: PStep): Pipeline = copyWith(steps = steps :+ step)
 
@@ -204,7 +202,10 @@ final class Pipeline private (
     * `rejectionCategory`, `rejectionReason`, `rejectionStep`,
     * `rejectionException` (reference column names: gratum
     * `Pipeline.groovy:174-189`). Schemas across steps are aligned by
-    * name, missing columns null.
+    * name, missing columns null. A column whose type differs between
+    * steps (a typed step converted it) and is a string in some step's
+    * rows is a string in every step's rows: each row as it was
+    * rejected. Other type differences widen under union coercion.
     *
     * Determinism: each step's complement is reconstructed from the
     * declared plan, so for a NONDETERMINISTIC rejecting step the kept
@@ -281,7 +282,17 @@ final class Pipeline private (
             StructField("rejectionStep", StringType),
             StructField("rejectionException", StringType))))
       case some =>
-        some.reduce(_.unionByName(_, allowMissingColumns = true))
+        // union coercion would widen string and int to bigint and cast
+        // the string side, failing on the first value a typed step
+        // rejected — such a column stays a string everywhere
+        val asString = some.flatMap(_.schema.fields).groupBy(_.name).collect {
+          case (c, fs) if fs.exists(_.dataType == StringType) &&
+              fs.exists(_.dataType != StringType) => c
+        }.toSet
+        some.map(df => df.select(df.schema.fields.toIndexedSeq.map { f =>
+          val c = df.col(s"`${f.name.replace("`", "``")}`")
+          if (asString(f.name) && f.dataType != StringType) c.cast(StringType).as(f.name) else c
+        }: _*)).reduce(_.unionByName(_, allowMissingColumns = true))
     }
   }
 
@@ -362,7 +373,7 @@ final class Pipeline private (
       case _ => false
     } || rejectionHandlers.nonEmpty)
     val src0 = source()
-    val src = if (cacheOnGo || hasSideOutputs) src0.persist() else src0
+    val src = if (hasSideOutputs) src0.persist() else src0
     val withSrc = copyWith().replaceSource(() => src)
     val spark = src.sparkSession
 
@@ -535,7 +546,7 @@ final class Pipeline private (
       persisted.unpersist()
     }
 
-    if (cacheOnGo || hasSideOutputs) src.unpersist()
+    if (hasSideOutputs) src.unpersist()
     val stat = LoadStatistic(name, loaded, counted.toMap.filter(_._2.nonEmpty),
       (System.nanoTime() - t0) / 1000000L, stepTimings.toMap)
     afterHandlers.foreach(_(stat))
@@ -543,11 +554,7 @@ final class Pipeline private (
   }
 
   private def replaceSource(newSource: () => DataFrame): Pipeline =
-    new Pipeline(name, newSource, steps, rejectionHandlers, afterHandlers, cacheOnGo = false)
-
-  /** Persist the source during [[go]] so the loaded count, rejection
-    * complement, sinks and branches don't re-read it. */
-  def cached(): Pipeline = copyWith(cacheOnGo = true)
+    new Pipeline(name, newSource, steps, rejectionHandlers, afterHandlers)
 
   // ------------------------------------------------------- meta operators
 
@@ -1762,7 +1769,7 @@ object Pipeline {
 
   /** Entry point over any DataFrame (gratum `Source.into`). */
   def of(name: String, df: => DataFrame): Pipeline =
-    new Pipeline(name, () => df, Vector.empty, Vector.empty, Vector.empty, cacheOnGo = false)
+    new Pipeline(name, () => df, Vector.empty, Vector.empty, Vector.empty)
 
   def of(df: => DataFrame): Pipeline = of("pipeline", df)
 

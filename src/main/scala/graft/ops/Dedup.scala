@@ -169,20 +169,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Corpus-scale MinHash signatures: one row (id, __sig__) per input
-    * row, via the native [[graft.functions.MinHashSig]] expression — a
-    * single tight-loop pass per row inside whole-stage codegen, no
-    * shuffle. Repartitions first so heavy per-row compute doesn't
-    * inherit a single-file scan's 1-task layout. */
-  def minhashSignatures(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int,
-      shingler: (Column, Int) => Column = TextOps.shingles): DataFrame =
-    spreadByKey(df, idCol, textCol)
-      .select(col("__id__"),
-        graft.functions.exprs.minhash_sig(
-          shingler(col("__t__"), shingleN), numHashes).as("__sig__"))
-
   /** Candidate near-dup pairs via LSH banding of the MinHash signature.
     *
     * Buckets carry only (id, signature); candidates are screened by
@@ -1389,11 +1375,17 @@ object Dedup {
       // one PERSISTED gram-frequency aggregate feeds both the guard
       // and the goodGrams semi-join side (the LshBlocking fusion
       // discipline — never pay the frequency aggregate twice); one
-      // row per distinct gram, small next to the gram rows themselves
-      val gramCounts = cached.groupBy("__h__").agg(count(lit(1)).as("__n__"))
+      // row per distinct gram, small next to the gram rows themselves.
+      // Its counters are observed as graft.shingle.grams.
+      val counters = Occupancy.selfCounters(col("__n__"), maxDocsPerGram)
+      val gramCounts = Occupancy.observed(
+          cached.groupBy("__h__").agg(count(lit(1)).as("__n__")),
+          "graft.shingle.grams", counters)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val result = pairs(cached, Some(gramCounts)).localCheckpoint(true)
+        val result = Occupancy.counted(pairs(cached, Some(gramCounts)),
+            "graft.shingle.edges")
+          .localCheckpoint(true)
         // the LshBlocking all-capped discipline, gram form: when every
         // SHARED gram exceeds maxDocsPerGram and none sits in the
         // pairable band, the edge set is empty by saturation — a
@@ -1428,19 +1420,11 @@ object Dedup {
         // instead of two, and the common non-empty path pays one
         // take(1) instead of the occupancy job.
         if (result.isEmpty) {
-          val occ = gramCounts.agg(
-            sum(when(col("__n__").between(2, maxDocsPerGram), lit(1))
-              .otherwise(lit(0))).as("__pairable__"),
-            sum(when(col("__n__") > maxDocsPerGram, lit(1))
-              .otherwise(lit(0))).as("__capped__"),
-            sum(when(col("__n__") > maxDocsPerGram, col("__n__"))
-              .otherwise(lit(0L))).as("__cappedMass__"),
-            sum(col("__n__")).as("__mass__"))
-            .head()
-          val pairable = if (occ.isNullAt(0)) 0L else occ.getLong(0)
-          val capped = if (occ.isNullAt(1)) 0L else occ.getLong(1)
-          val cappedMass = if (occ.isNullAt(2)) 0L else occ.getLong(2)
-          val mass = if (occ.isNullAt(3)) 0L else occ.getLong(3)
+          val occ = Occupancy.exact(gramCounts, counters)
+          val pairable = occ.getAs[Long]("pairable")
+          val capped = occ.getAs[Long]("capped")
+          val cappedMass = occ.getAs[Long]("capped_rows")
+          val mass = occ.getAs[Long]("rows")
           if (capped > 0 && pairable == 0) {
             if (cappedMass >= saturationMassFraction * mass)
               throw new IllegalStateException(
@@ -1621,7 +1605,12 @@ object Dedup {
         graft.functions.similarityExprs.vec_norm(col("__v__")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val good = indexed.groupBy("__cell__").agg(count(lit(1)).as("__n__"))
+      // cell occupancy, observed as graft.semantic.cells
+      val counters = Occupancy.selfCounters(col("__n__"), maxCell)
+      val cellCounts = Occupancy.observed(
+        indexed.groupBy("__cell__").agg(count(lit(1)).as("__n__")),
+        "graft.semantic.cells", counters)
+      val good = cellCounts
         .filter(col("__n__").between(2, maxCell))
         .select("__cell__")
       val ok = indexed.join(good, Seq("__cell__"), "left_semi")
@@ -1683,15 +1672,13 @@ object Dedup {
       // runs once, and the common non-empty path pays one take(1)
       // instead of the health job.
       if (result.isEmpty) {
-        val health = indexed.groupBy("__cell__").agg(count(lit(1)).as("__n__"))
-          .agg(count(lit(1)).as("cells"),
-            sum(when(col("__n__").between(2, maxCell), 1).otherwise(0)).as("pairable"),
-            sum(when(col("__n__") > maxCell, 1).otherwise(0)).as("capped"))
-          .head()
-        if (health.getLong(0) > 0 && health.getLong(1) == 0 && health.getLong(2) > 0)
+        val health = Occupancy.exact(cellCounts, counters)
+        val cells = health.getAs[Long]("groups")
+        val capped = health.getAs[Long]("capped")
+        if (cells > 0 && health.getAs[Long]("pairable") == 0 && capped > 0)
           throw new IllegalStateException(
             s"semanticNearDups: every populated cell exceeds maxCell=$maxCell " +
-              s"(${health.getLong(2)} of ${health.getLong(0)} cells capped) — the " +
+              s"($capped of $cells cells capped) — the " +
               s"quantizer is under-sized for this corpus at nCells=$nCells; raise " +
               "nCells (or use semanticNearDups, which sizes it to the corpus)")
       }

@@ -40,16 +40,9 @@ object Graph {
     * answer, exactly). Larger graphs take the star-contraction loop —
     * the price of the driver shortcut is one count we need anyway.
     */
-  /** `roundEdgeCounts` (optional measurement hook, [[ScaleStats]]):
-    * when non-null, each DISTRIBUTED star-contraction round appends its
-    * post-round edge count — iteration count and per-iteration volume
-    * become attributable from one run. Stays empty on the driver
-    * union-find path (no rounds there — that emptiness IS the signal
-    * that the driver shortcut ran). */
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 50, maxDriverEdges: Int = 4000000,
-      roundEdgeCounts: scala.collection.mutable.Buffer[Long] = null): DataFrame = {
+      maxIter: Int = 50, maxDriverEdges: Int = 4000000): DataFrame = {
 
     // normalize: distinct undirected edges, self-loops dropped, kept as
     // (larger, smaller) so the first small-star sees every edge
@@ -67,11 +60,12 @@ object Graph {
     // guard, driver collect / distributed final join), and each read
     // would otherwise re-execute the caller's whole edge pipeline.
     // (With the `e` normalize above, an unmaterialized `edges` input is
-    // thus executed exactly twice.)
-    val nodes = edges
-      .select(explode(array(col(srcCol).cast("long"), col(dstCol).cast("long"))).as("node"))
-      .filter(col("node").isNotNull)
-      .distinct()
+    // thus executed exactly twice.) Its size is observed as
+    // graft.cc.nodes.
+    val nodes = Occupancy.counted(edges
+        .select(explode(array(col(srcCol).cast("long"), col(dstCol).cast("long"))).as("node"))
+        .filter(col("node").isNotNull)
+        .distinct(), "graft.cc.nodes")
       .localCheckpoint(true)
 
     val spark = edges.sparkSession
@@ -203,9 +197,11 @@ object Graph {
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint(true)
+      // each round's edge count is observed as graft.cc.round.<i>; the
+      // driver union-find path above runs no round
+      val next = Occupancy.counted(smallStar(largeStar(e)), s"graft.cc.round.${it + 1}")
+        .localCheckpoint(true)
       val nfp = fingerprint(next)
-      if (roundEdgeCounts != null) roundEdgeCounts += nfp._1
       converged = nfp == fp
       fp = nfp
       e = next

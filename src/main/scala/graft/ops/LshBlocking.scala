@@ -84,9 +84,11 @@ object LshBlocking {
     // aggregate is the banding pass over every (row, band); running
     // it twice cost the whole family ~10-35% when the guard first
     // landed). The counts frame is small: one row per occupied
-    // (band, bucket).
-    val bucketCounts = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__n__"))
+    // (band, bucket). Its counters are observed as graft.lsh.buckets.
+    val counters = Occupancy.selfCounters(col("__n__"), maxBucket)
+    val bucketCounts = Occupancy.observed(
+        banded.groupBy("band", "bucket").agg(count(lit(1)).as("__n__")),
+        "graft.lsh.buckets", counters)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val goodBuckets = bucketCounts
@@ -103,8 +105,8 @@ object LshBlocking {
         .filter(col("id1") < col("id2"))
         .select(col("id1"), col("id2"), col("p1"), col("p2"))
 
-      val result = screen(raw)
-        .dropDuplicates("id1", "id2")
+      val result = Occupancy.counted(screen(raw).dropDuplicates("id1", "id2"),
+          "graft.lsh.pairs")
         .localCheckpoint(true)
 
       // ALL-capped guard (the semantic family's under-sized-quantizer
@@ -140,19 +142,11 @@ object LshBlocking {
       // The saturation exception is unchanged — it just surfaces
       // after the (empty, therefore cheap) materialization.
       if (result.isEmpty) {
-        val occ = bucketCounts.agg(
-          sum(when(col("__n__").between(2, maxBucket), lit(1)).otherwise(lit(0)))
-            .as("__pairable__"),
-          sum(when(col("__n__") > maxBucket, lit(1)).otherwise(lit(0)))
-            .as("__capped__"),
-          sum(when(col("__n__") > maxBucket, col("__n__")).otherwise(lit(0L)))
-            .as("__cappedMass__"),
-          sum(col("__n__")).as("__mass__"))
-          .head()
-        val pairableBuckets = if (occ.isNullAt(0)) 0L else occ.getLong(0)
-        val cappedBuckets = if (occ.isNullAt(1)) 0L else occ.getLong(1)
-        val cappedMass = if (occ.isNullAt(2)) 0L else occ.getLong(2)
-        val mass = if (occ.isNullAt(3)) 0L else occ.getLong(3)
+        val occ = Occupancy.exact(bucketCounts, counters)
+        val pairableBuckets = occ.getAs[Long]("pairable")
+        val cappedBuckets = occ.getAs[Long]("capped")
+        val cappedMass = occ.getAs[Long]("capped_rows")
+        val mass = occ.getAs[Long]("rows")
         if (cappedBuckets > 0 && pairableBuckets == 0) {
           if (cappedMass >= saturationMassFraction * mass)
             throw new IllegalStateException(
@@ -205,13 +199,20 @@ object LshBlocking {
       // buckets with members on BOTH sides, under the combined cap
       // one PERSISTED occupancy aggregate feeds both the guard and the
       // good-bucket join side (the candidatePairs fusion discipline —
-      // never pay the banding aggregate twice)
-      val tagged = ba.withColumn("__s__", lit(0))
-        .unionByName(bb.withColumn("__s__", lit(1)))
-        .groupBy("band", "bucket")
-        .agg(count(lit(1)).as("__n__"), sum(col("__s__")).as("__nb__"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // never pay the banding aggregate twice); its counters are
+      // observed as graft.lsh_cross.buckets, a bucket forming
+      // (n − nb)·nb pairs
       val crossSide = col("__nb__") >= 1 && col("__nb__") < col("__n__")
+      val counters = Occupancy.counters(col("__n__"), maxBucket, crossSide,
+        (col("__n__") - col("__nb__")) * col("__nb__"))
+      val tagged = Occupancy.observed(
+          ba.withColumn("__s__", lit(0))
+            .unionByName(bb.withColumn("__s__", lit(1)))
+            .groupBy("band", "bucket")
+            .agg(count(lit(1)).as("__n__"), sum(col("__s__")).as("__nb__")),
+          "graft.lsh_cross.buckets",
+          counters :+ coalesce(sum(col("__nb__")), lit(0L)).as("b_rows"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val good = tagged
         .filter(crossSide && col("__n__") <= maxBucket)
         .select("band", "bucket")
@@ -223,8 +224,8 @@ object LshBlocking {
           Seq("band", "bucket"))
         .select(col("id1"), col("id2"), col("p1"), col("p2"))
       try {
-        val result = screen(raw)
-          .dropDuplicates("id1", "id2")
+        val result = Occupancy.counted(screen(raw).dropDuplicates("id1", "id2"),
+            "graft.lsh_cross.pairs")
           .localCheckpoint(true)
         // the candidatePairs all-capped guard, cross form: only buckets
         // with members on BOTH sides can pair, so only those count —
@@ -238,14 +239,9 @@ object LshBlocking {
         // one banding pass instead of two, and the common non-empty
         // path pays one take(1) instead of the occupancy job.
         if (result.isEmpty) {
-          val occ = tagged.agg(
-            sum(when(crossSide && col("__n__") <= maxBucket, lit(1))
-              .otherwise(lit(0))).as("__pairable__"),
-            sum(when(crossSide && col("__n__") > maxBucket, lit(1))
-              .otherwise(lit(0))).as("__capped__"))
-            .head()
-          val pairableBuckets = if (occ.isNullAt(0)) 0L else occ.getLong(0)
-          val cappedBuckets = if (occ.isNullAt(1)) 0L else occ.getLong(1)
+          val occ = Occupancy.exact(tagged, counters)
+          val pairableBuckets = occ.getAs[Long]("pairable")
+          val cappedBuckets = occ.getAs[Long]("capped")
           if (cappedBuckets > 0 && pairableBuckets == 0)
             throw new IllegalStateException(
               s"lsh cross blocking: all $cappedBuckets cross-side buckets " +

@@ -79,6 +79,12 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema))
 
+  /** Blocks until every listener event posted so far has reached its
+    * listeners (`LiveListenerBus.waitUntilEmpty` is private[spark]), so
+    * a tool can read what its listener saw of the actions it just ran. */
+  def drainListeners(spark: SparkSession): Unit =
+    checked(spark.sparkContext.listenerBus.waitUntilEmpty())
+
   /** Non-blocking observation read: empty map until the metrics event
     * arrives. Reads `Observation.future` (private[sql]) directly —
     * 4.1.2's own `getOrEmpty` substitutes `Row.empty` before completion

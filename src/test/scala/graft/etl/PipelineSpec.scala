@@ -257,6 +257,31 @@ class PipelineSpec extends AnyFunSuite {
     assert(sha == "bd2f4bef1880763b8f05647dd881eb3c4293e3c213d0ec4fa332db91ad85fb84", s"typed-step outputs hash to $sha")
   }
 
+  test("rejections after a typed step keep a converted column as the string it was rejected as") {
+    // a's bad value is rejected by asInt(a) while a is a string; the
+    // later asInt(b) rejects a row whose a is already an int
+    val ints = Pipeline.of(Seq(("x", "1"), ("2", "y"), ("3", "4")).toDF("a", "b"))
+      .asInt("a").asInt("b")
+    val rej = ints.rejections
+    assert(rej.schema("a").dataType == StringType && rej.schema("b").dataType == StringType)
+    assert(rej.select("a", "b", "rejectionStep").collect().map(r => (r.get(0), r.get(1), r.get(2)))
+      .toSet == Set(("x", "1", "asInt(a)"), ("2", "y", "asInt(b)")))
+    // a date converted by asDate (to TIMESTAMP_NTZ), then a filter
+    // rejecting on it: the value the filter saw, as a string, next to
+    // the unparseable one
+    val dated = Pipeline.of(Seq(("2020-01-02", 1), ("nope", 2), ("2021-03-04", 3)).toDF("d", "n"))
+      .asDate("d", "yyyy-MM-dd").filter("late", col("d") < lit("2021-01-01 00:00:00").cast(TimestampNTZType))
+    val drej = dated.rejections
+    assert(drej.schema("d").dataType == StringType && drej.schema("n").dataType == IntegerType)
+    assert(drej.select("d", "n", "rejectionCategory").collect().map(r => (r.get(0), r.get(1), r.get(2)))
+      .toSet == Set(("nope", 2, "INVALID_FORMAT"), ("2021-03-04 00:00:00", 3, "IGNORE_ROW")))
+    // an onRejection handler on such a chain runs instead of failing go()
+    var handled = Seq.empty[String]
+    val stat = ints.onRejection(r => handled = r.select("a").collect().map(_.getString(0)).toSeq).go()
+    assert(stat.loaded == 1 && stat.rejections == 2)
+    assert(handled.sorted == Seq("2", "x"))
+  }
+
   test("a typed step converts each non-blank value once under go(), at most twice under toDF") {
     // the converter counts its own calls: 100 null, 100 blank, 700
     // parseable and 100 unparseable values, so 800 non-blank

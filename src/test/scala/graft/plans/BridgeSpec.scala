@@ -60,6 +60,26 @@ class BridgeSpec extends AnyFunSuite {
     assert(df.filter($"n" > 1).collect().map(_.getString(1)).toSeq == Seq("v2"))
   }
 
+  test("drainListeners returns once a listener has seen the actions before it") {
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+        Thread.sleep(200) // a slow listener must still be waited for
+        seen.incrementAndGet()
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Seq(1, 2, 3).toDF("x").count()
+      Seq(4, 5).toDF("x").collect()
+      Bridge.drainListeners(spark)
+      assert(seen.get == 2)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("observedMetrics reads an Observation without blocking") {
     val obs = new Observation("bridge-obs")
     val df = Seq(1, 2, 3).toDF("x").observe(obs, sum($"x").as("s"))
