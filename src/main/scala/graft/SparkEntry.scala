@@ -2452,8 +2452,8 @@ object SparkEntry {
       // answers POST-only, and the echoed body must land back on ITS
       // row (requestMany's pass-through columns carry the join). A
       // verb regression or a row/response mix-up fails the hash gate.
-      // The calls run at EXECUTION time, so the result is eagerly
-      // localCheckpointed before the server stops.
+      // The calls run at EXECUTION time, so the result is materialized
+      // before the server stops.
       val server = com.sun.net.httpserver.HttpServer.create(
         new java.net.InetSocketAddress("127.0.0.1", 0), 0)
       try {
@@ -2474,12 +2474,11 @@ object SparkEntry {
           .filter(col("n_name").isNotNull)
           .select(col("n_nationkey"), lit(url).as("__url__"),
             col("n_name").as("__body__"))
-        sources.Http.postMany(reqs, "__url__", "__body__",
-          bodyContentType = "text/plain", parallelism = 4)
+        ops.Materialize.eager(sources.Http.postMany(reqs, "__url__", "__body__",
+            bodyContentType = "text/plain", parallelism = 4)
           .toDF
           .select(col("n_nationkey").cast(LongType).as("n_nationkey"),
-            col("resp_body").as("n_name"))
-          .localCheckpoint(true)
+            col("resp_body").as("n_name")))
           .orderBy("n_nationkey")
       } finally server.stop(0)
     },

@@ -4,6 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
+import graft.ops.Materialize
 
 /** Run-killing abort (reference `PipelineAbortException.java` +
   * `Step.groovy:39-41`): raised when a step accumulates more than 50
@@ -335,27 +337,22 @@ final class Pipeline private (
     * the action's duration for every step when no metrics are available
     * (documented approximation vs `LoadStatistic.groovy`).
     */
-  /** Observed metric with a bounded wait. CollectMetrics can be pruned
-    * out of the executed plan entirely (limit 0, empty-relation
-    * propagation above the observe), in which case its metric never
-    * arrives — default to 0 after the deadline instead of blocking in
-    * `Observation.get` forever. Metrics normally arrive within
-    * milliseconds of the action via the listener bus. */
-  private def metricOrZero(obs: Observation, key: String, timeoutMs: Long = 10000L): Long = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (System.currentTimeMillis() < deadline) {
-      val m = org.apache.spark.sql.graftbridge.Bridge.observedMetrics(obs)
-      if (m.nonEmpty)
-        // a sum over zero observed rows is a NULL metric value
-        return m.get(key) match {
-          case Some(v: Number) => v.longValue()
-          case _ => 0L
-        }
-      Thread.sleep(20)
+  /** Observed metric of an action whose listener events have been
+    * drained. CollectMetrics can be pruned out of the executed plan
+    * entirely (limit 0, empty-relation propagation above the observe),
+    * in which case its metric never arrives and counts 0 instead of
+    * blocking in `Observation.get` forever. */
+  private def metricOrZero(obs: Observation, key: String): Long = {
+    val m = Bridge.observedMetrics(obs)
+    if (m.isEmpty) {
+      System.err.println(
+        s"[graft] WARNING observation $key never arrived (pruned plan); counting 0")
+      0L
+    } else m.get(key) match {
+      // a sum over zero observed rows is a NULL metric value
+      case Some(v: Number) => v.longValue()
+      case _ => 0L
     }
-    System.err.println(
-      s"[graft] WARNING observation $key never arrived (pruned plan or listener lag); counting 0")
-    0L
   }
 
   def go(): LoadStatistic = {
@@ -372,8 +369,16 @@ final class Pipeline private (
       case _: BranchStep | _: SinkStep => true
       case _ => false
     } || rejectionHandlers.nonEmpty)
-    val src0 = source()
-    val src = if (hasSideOutputs) src0.persist() else src0
+    val src = source()
+    // persisted for the run when side outputs need a second pass
+    val stat =
+      if (hasSideOutputs) Materialize.scoped(src)(run(t0, src, fusedSink))
+      else run(t0, src, fusedSink)
+    afterHandlers.foreach(_(stat))
+    stat
+  }
+
+  private def run(t0: Long, src: DataFrame, fusedSink: Option[SinkStep]): LoadStatistic = {
     val withSrc = copyWith().replaceSource(() => src)
     val spark = src.sparkSession
 
@@ -443,15 +448,8 @@ final class Pipeline private (
     // The single action: count() the instrumented flow, or — fused — let
     // the trailing sink write it with the loaded count observed on top.
     // A file write reports to listeners as a "command" execution.
-    val (actionName, action) = fusedSink match {
-      case Some(sk) =>
-        val loadedObs = nextObs()
-        "command" -> (() => {
-          sk.write(instrumented.observe(loadedObs, count(lit(1)).as("n")))
-          metricOrZero(loadedObs, "n")
-        })
-      case None => "count" -> (() => instrumented.count())
-    }
+    val loadedObs = fusedSink.map(_ => nextObs())
+    val actionName = if (fusedSink.isDefined) "command" else "count"
     // Run it with a QueryExecutionListener attached: both actions run
     // their OWN derived QueryExecution (an agg or a write command over
     // the instrumented plan), so the executed plan — with populated SQL
@@ -471,18 +469,19 @@ final class Pipeline private (
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(planCapture)
-    var actionOk = false
-    val loaded =
-      try { val n = action(); actionOk = true; n }
-      finally {
-        // the listener bus is async; give the success event a bounded
-        // window to deliver before unregistering. Skip the wait when
-        // the action threw — onSuccess will never fire.
-        val deadline = System.currentTimeMillis() + 2000L
-        while (actionOk && executedRoot.isEmpty && System.currentTimeMillis() < deadline)
-          Thread.sleep(10)
+    val actionCount =
+      try fusedSink match {
+        case Some(sk) =>
+          sk.write(instrumented.observe(loadedObs.get, count(lit(1)).as("n")))
+          None
+        case None => Some(instrumented.count())
+      } finally {
+        // the listener bus is async: after the drain, the plan capture
+        // and every observation of the action have seen its events
+        Bridge.drainListeners(spark)
         spark.listenerManager.unregister(planCapture)
       }
+    val loaded = actionCount.getOrElse(metricOrZero(loadedObs.get, "n"))
     val actionMs = (System.nanoTime() - t0) / 1000000L
 
     // ---- fold observed metrics into per-category per-step counts
@@ -541,16 +540,12 @@ final class Pipeline private (
       }
     }
     if (rejectionHandlers.nonEmpty) {
-      val persisted = withSrc.rejectionsWith(resultRows).persist()
-      rejectionHandlers.foreach(h => h(persisted))
-      persisted.unpersist()
+      val rejected = withSrc.rejectionsWith(resultRows)
+      Materialize.scoped(rejected)(rejectionHandlers.foreach(h => h(rejected)))
     }
 
-    if (hasSideOutputs) src.unpersist()
-    val stat = LoadStatistic(name, loaded, counted.toMap.filter(_._2.nonEmpty),
+    LoadStatistic(name, loaded, counted.toMap.filter(_._2.nonEmpty),
       (System.nanoTime() - t0) / 1000000L, stepTimings.toMap)
-    afterHandlers.foreach(_(stat))
-    stat
   }
 
   private def replaceSource(newSource: () => DataFrame): Pipeline =

@@ -138,17 +138,15 @@ object Contamination {
     // the caller's action instead of a third and fourth time
     val evalGrams = gramHashes(eval, Seq.empty, textCol, gramN)
       .select("__h__").distinct()
-    evalGrams.persist()
-    val bloom =
-      try {
-        val nGrams = evalGrams.count()
-        // a gram-less eval side taints nothing — and Spark's
-        // bloomFilter aggregate NPEs on zero rows (null buffer into
-        // readFrom)
-        if (nGrams == 0) return corpus
-        evalGrams.stat.bloomFilter("__h__", nGrams, fpp)
-      } finally evalGrams.unpersist()
-    val bc = corpus.sparkSession.sparkContext.broadcast(bloom)
+    val bloom = Materialize.scoped(evalGrams) {
+      val nGrams = evalGrams.count()
+      // a gram-less eval side taints nothing — and Spark's
+      // bloomFilter aggregate NPEs on zero rows (null buffer into
+      // readFrom)
+      Option.when(nGrams > 0)(evalGrams.stat.bloomFilter("__h__", nGrams, fpp))
+    }
+    if (bloom.isEmpty) return corpus
+    val bc = corpus.sparkSession.sparkContext.broadcast(bloom.get)
     val grams = graft.functions.exprs.word_ngram_hashes(
       col(textCol), gramN, shortFallback = false)
     // null text has no grams: coalesce keeps it, matching the join form

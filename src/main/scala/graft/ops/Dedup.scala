@@ -106,15 +106,13 @@ object Dedup {
     val refFps = catalog
       .select(col(catalogFpCol).as("__fp__"))
       .filter(col("__fp__").isNotNull).distinct()
-    refFps.persist()
-    val bloom =
-      try {
-        val nFps = refFps.count()
-        if (nFps == 0) return corpus
-        refFps.select(xxhash64(col("__fp__")).as("__h__"))
-          .stat.bloomFilter("__h__", nFps, fpp)
-      } finally refFps.unpersist()
-    val bc = corpus.sparkSession.sparkContext.broadcast(bloom)
+    val bloom = Materialize.scoped(refFps) {
+      val nFps = refFps.count()
+      Option.when(nFps > 0)(refFps.select(xxhash64(col("__fp__")).as("__h__"))
+        .stat.bloomFilter("__h__", nFps, fpp))
+    }
+    if (bloom.isEmpty) return corpus
+    val bc = corpus.sparkSession.sparkContext.broadcast(bloom.get)
     // probe gated on the fingerprint: xxhash64(NULL) yields the seed,
     // not NULL, so an ungated probe would give every null-text doc the
     // same constant key and one bloom false positive on it would drop
@@ -478,8 +476,8 @@ object Dedup {
     // components reads its edge input twice (normalize + node set), and
     // an unmaterialized input would re-run the whole LSH screen +
     // exact-verify pipeline each time — measured ~1.5x the query cost
-    val pairs = minhashNearDups(df, idCol, textCol, shingleN, numHashes, bands,
-      threshold, charShingles = charShingles).localCheckpoint(true)
+    val pairs = Materialize.eager(minhashNearDups(df, idCol, textCol, shingleN,
+      numHashes, bands, threshold, charShingles = charShingles))
     clusterDedup(df, idCol, pairs)
   }
 
@@ -848,10 +846,8 @@ object Dedup {
     // planning counts, and the signature pass (the lshNeighborsAuto
     // one-upstream-execution discipline, applied to both sides)
     val pa = corpus.select(col(idCol), col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pb = catalog.select(col(catalogIdCol), col(catalogVecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped(pa, pb) {
       // ONE aggregate over the tagged union replaces four driver
       // actions (two dim probes + two counts, r21): the band-plan
       // count had to scan both sides anyway, so folding the dimension
@@ -872,36 +868,35 @@ object Dedup {
           max(when(col("__side__") === 1, col("__d__"))).as("db"),
           sum(when(col("__d__").isNotNull, 1L).otherwise(0L)).as("n"))
         .head()
-      if (stats.isNullAt(0) || stats.isNullAt(1)) return emptyOut
-      val da = stats.getInt(0)
-      val db = stats.getInt(1)
-      require(da == db,
-        s"crossCorpusEmbeddingNearDups: corpus embeddings have dim " +
-          s"$da but the catalog has dim $db — the catalog " +
-          "must be built with the same embedding model")
-      val n = stats.getLong(2)
-      val (nPlanes, rowsPerBand) =
-        VectorOps.lshPlan(n, threshold, targetBucket, recall, maxBands)
-      val planes = VectorOps.hyperplanes(nPlanes, da, seed)
-      // payload = (vector, hoisted norm) struct — the lshNeighbors r21
-      // discipline: each candidate pair pays one dot product instead of
-      // re-walking both arrays for their norms (bit-identical)
-      def packed(sigs: DataFrame): DataFrame = sigs.select(col("__id__"),
-        struct(col("__v__").as("v"), col("__nrm__").as("n")).as("__pv__"),
-        col("__sig__"))
-      LshBlocking.crossCandidatePairs(
-        packed(VectorOps.lshSignatures(pa, idCol, vecCol, planes)),
-        packed(VectorOps.lshSignatures(pb, catalogIdCol, catalogVecCol, planes)),
-        nPlanes / rowsPerBand, rowsPerBand, maxBucket,
-        screen = _.withColumn("cosine",
-            graft.functions.similarityExprs.cosine_sim_pre(
-              col("p1.v"), col("p2.v"), col("p1.n"), col("p2.n")))
-          .filter(col("cosine") >= threshold)
-          .select(col("id1"), col("id2"), col("cosine")),
-        payload = Some("__pv__"))
-    } finally {
-      pa.unpersist(blocking = false)
-      pb.unpersist(blocking = false)
+      if (stats.isNullAt(0) || stats.isNullAt(1)) emptyOut
+      else {
+        val da = stats.getInt(0)
+        val db = stats.getInt(1)
+        require(da == db,
+          s"crossCorpusEmbeddingNearDups: corpus embeddings have dim " +
+            s"$da but the catalog has dim $db — the catalog " +
+            "must be built with the same embedding model")
+        val n = stats.getLong(2)
+        val (nPlanes, rowsPerBand) =
+          VectorOps.lshPlan(n, threshold, targetBucket, recall, maxBands)
+        val planes = VectorOps.hyperplanes(nPlanes, da, seed)
+        // payload = (vector, hoisted norm) struct — the lshNeighbors r21
+        // discipline: each candidate pair pays one dot product instead of
+        // re-walking both arrays for their norms (bit-identical)
+        def packed(sigs: DataFrame): DataFrame = sigs.select(col("__id__"),
+          struct(col("__v__").as("v"), col("__nrm__").as("n")).as("__pv__"),
+          col("__sig__"))
+        LshBlocking.crossCandidatePairs(
+          packed(VectorOps.lshSignatures(pa, idCol, vecCol, planes)),
+          packed(VectorOps.lshSignatures(pb, catalogIdCol, catalogVecCol, planes)),
+          nPlanes / rowsPerBand, rowsPerBand, maxBucket,
+          screen = _.withColumn("cosine",
+              graft.functions.similarityExprs.cosine_sim_pre(
+                col("p1.v"), col("p2.v"), col("p1.n"), col("p2.n")))
+            .filter(col("cosine") >= threshold)
+            .select(col("id1"), col("id2"), col("cosine")),
+          payload = Some("__pv__"))
+      }
     }
   }
 
@@ -1342,9 +1337,9 @@ object Dedup {
     // runs its higher-order transform interpreted — measured ~30x
     // slower on the documents table.
     // materialize=true (default): the (id, hash) frame is persisted
-    // across its three uses and the result localCheckpoint'ed like
-    // LshBlocking's, so downstream iteration (connected components)
-    // never re-runs the explode. false returns the LAZY plan — for
+    // across its three uses and the result materialized like
+    // LshBlocking's (Materialize.guardedPairs), so downstream iteration
+    // (connected components) never re-runs the explode. false returns the LAZY plan — for
     // composition into a larger single-action query or plan audits.
     def pairs(grams: DataFrame,
         gramCounts: Option[DataFrame] = None): DataFrame = {
@@ -1371,7 +1366,6 @@ object Dedup {
           col("__t__"), shingleN, shortFallback = true)).as("__h__"))
     if (!materialize) pairs(grams)
     else {
-      val cached = grams.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // one PERSISTED gram-frequency aggregate feeds both the guard
       // and the goodGrams semi-join side (the LshBlocking fusion
       // discipline — never pay the frequency aggregate twice); one
@@ -1379,74 +1373,45 @@ object Dedup {
       // Its counters are observed as graft.shingle.grams.
       val counters = Occupancy.selfCounters(col("__n__"), maxDocsPerGram)
       val gramCounts = Occupancy.observed(
-          cached.groupBy("__h__").agg(count(lit(1)).as("__n__")),
+          grams.groupBy("__h__").agg(count(lit(1)).as("__n__")),
           "graft.shingle.grams", counters)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val result = Occupancy.counted(pairs(cached, Some(gramCounts)),
-            "graft.shingle.edges")
-          .localCheckpoint(true)
-        // the LshBlocking all-capped discipline, gram form: when every
-        // SHARED gram exceeds maxDocsPerGram and none sits in the
-        // pairable band, the edge set is empty by saturation — a
-        // corpus of N identical documents would cluster as N
-        // singletons and a cluster dedup would remove NOTHING,
-        // silently. Fail loudly — but only when the over-cap grams
-        // carry most of the corpus's gram MASS (occurrences), i.e.
-        // the saturation is corpus-wide. A duplicate-free corpus
-        // whose docs merely share a small common header produces the
-        // same (capped > 0, pairable == 0) shape with a TINY capped
-        // mass — there, empty edges is the CORRECT answer and the op
-        // logs a warning instead of crashing the pipeline (r15 ADVICE:
-        // the unconditional guard turned a previously-correct empty
-        // result into an exception). KNOWN BLIND SPOT of the 50% mass
-        // split: a corpus of genuine near-duplicates whose docs share
-        // UNDER half their gram occurrences (dups padded with unique
-        // IDs/timestamps) warns and emits zero edges — the price of
-        // not crashing every boilerplate-header corpus; raise
-        // maxDocsPerGram if that shape is expected, or set
-        // saturationMassFraction = 0 to restore the strict fail-loud
-        // guard (any all-capped shape throws). The mass sums ride
-        // the same aggregate — no extra pass. Empty and
-        // genuinely-unshared corpora (capped == 0) pass through
-        // silently. Only the
-        // materialized (production) path runs the check —
-        // materialize=false returns a lazy plan for composition/plan
-        // audits and a driver action here would defeat it.
-        // Guard runs AFTER the materialization and only on an empty
-        // edge set (it can only fire when pairable == 0 ⇒ goodGrams is
-        // empty ⇒ the join emitted nothing) — the
-        // LshBlocking.candidatePairs r21 ordering: one gram pass
-        // instead of two, and the common non-empty path pays one
-        // take(1) instead of the occupancy job.
-        if (result.isEmpty) {
-          val occ = Occupancy.exact(gramCounts, counters)
-          val pairable = occ.getAs[Long]("pairable")
-          val capped = occ.getAs[Long]("capped")
-          val cappedMass = occ.getAs[Long]("capped_rows")
-          val mass = occ.getAs[Long]("rows")
-          if (capped > 0 && pairable == 0) {
-            if (cappedMass >= saturationMassFraction * mass)
-              throw new IllegalStateException(
-                s"sharedShingleEdges: all $capped shared grams exceed " +
-                  s"maxDocsPerGram=$maxDocsPerGram and they carry " +
-                  s"$cappedMass of $mass gram occurrences — the corpus is " +
-                  "saturated and ZERO edges would be emitted (a " +
-                  "wall-to-wall-duplicate corpus would dedup to nothing). " +
-                  "Raise maxDocsPerGram or use a longer shingleN.")
-            else
-              log.warn(
-                s"sharedShingleEdges: the only shared grams ($capped) all " +
-                  s"exceed maxDocsPerGram=$maxDocsPerGram, but they carry " +
-                  s"just $cappedMass of $mass gram occurrences — shared " +
-                  "boilerplate in an otherwise-unique corpus; emitting the " +
-                  "empty edge set.")
-          }
+      // the candidatePairs all-capped guard and mass split, gram form:
+      // when every SHARED gram exceeds maxDocsPerGram, the edge set is
+      // empty by saturation — N identical documents would cluster as N
+      // singletons and a cluster dedup would remove NOTHING, silently.
+      // Fail when the over-cap grams carry most of the gram MASS
+      // (occurrences); a duplicate-free corpus whose docs share a small
+      // header shows the same shape with a TINY capped mass, where empty
+      // edges is correct, so it warns (r15 ADVICE). Blind spot: genuine
+      // near-dups sharing under half their grams (padded with unique
+      // IDs/timestamps) warn too; raise maxDocsPerGram, or set
+      // saturationMassFraction = 0 for the strict guard. Only the
+      // materialized path checks: a driver action here would defeat
+      // materialize=false's lazy plan.
+      Materialize.guardedPairs(
+          Occupancy.counted(pairs(grams, Some(gramCounts)), "graft.shingle.edges"),
+          Seq(grams, gramCounts), gramCounts, counters) { occ =>
+        val pairable = occ.getAs[Long]("pairable")
+        val capped = occ.getAs[Long]("capped")
+        val cappedMass = occ.getAs[Long]("capped_rows")
+        val mass = occ.getAs[Long]("rows")
+        if (capped > 0 && pairable == 0) {
+          if (cappedMass >= saturationMassFraction * mass)
+            throw new IllegalStateException(
+              s"sharedShingleEdges: all $capped shared grams exceed " +
+                s"maxDocsPerGram=$maxDocsPerGram and they carry " +
+                s"$cappedMass of $mass gram occurrences — the corpus is " +
+                "saturated and ZERO edges would be emitted (a " +
+                "wall-to-wall-duplicate corpus would dedup to nothing). " +
+                "Raise maxDocsPerGram or use a longer shingleN.")
+          else
+            log.warn(
+              s"sharedShingleEdges: the only shared grams ($capped) all " +
+                s"exceed maxDocsPerGram=$maxDocsPerGram, but they carry " +
+                s"just $cappedMass of $mass gram occurrences — shared " +
+                "boilerplate in an otherwise-unique corpus; emitting the " +
+                "empty edge set.")
         }
-        result
-      } finally {
-        gramCounts.unpersist(false)
-        cached.unpersist(false)
       }
     }
   }
@@ -1592,8 +1557,8 @@ object Dedup {
         lit(0.0).as("cosine")).where(lit(false))
     val centroids = centroidsOpt.get
     // persisted: referenced by the cell-size aggregate and both pair
-    // sides; materialized (localCheckpoint) before the finally-unpersist
-    // so the returned frame never recomputes the assignment.
+    // sides; the pairs are materialized before it is released, so the
+    // returned frame never recomputes the assignment.
     // __nrm__ hoists the vector norm to ONE VecNorm per indexed row
     // (r21, guide §1.2 per-task work): the pair screen below evaluates
     // a cosine per CANDIDATE PAIR, and the naive kernel re-walked both
@@ -1603,87 +1568,75 @@ object Dedup {
     val indexed = Ivf.index(df, idCol, vecCol, centroids, replication)
       .withColumn("__nrm__",
         graft.functions.similarityExprs.vec_norm(col("__v__")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // cell occupancy, observed as graft.semantic.cells
-      val counters = Occupancy.selfCounters(col("__n__"), maxCell)
-      val cellCounts = Occupancy.observed(
-        indexed.groupBy("__cell__").agg(count(lit(1)).as("__n__")),
-        "graft.semantic.cells", counters)
-      val good = cellCounts
-        .filter(col("__n__").between(2, maxCell))
-        .select("__cell__")
-      val ok = indexed.join(good, Seq("__cell__"), "left_semi")
-      // Sub-bucketed pair join (r21, guide §2.5): within-cell pair
-      // work is quadratic in cell occupancy, so (a) a SINGLE cell must
-      // never be one task's whole workload (a maxCell cell is up to
-      // 10k² = 100M pairs — AQE's skew splitter cannot split one key),
-      // and (b) at small cell counts (the replication=nCells exact
-      // arm) the join would otherwise run on ≤ nCells tasks. Each side
-      // gets a deterministic id-hash sub-bucket 0..b-1 and enumerates
-      // the other side's buckets, so every pair lands in EXACTLY ONE
-      // (cell, ba, bb) key — b² keys per cell, per-key work capped at
-      // (|cell|/b)². b is plan-time scale-adaptive: 1 (no replication
-      // cost at all) once nCells covers the cluster parallelism,
-      // up to 16 for tiny quantizers; the repartition pins the
-      // exchange's partition count against byte-based AQE coalescing
-      // (Par.pinned — the LshBlocking discipline).
-      val pinned = Par.pinned(df)
-      val b = math.max(1, math.min(16,
-        math.ceil(math.sqrt(2.0 * pinned / math.max(nCells, 1))).toInt))
-      val bl = lit(b.toLong)
-      val left = ok.select(col("__cell__"), col("__id__").as("id1"),
-          col("__v__").as("v1"), col("__nrm__").as("n1"),
-          pmod(xxhash64(col("__id__")), bl).as("__ba__"))
-        .withColumn("__bb__", explode(sequence(lit(0L), lit((b - 1).toLong))))
-        .repartition(pinned, col("__cell__"), col("__ba__"), col("__bb__"))
-      val right = ok.select(col("__cell__"), col("__id__").as("id2"),
-          col("__v__").as("v2"), col("__nrm__").as("n2"),
-          pmod(xxhash64(col("__id__")), bl).as("__bb__"))
-        .withColumn("__ba__", explode(sequence(lit(0L), lit((b - 1).toLong))))
-        .repartition(pinned, col("__cell__"), col("__ba__"), col("__bb__"))
-      val result = left
-        .join(right, Seq("__cell__", "__ba__", "__bb__"))
-        .filter(col("id1") < col("id2"))
-        // score and THRESHOLD-FILTER before the cross-cell pair dedup:
-        // a pair sharing several cells pays the (cheap, codegen'd)
-        // cosine once per shared cell, but only QUALIFYING pairs — a
-        // tiny fraction of the candidates — reach the dedup shuffle.
-        // Deduping first would shuffle every candidate pair still
-        // carrying both dense vectors (~1 KB/row): measured ~4x slower
-        // and memory-unstable at 32 threads
-        .withColumn("cosine",
-          graft.functions.similarityExprs.cosine_sim_pre(
-            col("v1"), col("v2"), col("n1"), col("n2")))
-        .filter(col("cosine") >= threshold)
-        .select(col("id1"), col("id2"), col("cosine"))
-        .dropDuplicates("id1", "id2")
-        .localCheckpoint(true)
-      // the cap drops non-discriminative cells — a legitimate skew
-      // trade for SOME cells, a silent wrong answer when it hits ALL
-      // of them (an under-sized quantizer on a grown corpus returns
-      // zero pairs while looking healthy — measured at 26x scale:
-      // every cell past maxCell, 676M candidate pairs shed, 0 rows).
-      // That configuration fails loudly instead. The guard can only
-      // FIRE when the pair set is empty (all cells capped ⇒ good is
-      // empty ⇒ the join emitted nothing), so it runs AFTER the
-      // materialization and only on an empty result — the
-      // LshBlocking.candidatePairs r21 ordering: the index pipeline
-      // runs once, and the common non-empty path pays one take(1)
-      // instead of the health job.
-      if (result.isEmpty) {
-        val health = Occupancy.exact(cellCounts, counters)
-        val cells = health.getAs[Long]("groups")
-        val capped = health.getAs[Long]("capped")
-        if (cells > 0 && health.getAs[Long]("pairable") == 0 && capped > 0)
-          throw new IllegalStateException(
-            s"semanticNearDups: every populated cell exceeds maxCell=$maxCell " +
-              s"($capped of $cells cells capped) — the " +
-              s"quantizer is under-sized for this corpus at nCells=$nCells; raise " +
-              "nCells (or use semanticNearDups, which sizes it to the corpus)")
-      }
-      result
-    } finally indexed.unpersist(false)
+    // cell occupancy, observed as graft.semantic.cells
+    val counters = Occupancy.selfCounters(col("__n__"), maxCell)
+    val cellCounts = Occupancy.observed(
+      indexed.groupBy("__cell__").agg(count(lit(1)).as("__n__")),
+      "graft.semantic.cells", counters)
+    val good = cellCounts
+      .filter(col("__n__").between(2, maxCell))
+      .select("__cell__")
+    val ok = indexed.join(good, Seq("__cell__"), "left_semi")
+    // Sub-bucketed pair join (r21, guide §2.5): within-cell pair
+    // work is quadratic in cell occupancy, so (a) a SINGLE cell must
+    // never be one task's whole workload (a maxCell cell is up to
+    // 10k² = 100M pairs — AQE's skew splitter cannot split one key),
+    // and (b) at small cell counts (the replication=nCells exact
+    // arm) the join would otherwise run on ≤ nCells tasks. Each side
+    // gets a deterministic id-hash sub-bucket 0..b-1 and enumerates
+    // the other side's buckets, so every pair lands in EXACTLY ONE
+    // (cell, ba, bb) key — b² keys per cell, per-key work capped at
+    // (|cell|/b)². b is plan-time scale-adaptive: 1 (no replication
+    // cost at all) once nCells covers the cluster parallelism,
+    // up to 16 for tiny quantizers; the repartition pins the
+    // exchange's partition count against byte-based AQE coalescing
+    // (Par.pinned — the LshBlocking discipline).
+    val pinned = Par.pinned(df)
+    val b = math.max(1, math.min(16,
+      math.ceil(math.sqrt(2.0 * pinned / math.max(nCells, 1))).toInt))
+    val bl = lit(b.toLong)
+    val left = ok.select(col("__cell__"), col("__id__").as("id1"),
+        col("__v__").as("v1"), col("__nrm__").as("n1"),
+        pmod(xxhash64(col("__id__")), bl).as("__ba__"))
+      .withColumn("__bb__", explode(sequence(lit(0L), lit((b - 1).toLong))))
+      .repartition(pinned, col("__cell__"), col("__ba__"), col("__bb__"))
+    val right = ok.select(col("__cell__"), col("__id__").as("id2"),
+        col("__v__").as("v2"), col("__nrm__").as("n2"),
+        pmod(xxhash64(col("__id__")), bl).as("__bb__"))
+      .withColumn("__ba__", explode(sequence(lit(0L), lit((b - 1).toLong))))
+      .repartition(pinned, col("__cell__"), col("__ba__"), col("__bb__"))
+    val pairs = left
+      .join(right, Seq("__cell__", "__ba__", "__bb__"))
+      .filter(col("id1") < col("id2"))
+      // score and THRESHOLD-FILTER before the cross-cell pair dedup:
+      // a pair sharing several cells pays the (cheap, codegen'd)
+      // cosine once per shared cell, but only QUALIFYING pairs — a
+      // tiny fraction of the candidates — reach the dedup shuffle.
+      // Deduping first would shuffle every candidate pair still
+      // carrying both dense vectors (~1 KB/row): measured ~4x slower
+      // and memory-unstable at 32 threads
+      .withColumn("cosine",
+        graft.functions.similarityExprs.cosine_sim_pre(
+          col("v1"), col("v2"), col("n1"), col("n2")))
+      .filter(col("cosine") >= threshold)
+      .select(col("id1"), col("id2"), col("cosine"))
+      .dropDuplicates("id1", "id2")
+    // the cap drops non-discriminative cells — a legitimate skew
+    // trade for SOME cells, a silent wrong answer when it hits ALL
+    // of them (an under-sized quantizer on a grown corpus returns
+    // zero pairs while looking healthy — measured at 26x scale:
+    // every cell past maxCell, 676M candidate pairs shed, 0 rows).
+    // That configuration fails loudly instead.
+    Materialize.guardedPairs(pairs, Seq(indexed), cellCounts, counters) { health =>
+      val cells = health.getAs[Long]("groups")
+      val capped = health.getAs[Long]("capped")
+      if (cells > 0 && health.getAs[Long]("pairable") == 0 && capped > 0)
+        throw new IllegalStateException(
+          s"semanticNearDups: every populated cell exceeds maxCell=$maxCell " +
+            s"($capped of $cells cells capped) — the " +
+            s"quantizer is under-sized for this corpus at nCells=$nCells; raise " +
+            "nCells (or use semanticNearDups, which sizes it to the corpus)")
+    }
   }
 
   /** Cells the driver-sample quantizer can honestly train: the sample

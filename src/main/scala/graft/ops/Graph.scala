@@ -19,8 +19,10 @@ import org.apache.spark.sql.functions._
   *
   * Per round the edge set is localCheckpoint'ed: iterative plans
   * otherwise double in depth every round and re-run the whole history
-  * at each action. Trade (same as [[LshBlocking.candidatePairs]]):
-  * checkpointed rounds forfeit lineage recompute on executor loss.
+  * at each action. Trade: checkpointed rounds forfeit lineage recompute
+  * on executor loss (the one truncation [[Materialize]] allows). The
+  * normalized edges and the node set are materialized with their
+  * lineage kept.
   */
 object Graph {
 
@@ -46,27 +48,25 @@ object Graph {
 
     // normalize: distinct undirected edges, self-loops dropped, kept as
     // (larger, smaller) so the first small-star sees every edge
-    var e = edges
+    var e = Materialize.eager(edges
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
 
     // the original node set — the star graphs at convergence drop
     // fully-isolated roots' edges (and the normalize above drops
     // self-loops), but every node must appear in the output.
-    // Checkpointed immediately: it is read up to three times (path
+    // Materialized immediately: it is read up to three times (path
     // guard, driver collect / distributed final join), and each read
     // would otherwise re-execute the caller's whole edge pipeline.
     // (With the `e` normalize above, an unmaterialized `edges` input is
     // thus executed exactly twice.) Its size is observed as
     // graft.cc.nodes.
-    val nodes = Occupancy.counted(edges
+    val nodes = Materialize.eager(Occupancy.counted(edges
         .select(explode(array(col(srcCol).cast("long"), col(dstCol).cast("long"))).as("node"))
         .filter(col("node").isNotNull)
-        .distinct(), "graft.cc.nodes")
-      .localCheckpoint(true)
+        .distinct(), "graft.cc.nodes"))
 
     val spark = edges.sparkSession
     val nEdges = e.count()
@@ -198,7 +198,9 @@ object Graph {
     var it = 0
     while (!converged && it < maxIter) {
       // each round's edge count is observed as graft.cc.round.<i>; the
-      // driver union-find path above runs no round
+      // driver union-find path above runs no round. Truncated, not
+      // Materialize.eager: each round is computed from the last, so a
+      // kept lineage would grow by one round per iteration, up to maxIter
       val next = Occupancy.counted(smallStar(largeStar(e)), s"graft.cc.round.${it + 1}")
         .localCheckpoint(true)
       val nfp = fingerprint(next)

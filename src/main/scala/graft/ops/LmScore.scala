@@ -44,8 +44,7 @@ object LmScore {
     // table collect) — cache so the reference corpus is tokenized and
     // aggregated once, not twice
     val uniCounts = countsOf(1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped(uniCounts) {
       val Array(totalTokens, vocabSize) = uniCounts
         .agg(coalesce(sum("__c"), lit(0L)), count(lit(1)))
         .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray
@@ -67,7 +66,7 @@ object LmScore {
       val (u3, c3) = collectSorted(countsOf(3), "trigram")
       df.sparkSession.sparkContext.broadcast(
         LmModel(u1, c1, u2, c2, u3, c3, totalTokens, vocabSize, alpha))
-    } finally uniCounts.unpersist(false)
+    }
   }
 
   /** Persist a trained model as one small parquet table — a real

@@ -20,14 +20,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   *  - the caller's cheap per-pair `screen` (signature agreement /
   *    hamming / cosine) runs BEFORE the cross-band pair dedup, so the
   *    dedup shuffle moves only surviving candidates.
-  *  - the result is materialized internally (localCheckpoint) and every
-  *    cached intermediate is unpersisted before returning: repeated
-  *    downstream references read the materialized candidates instead of
-  *    re-running the signature pipeline, and long-lived sessions don't
-  *    accumulate leaked blocks. Trade: the candidate set (bounded by
-  *    screen + bucket cap) forfeits lineage recompute — executor loss
-  *    fails the query instead of recomputing; acceptable for a frame
-  *    orders of magnitude smaller than the corpus.
+  *  - the result is materialized internally ([[Materialize.eager]],
+  *    lineage kept) and every cached intermediate is unpersisted before
+  *    returning: repeated downstream references read the materialized
+  *    candidates instead of re-running the signature pipeline, and
+  *    long-lived sessions don't accumulate leaked blocks.
   */
 object LshBlocking {
 
@@ -49,7 +46,8 @@ object LshBlocking {
     * Generates within-bucket pairs (id1, id2, p1, p2) with id1 < id2,
     * applies `screen` (which must keep id1/id2 and filter/project the
     * rest), dedups pairs across bands, and returns the MATERIALIZED
-    * result (no live cache entries remain).
+    * result (no live cache entries remain). `df` is persisted for the
+    * call.
     */
   def candidatePairs(
       df: DataFrame, bands: Int, rowsPerBand: Int,
@@ -60,16 +58,15 @@ object LshBlocking {
       s"saturationMassFraction must be in [0, 1], got $saturationMassFraction")
     val carry = payload.getOrElse("__sig__")
 
-    // Persist the INPUT (id, signature[, payload]) rather than the
-    // banded frame: the banding projection references __sig__ once per
+    // Persist the INPUT (id, signature[, payload]; guardedPairs'
+    // scratch below) rather than the banded frame: the banding projection references __sig__ once per
     // band slice plus the payload, and CollapseProject would inline the
     // (expensive) signature pipeline into every use — computing each
     // signature bands+1 times per row. The cache is a materialization
     // barrier, so signatures compute exactly once; re-deriving the
     // cheap explode/slice/hash from cache for the bucket-size aggregate
-    // and both self-join sides costs almost nothing. Unpersisted below.
-    val sigs = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
+    // and both self-join sides costs almost nothing.
+    //
     // No forced (band, bucket) repartition here — measured in r21 and
     // deleted in r22: every caller's signature frame already carries
     // spreadByKey's pinned keyed layout through the persisted cache,
@@ -77,7 +74,7 @@ object LshBlocking {
     // forced one cost +8-30% across the minhash/simhash family (+20%
     // on the sign-LSH screens) for no gain. At cluster scale the
     // planner plans the same SMJ exchanges itself, AQE-sized.
-    val banded = bandRows(sigs, bands, rowsPerBand, carry)
+    val banded = bandRows(df, bands, rowsPerBand, carry)
 
     // Bucket occupancy is computed ONCE and persisted — it feeds both
     // the all-capped guard below and the goodBuckets join side (the
@@ -89,86 +86,64 @@ object LshBlocking {
     val bucketCounts = Occupancy.observed(
         banded.groupBy("band", "bucket").agg(count(lit(1)).as("__n__")),
         "graft.lsh.buckets", counters)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val goodBuckets = bucketCounts
-        .filter(col("__n__").between(2, maxBucket))
-        .select("band", "bucket")
+    val goodBuckets = bucketCounts
+      .filter(col("__n__").between(2, maxBucket))
+      .select("band", "bucket")
 
-      val filtered = banded.join(goodBuckets, Seq("band", "bucket"), "left_semi")
+    val filtered = banded.join(goodBuckets, Seq("band", "bucket"), "left_semi")
 
-      val raw = filtered
-        .select(col("band"), col("bucket"), col("__id__").as("id1"), col("__p__").as("p1"))
-        .join(
-          filtered.select(col("band"), col("bucket"), col("__id__").as("id2"), col("__p__").as("p2")),
-          Seq("band", "bucket"))
-        .filter(col("id1") < col("id2"))
-        .select(col("id1"), col("id2"), col("p1"), col("p2"))
+    val raw = filtered
+      .select(col("band"), col("bucket"), col("__id__").as("id1"), col("__p__").as("p1"))
+      .join(
+        filtered.select(col("band"), col("bucket"), col("__id__").as("id2"), col("__p__").as("p2")),
+        Seq("band", "bucket"))
+      .filter(col("id1") < col("id2"))
+      .select(col("id1"), col("id2"), col("p1"), col("p2"))
 
-      val result = Occupancy.counted(screen(raw).dropDuplicates("id1", "id2"),
-          "graft.lsh.pairs")
-        .localCheckpoint(true)
-
-      // ALL-capped guard (the semantic family's under-sized-quantizer
-      // discipline, r15): when every multi-member (band, bucket)
-      // exceeds maxBucket, the op would emit ZERO pairs — for a corpus
-      // that may be wall-to-wall duplicates, the worst possible silent
-      // answer (BENCH_SCALE_r15 measured exactly this: 4-bit bands at
-      // 20k+ vectors → 64/64 buckets capped, 0 pairs). Fail loudly —
-      // but only when the capped buckets hold most of the BANDING MASS
-      // (signature rows), i.e. the saturation is corpus-wide (the
-      // under-sized-banding shape: every doc lands in a capped bucket
-      // in every band). A mostly-unique corpus with a few mega-dup
-      // islands shows the same (capped > 0, pairable == 0) counts with
-      // a small capped mass — skipping those islands is the designed
-      // per-bucket skew bound, so the op warns and proceeds to the
-      // empty pair set instead of crashing (r15 ADVICE refinement).
-      // KNOWN BLIND SPOT of the 50% mass split: a corpus of genuine
-      // near-dups whose banding rows are under half the mass (dup
-      // islands in a large unique tail) warns instead of failing —
-      // the cost of not crashing every mostly-unique corpus; raise
-      // maxBucket when mega-dup islands should pair, or set
-      // saturationMassFraction = 0 to restore the strict fail-loud
-      // guard (any all-capped shape throws).
-      //
-      // Ordering (r21, guide §1.2): the guard can only FIRE when the
-      // pair set is empty (pairable == 0 ⇒ goodBuckets is empty ⇒ the
-      // join emits nothing), so it now runs AFTER the materialization
-      // and ONLY on an empty result. The old guard-first order paid
-      // the whole banding pipeline once for the guard's head() and
-      // again for the checkpoint; this order computes the banding
-      // exactly once, and the non-empty (common) path replaces the
-      // occupancy job with one take(1) on the checkpointed result.
-      // The saturation exception is unchanged — it just surfaces
-      // after the (empty, therefore cheap) materialization.
-      if (result.isEmpty) {
-        val occ = Occupancy.exact(bucketCounts, counters)
-        val pairableBuckets = occ.getAs[Long]("pairable")
-        val cappedBuckets = occ.getAs[Long]("capped")
-        val cappedMass = occ.getAs[Long]("capped_rows")
-        val mass = occ.getAs[Long]("rows")
-        if (cappedBuckets > 0 && pairableBuckets == 0) {
-          if (cappedMass >= saturationMassFraction * mass)
-            throw new IllegalStateException(
-              s"lsh blocking: all $cappedBuckets occupied multi-member buckets " +
-                s"exceed maxBucket=$maxBucket and hold $cappedMass of $mass " +
-                "banding rows — the banding is too coarse for this corpus " +
-                "and zero pairs would be emitted. Widen the bands (more rows " +
-                "per band; see VectorOps.lshPlan) or raise maxBucket.")
-          else
-            log.warn(
-              s"lsh blocking: the only multi-member buckets ($cappedBuckets) " +
-                s"all exceed maxBucket=$maxBucket, but they hold just " +
-                s"$cappedMass of $mass banding rows — isolated mega-dup " +
-                "islands in an otherwise-unique corpus are being skipped by " +
-                "the bucket cap; emitting the empty pair set.")
-        }
+    // ALL-capped guard (the semantic family's under-sized-quantizer
+    // discipline, r15): when every multi-member (band, bucket)
+    // exceeds maxBucket, the op would emit ZERO pairs — for a corpus
+    // that may be wall-to-wall duplicates, the worst possible silent
+    // answer (BENCH_SCALE_r15 measured exactly this: 4-bit bands at
+    // 20k+ vectors → 64/64 buckets capped, 0 pairs). Fail loudly —
+    // but only when the capped buckets hold most of the BANDING MASS
+    // (signature rows), i.e. the saturation is corpus-wide (the
+    // under-sized-banding shape: every doc lands in a capped bucket
+    // in every band). A mostly-unique corpus with a few mega-dup
+    // islands shows the same (capped > 0, pairable == 0) counts with
+    // a small capped mass — skipping those islands is the designed
+    // per-bucket skew bound, so the op warns and proceeds to the
+    // empty pair set instead of crashing (r15 ADVICE refinement).
+    // KNOWN BLIND SPOT of the 50% mass split: a corpus of genuine
+    // near-dups whose banding rows are under half the mass (dup
+    // islands in a large unique tail) warns instead of failing —
+    // the cost of not crashing every mostly-unique corpus; raise
+    // maxBucket when mega-dup islands should pair, or set
+    // saturationMassFraction = 0 to restore the strict fail-loud
+    // guard (any all-capped shape throws).
+    Materialize.guardedPairs(
+        Occupancy.counted(screen(raw).dropDuplicates("id1", "id2"), "graft.lsh.pairs"),
+        Seq(df, bucketCounts), bucketCounts, counters) { occ =>
+      val pairableBuckets = occ.getAs[Long]("pairable")
+      val cappedBuckets = occ.getAs[Long]("capped")
+      val cappedMass = occ.getAs[Long]("capped_rows")
+      val mass = occ.getAs[Long]("rows")
+      if (cappedBuckets > 0 && pairableBuckets == 0) {
+        if (cappedMass >= saturationMassFraction * mass)
+          throw new IllegalStateException(
+            s"lsh blocking: all $cappedBuckets occupied multi-member buckets " +
+              s"exceed maxBucket=$maxBucket and hold $cappedMass of $mass " +
+              "banding rows — the banding is too coarse for this corpus " +
+              "and zero pairs would be emitted. Widen the bands (more rows " +
+              "per band; see VectorOps.lshPlan) or raise maxBucket.")
+        else
+          log.warn(
+            s"lsh blocking: the only multi-member buckets ($cappedBuckets) " +
+              s"all exceed maxBucket=$maxBucket, but they hold just " +
+              s"$cappedMass of $mass banding rows — isolated mega-dup " +
+              "islands in an otherwise-unique corpus are being skipped by " +
+              "the bucket cap; emitting the empty pair set.")
       }
-      result
-    } finally {
-      // even when the guard/screen/checkpoint throws
-      bucketCounts.unpersist(false)
-      sigs.unpersist(false)
     }
   }
 
@@ -187,74 +162,54 @@ object LshBlocking {
       maxBucket: Int, screen: DataFrame => DataFrame = identity,
       payload: Option[String] = None): DataFrame = {
     val carry = payload.getOrElse("__sig__")
-    val sa = a.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sb = b.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // no forced (band, bucket) repartition — see [[candidatePairs]]:
-      // both sides inherit their signature frames' pinned spread
-      val ba = bandRows(sa, bands, rowsPerBand, carry)
-      val bb = bandRows(sb, bands, rowsPerBand, carry)
-      // one aggregate over the tagged union yields both side counts:
-      // total n and b-side count nb (sum of the 0/1 tag) — keep only
-      // buckets with members on BOTH sides, under the combined cap
-      // one PERSISTED occupancy aggregate feeds both the guard and the
-      // good-bucket join side (the candidatePairs fusion discipline —
-      // never pay the banding aggregate twice); its counters are
-      // observed as graft.lsh_cross.buckets, a bucket forming
-      // (n − nb)·nb pairs
-      val crossSide = col("__nb__") >= 1 && col("__nb__") < col("__n__")
-      val counters = Occupancy.counters(col("__n__"), maxBucket, crossSide,
-        (col("__n__") - col("__nb__")) * col("__nb__"))
-      val tagged = Occupancy.observed(
-          ba.withColumn("__s__", lit(0))
-            .unionByName(bb.withColumn("__s__", lit(1)))
-            .groupBy("band", "bucket")
-            .agg(count(lit(1)).as("__n__"), sum(col("__s__")).as("__nb__")),
-          "graft.lsh_cross.buckets",
-          counters :+ coalesce(sum(col("__nb__")), lit(0L)).as("b_rows"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val good = tagged
-        .filter(crossSide && col("__n__") <= maxBucket)
-        .select("band", "bucket")
-      val raw = ba.join(good, Seq("band", "bucket"), "left_semi")
-        .select(col("band"), col("bucket"), col("__id__").as("id1"), col("__p__").as("p1"))
-        .join(
-          bb.join(good, Seq("band", "bucket"), "left_semi")
-            .select(col("band"), col("bucket"), col("__id__").as("id2"), col("__p__").as("p2")),
-          Seq("band", "bucket"))
-        .select(col("id1"), col("id2"), col("p1"), col("p2"))
-      try {
-        val result = Occupancy.counted(screen(raw).dropDuplicates("id1", "id2"),
-            "graft.lsh_cross.pairs")
-          .localCheckpoint(true)
-        // the candidatePairs all-capped guard, cross form: only buckets
-        // with members on BOTH sides can pair, so only those count —
-        // when every such bucket exceeds the cap, the op would report
-        // ZERO overlap for a crawl that may be wall-to-wall copies of
-        // the reference. Fail loudly; single-side buckets (no pairs
-        // possible regardless) and mixed bandings pass through.
-        // Guard runs AFTER the materialization and only on an empty
-        // result (it can only fire when pairable == 0 ⇒ good is empty
-        // ⇒ the join emitted nothing) — see candidatePairs on why:
-        // one banding pass instead of two, and the common non-empty
-        // path pays one take(1) instead of the occupancy job.
-        if (result.isEmpty) {
-          val occ = Occupancy.exact(tagged, counters)
-          val pairableBuckets = occ.getAs[Long]("pairable")
-          val cappedBuckets = occ.getAs[Long]("capped")
-          if (cappedBuckets > 0 && pairableBuckets == 0)
-            throw new IllegalStateException(
-              s"lsh cross blocking: all $cappedBuckets cross-side buckets " +
-                s"exceed maxBucket=$maxBucket — the banding is too coarse for " +
-                "these corpora and zero overlap would be reported. Widen the " +
-                "bands (more rows per band; see VectorOps.lshPlan) or raise " +
-                "maxBucket.")
-        }
-        result
-      } finally tagged.unpersist(false)
-    } finally {
-      sa.unpersist(false)
-      sb.unpersist(false)
+    // no forced (band, bucket) repartition — see [[candidatePairs]]:
+    // both sides inherit their signature frames' pinned spread
+    val ba = bandRows(a, bands, rowsPerBand, carry)
+    val bb = bandRows(b, bands, rowsPerBand, carry)
+    // one PERSISTED aggregate over the tagged union yields total n and
+    // b-side count nb (sum of the 0/1 tag) and feeds both the guard and
+    // the good-bucket side (buckets with members on BOTH sides, under
+    // the combined cap; the candidatePairs fusion discipline). Its
+    // counters are observed as graft.lsh_cross.buckets, a bucket
+    // forming (n − nb)·nb pairs
+    val crossSide = col("__nb__") >= 1 && col("__nb__") < col("__n__")
+    val counters = Occupancy.counters(col("__n__"), maxBucket, crossSide,
+      (col("__n__") - col("__nb__")) * col("__nb__"))
+    val tagged = Occupancy.observed(
+        ba.withColumn("__s__", lit(0))
+          .unionByName(bb.withColumn("__s__", lit(1)))
+          .groupBy("band", "bucket")
+          .agg(count(lit(1)).as("__n__"), sum(col("__s__")).as("__nb__")),
+        "graft.lsh_cross.buckets",
+        counters :+ coalesce(sum(col("__nb__")), lit(0L)).as("b_rows"))
+    val good = tagged
+      .filter(crossSide && col("__n__") <= maxBucket)
+      .select("band", "bucket")
+    val raw = ba.join(good, Seq("band", "bucket"), "left_semi")
+      .select(col("band"), col("bucket"), col("__id__").as("id1"), col("__p__").as("p1"))
+      .join(
+        bb.join(good, Seq("band", "bucket"), "left_semi")
+          .select(col("band"), col("bucket"), col("__id__").as("id2"), col("__p__").as("p2")),
+        Seq("band", "bucket"))
+      .select(col("id1"), col("id2"), col("p1"), col("p2"))
+    // the candidatePairs all-capped guard, cross form: only buckets
+    // with members on BOTH sides can pair, so only those count —
+    // when every such bucket exceeds the cap, the op would report
+    // ZERO overlap for a crawl that may be wall-to-wall copies of
+    // the reference. Fail loudly; single-side buckets (no pairs
+    // possible regardless) and mixed bandings pass through.
+    Materialize.guardedPairs(
+        Occupancy.counted(screen(raw).dropDuplicates("id1", "id2"), "graft.lsh_cross.pairs"),
+        Seq(a, b, tagged), tagged, counters) { occ =>
+      val pairableBuckets = occ.getAs[Long]("pairable")
+      val cappedBuckets = occ.getAs[Long]("capped")
+      if (cappedBuckets > 0 && pairableBuckets == 0)
+        throw new IllegalStateException(
+          s"lsh cross blocking: all $cappedBuckets cross-side buckets " +
+            s"exceed maxBucket=$maxBucket — the banding is too coarse for " +
+            "these corpora and zero overlap would be reported. Widen the " +
+            "bands (more rows per band; see VectorOps.lshPlan) or raise " +
+            "maxBucket.")
     }
   }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * the counters come from the execution that does the work and cost no
   * job; each all-capped guard reads `pairable`, `capped`, `capped_rows`
   * and `rows` from the same expressions in an exact re-aggregate of its
-  * own (an accumulator may count a re-executed stage twice).
+  * own (an accumulator may count a re-executed stage twice; Spark's
+  * `Block … already exists` warning is not one, see [[Materialize]]).
   *
   * Read the counters with a `QueryExecutionListener` from
   * `qe.observedMetrics` (the `Pipeline.go` pattern). A cached count

@@ -302,22 +302,22 @@ object VectorOps {
     * The planning count and the signature pass would otherwise each
     * execute the upstream plan in full, so the input — pruned to the
     * ONLY two columns this op reads (id + vector; never the corpus
-    * text) — is persisted across both and unpersisted once
-    * [[LshBlocking.candidatePairs]] has materialized the (small)
-    * candidate set internally. One upstream execution total. */
+    * text) — is persisted across both ([[Materialize.scoped]]) and
+    * released once [[LshBlocking.candidatePairs]] has materialized the
+    * (small) candidate set internally. One upstream execution total; a
+    * lost candidate block is recomputed through the upstream again. */
   def lshNeighborsAuto(
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.7, targetBucket: Int = 64,
       recall: Double = 0.9, maxBands: Int = 50,
       maxBucket: Int = 200, seed: Long = 42L): DataFrame = {
     val pinned = df.select(col(idCol), col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped(pinned) {
       val n = pinned.filter(col(vecCol).isNotNull).count()
       val (nPlanes, rowsPerBand) =
         lshPlan(n, threshold, targetBucket, recall, maxBands)
       lshNeighbors(pinned, idCol, vecCol, nPlanes, rowsPerBand, threshold,
         maxBucket, seed)
-    } finally pinned.unpersist(blocking = false)
+    }
   }
 }

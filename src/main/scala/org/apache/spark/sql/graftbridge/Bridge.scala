@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.types.{AbstractDataType, DataType, StructType}
 
 /** Column <-> Expression bridge for graft's native Catalyst expressions.
@@ -24,7 +25,8 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType, StructType}
   * test`, not in production. When bumping Spark: re-run BridgeSpec,
   * re-check `ExpressionUtils.{expression,column}`, `classic.Dataset.ofRows`,
   * `classic.SparkSession#internalCreateDataFrame`,
-  * `classic.Dataset#queryExecution`, and `Observation.getOrEmpty` still
+  * `classic.Dataset#queryExecution`, `LogicalRDD.fromDataset`,
+  * `SQLExecution.withNewExecutionId`, and `Observation.getOrEmpty` still
   * exist with these signatures, then update [[TestedSparkVersion]].
   */
 object Bridge {
@@ -78,6 +80,22 @@ object Bridge {
       schema: StructType): DataFrame = checked(
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema))
+
+  /** A DataFrame over the RDD `keep` makes of `df`'s executed rows
+    * (copied, so they may be kept), run as one SQL execution named
+    * `name` that listeners see: 4.1's `Dataset.checkpoint` (`withAction`,
+    * `LogicalRDD.fromDataset`) with `localCheckpoint()` left to `keep`. */
+  def keptRows(df: DataFrame, name: String)(
+      keep: RDD[InternalRow] => RDD[InternalRow]): DataFrame = checked {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      qe.executedPlan.resetMetrics()
+      val rdd = keep(qe.toRdd.map(_.copy()))
+      org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+        LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+    }
+  }
 
   /** Blocks until every listener event posted so far has reached its
     * listeners (`LiveListenerBus.waitUntilEmpty` is private[spark]), so

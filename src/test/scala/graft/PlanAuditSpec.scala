@@ -485,7 +485,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("cross-corpus and semantic dedup never enumerate pairs outside buckets/cells") {
     // both ops materialize their candidate set internally
-    // (localCheckpoint), which hides the banding / cell joins from the
+    // (Materialize.eager), which hides the banding / cell joins from the
     // returned frame's executed plan — so capture EVERY execution
     // during the calls via a listener and audit the union
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -1032,4 +1032,22 @@ class PipelineSpec extends AnyFunSuite {
     assert(a != b, s"expected differing segment times, got a=$a b=$b (${stat.stepTimings})")
     assert(stat.stepTimings.contains(s"save($dir/out)"))
   }
+
+  test("go() releases its caches when a rejection handler's sink throws") {
+    spark.catalog.clearCache()
+    val failing = new graft.sinks.Sink {
+      def name = "failing"
+      def write(df: DataFrame): Map[String, String] =
+        throw new java.io.IOException("sink unavailable")
+    }
+    // the branch makes go() persist the source; the handler persists
+    // the rejections and throws from inside its scope
+    val err = intercept[java.io.IOException](Pipeline.of(people)
+      .filter(col("gender") === "male")
+      .branch(p => p.filter(col("id") > 1))
+      .onRejection(rej => failing.write(rej))
+      .go())
+    assert(err.getMessage == "sink unavailable")
+    assert(spark.sharedState.cacheManager.isEmpty, "go() left a cached frame behind")
+  }
 }

@@ -93,8 +93,8 @@ class LshPlanSpec extends AnyFunSuite {
     // DOUBLED the dominant cost. An accumulator-counting identity UDF
     // on the vector column observes every upstream execution: the
     // count must equal the row count, not 2x it. (The result is
-    // consumed too — candidatePairs localCheckpoints, so downstream
-    // reads cannot re-trigger the upstream either.)
+    // consumed too — candidatePairs materializes its pairs, so
+    // downstream reads cannot re-trigger the upstream either.)
     val acc = spark.sparkContext.longAccumulator("upstream-rows")
     val observed = udf { (v: Seq[Double]) => acc.add(1L); v }
     val base = planted(200)

@@ -60,6 +60,28 @@ class BridgeSpec extends AnyFunSuite {
     assert(df.filter($"n" > 1).collect().map(_.getString(1)).toSeq == Seq("v2"))
   }
 
+  test("keptRows runs one named execution and keeps the RDD it is given") {
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        names.add(funcName)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val df = Seq((1, "a"), (2, "b"), (3, "c")).toDF("n", "s").filter($"n" > 1)
+    spark.listenerManager.register(listener)
+    val kept = try {
+      val out = Bridge.keptRows(df, "bridge-kept")(_.coalesce(1))
+      Bridge.drainListeners(spark)
+      out
+    } finally spark.listenerManager.unregister(listener)
+    assert(names.toArray.toSeq == Seq("bridge-kept"))
+    assert(kept.schema == df.schema)
+    assert(kept.rdd.getNumPartitions == 1)
+    assert(kept.collect().map(_.getString(1)).toSeq == Seq("b", "c"))
+  }
+
   test("drainListeners returns once a listener has seen the actions before it") {
     val seen = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
